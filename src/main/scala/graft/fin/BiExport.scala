@@ -2,7 +2,6 @@ package graft.fin
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.sources.Io
 
 /** Flat BI export + data dictionary (SURVEY.md §3.3; reference:
@@ -22,35 +21,16 @@ object BiExport {
       outDirBase: String,
       monthArg: Option[String] = None): BiResult = {
 
-    val fact = Io.readParquetOrEmpty(spark, s"$curatedDir/fact_transactions.parquet",
-      StructType(Schemas.factColumns.map(StructField(_, StringType))))
-    val dimAccounts = Io.readParquetOrEmpty(spark, s"$curatedDir/dim_accounts.parquet",
-      Schemas.chartOfAccounts)
-    val kpi0 = Io.readParquetOrEmpty(spark, s"$curatedDir/kpi_monthly.parquet",
-      StructType(Seq(StructField("entity", StringType), StructField("month", StringType))))
-    val dqEx = Io.readCsvOrEmpty(spark, s"$curatedDir/dq_exceptions.csv", Schemas.dqExceptions)
-    val dqSum = Io.readCsvOrEmpty(spark, s"$curatedDir/dq_summary.csv", StructType(Seq(
-      StructField("dataset", StringType), StructField("error_count", LongType),
-      StructField("warn_count", LongType), StructField("issue_count", LongType),
-      StructField("status", StringType))))
-
-    val kpi =
-      if (kpi0.columns.contains("month"))
-        kpi0.withColumn("month", StarExport.monthStr(col("month"), kpi0.schema("month").dataType))
-      else kpi0
-
-    val month = monthArg.orElse(StarExport.inferMonth(kpi)).getOrElse(
-      throw new IllegalArgumentException("Could not infer month. Provide month=YYYY-MM."))
+    val cur = CuratedMonth.read(spark, curatedDir, monthArg)
+    val month = cur.month
     val outDir = s"$outDirBase/$month"
 
     // fact filtered to month + constant month col (reference: :86-88)
-    val dateCol = Io.pickCol(fact, StarExport.DateColCandidates)
-    val factM = StarExport.filterToMonthByDate(fact, dateCol, month)
-      .withColumn("month", lit(month))
+    val factM = cur.factM.withColumn("month", lit(month))
 
     // KPI: margins, month filter, stable column order (reference: :91-102)
     val kpiM = {
-      val enriched = Transform.addMarginCols(kpi)
+      val enriched = Transform.addMarginCols(cur.kpi)
       val filtered =
         if (enriched.columns.contains("month")) enriched.filter(col("month") === lit(month))
         else enriched
@@ -60,20 +40,20 @@ object BiExport {
     }
 
     Io.writeCsv(factM, s"$outDir/fact_transactions.csv")
-    Io.writeCsv(dimAccounts.orderBy("account_code"), s"$outDir/dim_accounts.csv")
+    Io.writeCsv(cur.dimAccounts.orderBy("account_code"), s"$outDir/dim_accounts.csv")
     Io.writeCsv(kpiM.orderBy("entity", "month"), s"$outDir/kpi_monthly.csv")
-    Io.writeCsv(dqSum, s"$outDir/dq_summary.csv")
-    Io.writeCsv(dqEx, s"$outDir/dq_exceptions.csv")
+    Io.writeCsv(cur.dqSummary, s"$outDir/dq_summary.csv")
+    Io.writeCsv(cur.dqExceptions, s"$outDir/dq_exceptions.csv")
 
     // data dictionary (reference: :111-119)
     def cols(df: DataFrame) = df.columns.mkString("['", "', '", "']")
     val dd = Seq(
       s"month=$month",
       s"fact_transactions.csv columns=${cols(factM)}",
-      s"dim_accounts.csv columns=${cols(dimAccounts)}",
+      s"dim_accounts.csv columns=${cols(cur.dimAccounts)}",
       s"kpi_monthly.csv columns=${cols(kpiM)}",
-      s"dq_summary.csv columns=${cols(dqSum)}",
-      s"dq_exceptions.csv columns=${cols(dqEx)}").mkString("\n")
+      s"dq_summary.csv columns=${cols(cur.dqSummary)}",
+      s"dq_exceptions.csv columns=${cols(cur.dqExceptions)}").mkString("\n")
     Io.writeText(spark, s"$outDir/data_dictionary.txt", dd)
 
     BiResult(outDir, month)

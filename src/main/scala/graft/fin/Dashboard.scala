@@ -2,7 +2,6 @@ package graft.fin
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.sources.Io
 
 /** Dashboard data aggregates + static HTML report (SURVEY.md §3.3;
@@ -78,33 +77,14 @@ object Dashboard {
       outHtml: String,
       monthArg: Option[String] = None): DashResult = {
 
-    val fact = Io.readParquetOrEmpty(spark, s"$curatedDir/fact_transactions.parquet",
-      StructType(Schemas.factColumns.map(StructField(_, StringType))))
-    val dim = Io.readParquetOrEmpty(spark, s"$curatedDir/dim_accounts.parquet",
-      Schemas.chartOfAccounts)
-    val kpi0 = Io.readParquetOrEmpty(spark, s"$curatedDir/kpi_monthly.parquet",
-      StructType(Seq(StructField("entity", StringType), StructField("month", StringType))))
-    val dqEx = Io.readCsvOrEmpty(spark, s"$curatedDir/dq_exceptions.csv", Schemas.dqExceptions)
-    val dqSum = Io.readCsvOrEmpty(spark, s"$curatedDir/dq_summary.csv", StructType(Seq(
-      StructField("dataset", StringType), StructField("error_count", LongType),
-      StructField("warn_count", LongType), StructField("issue_count", LongType),
-      StructField("status", StringType))))
-
-    val kpi = Transform.addMarginCols(
-      if (kpi0.columns.contains("month"))
-        kpi0.withColumn("month", StarExport.monthStr(col("month"), kpi0.schema("month").dataType))
-      else kpi0)
-
-    val month = monthArg.orElse(StarExport.inferMonth(kpi)).getOrElse(
-      throw new IllegalArgumentException("Could not infer month. Provide month=YYYY-MM."))
-
-    val dateCol = Io.pickCol(fact, StarExport.DateColCandidates)
-    val factM = StarExport.filterToMonthByDate(fact, dateCol, month)
+    val cur = CuratedMonth.read(spark, curatedDir, monthArg)
+    val month = cur.month
+    val kpi = Transform.addMarginCols(cur.kpi)
 
     // each series feeds the charts, the HTML tables AND the CSVs — persist
     // the (display-sized) results so the aggregations run once, not thrice
     val trend = kpiTrend(kpi).persist()
-    val topExpense = topExpenseAccounts(factM, dim).persist()
+    val topExpense = topExpenseAccounts(cur.factM, cur.dimAccounts).persist()
 
     // chart rendering (reference: build_dashboard.py:96-122 px.line ×2,
     // :162-166 px.bar) — same figures, inline SVG instead of plotly JS
@@ -145,9 +125,9 @@ object Dashboard {
          |$expChart
          |${htmlTable(topExpense)}
          |<h2>DQ summary</h2>
-         |${htmlTable(dqSum)}
+         |${htmlTable(cur.dqSummary)}
          |<h2>DQ exceptions (first 200)</h2>
-         |${htmlTable(dqEx.orderBy("dataset", "column", "check", "failure_case"))}
+         |${htmlTable(cur.dqExceptions.orderBy("dataset", "column", "check", "failure_case"))}
          |</body></html>""".stripMargin
 
     Io.writeText(spark, outHtml, html)

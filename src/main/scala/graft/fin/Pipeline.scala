@@ -7,10 +7,13 @@ import graft.sources.Io
 /** The monthly-close pipeline — `runMonth`
   * (reference: src/finance_etl/pipeline.py:50-191; lifecycle SURVEY.md §3.1).
   *
-  * Steps 2-10 of the reference DAG become lazy Catalyst plans with exactly two
+  * Steps 2-10 of the reference DAG become lazy Catalyst plans with two
   * deliberate barriers: the DQ gate (exceptions must materialize before the
   * pipeline may proceed — pipeline.py:129-162) and the final writes. The gate
   * aggregates severity counts on the executors and collects only two longs.
+  * Other jobs run before the writes too: the row index of the DQ copies
+  * collects per-split row counts (one job per raw dataset, five in all),
+  * and `Transform.addFxAmountBase` collects its missing-rate sample.
   */
 object Pipeline {
 
@@ -44,44 +47,14 @@ object Pipeline {
     val dimAccounts = Transform.buildDimAccounts(coa)
     val coaCodes = dimAccounts.select("account_code").distinct()
 
-    // one all-string read per dataset; the typed frame is DERIVED from it
+    // one all-string read per dataset; each typed frame is DERIVED from it
     // via try_cast (S1; pipeline.py:78-101) so the DQ dtype check and the
     // pipeline see the exact same coercion — see Io.typedFromRaw
-    // one all-string read per dataset. The DQ layer gets an INDEXED copy
-    // (pandas-like row index via zipWithIndex, so exceptions report which
-    // row failed); the fact build gets the clean typed view — the RDD
-    // round-trip that indexing requires must not sit as an optimization
-    // barrier under the whole fact plan
-    def reads(name: String) = {
-      val raw = Io.readCsvRaw(spark, s"$rawDir/$name.csv")
-      val rawIdx = Quality.withRowIndex(raw)
-      val contract = Schemas.rawContracts(name)
-      (Io.typedFromRaw(raw, contract), Io.typedFromRaw(rawIdx, contract), rawIdx)
-    }
-    val (sales, salesDq, salesRaw) = reads("sales")
-    val (expenses, expensesDq, expensesRaw) = reads("expenses")
-    val (payroll, payrollDq, payrollRaw) = reads("payroll")
-    val (inventory, inventoryDq, inventoryRaw) = reads("inventory_movements")
-    val (fxRates, fxDq, fxRaw) = reads("fx_rates")
+    val raws = Quality.Datasets.map(n => n -> Io.readCsvRaw(spark, s"$rawDir/$n.csv")).toMap
+    def typed(name: String) = Io.typedFromRaw(raws(name), Schemas.rawContracts(name))
+    val exceptions = dqExceptions(spark, settings, raws, coaCodes)
 
-    // validate + collect exceptions (pipeline.py:104-127)
-    val validations = Seq(
-      ("sales", salesDq, salesRaw),
-      ("expenses", expensesDq, expensesRaw),
-      ("payroll", payrollDq, payrollRaw),
-      ("inventory_movements", inventoryDq, inventoryRaw),
-      ("fx_rates", fxDq, fxRaw))
-    val schemaIssues = validations.map { case (name, typed, raw) =>
-      Quality.validateDataset(spark, typed, raw, name, Schemas.rawContracts(name), settings)
-    }
-    val coaIssues = Seq(
-      Quality.accountInCoaExceptions(salesDq, "sales", coaCodes),
-      Quality.accountInCoaExceptions(expensesDq, "expenses", coaCodes))
-
-    val exceptions = Quality.addSeverity(
-      (schemaIssues ++ coaIssues).reduce(_.unionByName(_)))
-
-    // ---- DQ gate: the one mid-pipeline barrier (pipeline.py:129-162) ----
+    // ---- DQ gate: the deliberate mid-pipeline barrier (pipeline.py:129-162) ----
     exceptions.persist()
     val sevCounts = exceptions.groupBy("severity").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -104,12 +77,12 @@ object Pipeline {
     exceptions.unpersist()
 
     // month window (P2/P3; pipeline.py:164-170)
-    val salesM = sales.filter(Transform.monthWindow(col("date"), month))
-    val expensesM = expenses.filter(Transform.monthWindow(col("date"), month))
-    val inventoryM = inventory.filter(Transform.monthWindow(col("date"), month))
-    val payrollM = payroll.filter(col("month") === lit(month))
+    val salesM = typed("sales").filter(Transform.monthWindow(col("date"), month))
+    val expensesM = typed("expenses").filter(Transform.monthWindow(col("date"), month))
+    val inventoryM = typed("inventory_movements").filter(Transform.monthWindow(col("date"), month))
+    val payrollM = typed("payroll").filter(col("month") === lit(month))
 
-    val fx = Transform.fxToBase(fxRates, settings.baseCurrency)
+    val fx = Transform.fxToBase(typed("fx_rates"), settings.baseCurrency)
     val fact = Transform.toFactTransactions(
       salesM, expensesM, payrollM, inventoryM, fx, settings.baseCurrency)
 
@@ -137,6 +110,26 @@ object Pipeline {
     Io.writeParquet(kpi, kpiPath)
 
     RunResult(dqExceptionsPath, dqSummaryPath, factPath, dimPath, kpiPath, overall)
+  }
+
+  /** The month's DQ exceptions with severity (pipeline.py:104-127): every
+    * check of [[Quality.validateDataset]] plus the COA anti-join for sales
+    * and expenses. Each dataset is validated on an INDEXED copy of its raw
+    * read (pandas-like row index, so exceptions report which row failed);
+    * the fact build uses the plain typed view instead, so the RDD
+    * round-trip that indexing requires never sits as an optimization
+    * barrier under the fact plan.
+    */
+  private[fin] def dqExceptions(
+      spark: SparkSession, settings: Settings,
+      raws: Map[String, DataFrame], coaCodes: DataFrame): DataFrame = {
+    val indexed = Quality.Datasets.map(n => n -> Quality.withRowIndex(raws(n))).toMap
+    val schemaIssues = Quality.Datasets.map { n =>
+      Quality.validateDataset(spark, indexed(n), n, Schemas.rawContracts(n), settings)
+    }
+    val coaIssues = Seq("sales", "expenses")
+      .map(n => Quality.accountInCoaExceptions(indexed(n), n, coaCodes))
+    Quality.addSeverity((schemaIssues ++ coaIssues).reduce(_.unionByName(_)))
   }
 
   /** Replace `factRoot/month=M` via temp-and-swap: `write` receives a

@@ -3,17 +3,19 @@ package graft.fin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Io
 
 /** Data-quality framework (SURVEY.md §2.2 P6/P7, §2.4 A5-A7, §2.3 J5).
   *
   * Spark-native re-design of the reference's pandera layer
   * (reference: src/finance_etl/quality.py:16-95 schemas, :98-115 lazy
   * collection, :123-183 severity, :186-249 summary/status). pandera validates
-  * eagerly and collects per-row failure cases; here each check is a `Column`
-  * predicate and the exceptions table is a union of filtered selects over the
-  * same scan — Catalyst merges them into one pass, and nothing about the
-  * design caps the input size (violations stream out as a DataFrame; only the
-  * PASS/FAIL gate aggregates).
+  * lazily, collecting every failing row of every check; here each check is
+  * a `Column` predicate, one select per dataset runs all of its row-level
+  * checks and explodes each row's failures into exception rows, and the
+  * dup-key groups and the COA anti-join add one pass each. Nothing about
+  * the design caps the input size (violations stream out as a DataFrame;
+  * only the PASS/FAIL gate aggregates).
   *
   * Per-row exceptions carry the pandas-like 0-based file row `index`
   * (pandera parity) via [[withRowIndex]]; group/table-level exceptions
@@ -108,7 +110,7 @@ object Quality {
       }.toMap
     }
     val bc = spark.sparkContext.broadcast(offsets)
-    val schema = raw.schema.add(graft.sources.Io.RowIndexCol, LongType, nullable = false)
+    val schema = raw.schema.add(Io.RowIndexCol, LongType, nullable = false)
     val rdd = withMeta.mapPartitions { it =>
       // a partition may pack several splits; per-split counters keep
       // each row's within-split position regardless of packing
@@ -123,126 +125,109 @@ object Quality {
     spark.createDataFrame(rdd, schema)
   }
 
-  /** Empty exceptions frame with the output contract columns. */
-  def emptyExceptions(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.dqExceptions)
+  /** The output contract columns of one exception found in `df`. Per-row
+    * exceptions carry `df`'s row index; group/table-level sources have no
+    * row identity and carry null.
+    */
+  private def exceptionCols(
+      df: DataFrame, dataset: String, column: String, check: String,
+      failureCase: Column, schemaContext: String): Seq[Column] = Seq(
+    lit(dataset).as("dataset"),
+    (if (df.columns.contains(Io.RowIndexCol)) col(Io.RowIndexCol) else lit(null))
+      .cast(LongType).as("index"),
+    lit(column).as("column"),
+    lit(check).as("check"),
+    failureCase.cast(StringType).as("failure_case"),
+    lit(schemaContext).as("schema_context"),
+    lit(null).cast(IntegerType).as("check_number"))
 
   private def exceptionRows(
       df: DataFrame, dataset: String, column: String, check: String,
       failureCase: Column, schemaContext: String = "Column"): DataFrame =
-    df.select(
-      lit(dataset).as("dataset"),
-      // per-row checks carry the failing row's index (pandera parity);
-      // group/table-level sources have no row identity → null
-      (if (df.columns.contains(graft.sources.Io.RowIndexCol))
-        col(graft.sources.Io.RowIndexCol) else lit(null)).cast(LongType).as("index"),
-      lit(column).as("column"),
-      lit(check).as("check"),
-      failureCase.cast(StringType).as("failure_case"),
-      lit(schemaContext).as("schema_context"),
-      lit(null).cast(IntegerType).as("check_number"))
+    df.select(exceptionCols(df, dataset, column, check, failureCase, schemaContext): _*)
 
   /** Validate one dataset: schema strictness, nullability, dtype coercion,
     * value checks, dup-key and table-level identity checks. Returns the
     * exceptions DataFrame (possibly empty; severity added later).
     *
-    * `raw` is the all-string read of the file; `typed` should be the
-    * `Io.typedFromRaw` view of that SAME raw frame (as the pipeline
-    * passes). The dtype check is then exact by construction — a cell is
-    * null in the typed frame iff the very try_cast applied here failed —
-    * so no cell can pass the dtype check yet silently skip the
-    * isNotNull-guarded value checks. A cell non-null raw but null after
-    * cast is a dtype error (pandera `coerce=True`); null raw in a
-    * non-nullable column violates nullability. One scan, no joins, no
-    * row ids.
+    * `raw` is the all-string read of the file, with [[withRowIndex]]'s
+    * index when exceptions should report it. One select projects the typed
+    * view (`Io.typedColumns`) beside the raw strings and runs every
+    * row-level check, so the dtype check is exact by construction: a typed
+    * cell is null iff its try_cast failed, and no cell can pass the dtype
+    * check yet skip the isNotNull-guarded value checks. Non-null raw but
+    * null typed is a dtype error (pandera `coerce=True`); null raw in a
+    * non-nullable column violates nullability.
     */
   def validateDataset(
       spark: SparkSession,
-      typed: DataFrame,
       raw: DataFrame,
       dataset: String,
       contract: StructType,
       settings: Settings): DataFrame = {
 
     val expected = contract.fields.map(_.name).toSeq
-    val actual = raw.columns.toSeq.filterNot(_ == graft.sources.Io.RowIndexCol)
+    val actual = raw.columns.toSeq.filterNot(_ == Io.RowIndexCol)
 
     // strict=True schema shape (reference: quality.py strict schemas):
     // missing required column → ERROR-keyed check name; unknown column → WARN.
-    val missingCols = expected.filterNot(actual.contains).map { c =>
-      exceptionRows(
-        spark.range(1).toDF(), dataset, c, "column_required",
-        lit(c), schemaContext = "DataFrameSchema")
-    }
-    val extraCols = actual.filterNot(expected.contains).map { c =>
-      exceptionRows(
-        spark.range(1).toDF(), dataset, c, "column_in_schema",
-        lit(c), schemaContext = "DataFrameSchema")
+    val shape = expected.filterNot(actual.contains).map(_ -> "column_required") ++
+      actual.filterNot(expected.contains).map(_ -> "column_in_schema")
+    val shapeExceptions = shape.map { case (c, check) =>
+      exceptionRows(spark.range(1).toDF(), dataset, c, check, lit(c), "DataFrameSchema")
     }
 
-    val present = contract.fields.filter(f => actual.contains(f.name))
+    val present = contract.fields.toSeq.filter(f => actual.contains(f.name))
+    def rawCell(c: String) = col(s"__raw_$c")
+    val view = raw.select(Io.typedColumns(raw, contract) ++
+      present.map(f => raw(f.name).as(s"__raw_${f.name}")) ++
+      raw.columns.filter(_ == Io.RowIndexCol).map(col): _*)
+    def failure(violation: Column, column: String, check: String, failureCase: Column,
+                schemaContext: String = "Column"): Column =
+      when(violation, struct(
+        exceptionCols(view, dataset, column, check, failureCase, schemaContext): _*))
 
-    val cellExceptions: Seq[DataFrame] = present.toSeq.flatMap { f =>
-      val rc = raw(f.name)
-      // try_cast: lenient P10 coercion (null on junk) even under ANSI mode
-      val tc = rc.try_cast(f.dataType)
-      val dtypeViolations = exceptionRows(
-        raw.filter(tc.isNull && rc.isNotNull), dataset, f.name,
-        s"dtype('${f.dataType.simpleString}')", rc)
-      val nullViolations =
-        if (f.nullable) None
-        else Some(exceptionRows(
-          raw.filter(rc.isNull), dataset, f.name, "not_nullable", lit(null)))
-      Seq(dtypeViolations) ++ nullViolations
+    // try_cast is lenient P10 coercion (null on junk) even under ANSI mode
+    val cellChecks = present.flatMap { f =>
+      failure(col(f.name).isNull && rawCell(f.name).isNotNull, f.name,
+        s"dtype('${f.dataType.simpleString}')", rawCell(f.name)) +:
+        (if (f.nullable) Nil
+         else Seq(failure(rawCell(f.name).isNull, f.name, "not_nullable", lit(null))))
     }
-
-    // Value checks run on the typed frame (null cells are handled above, so
-    // predicates guard with isNotNull to avoid double-reporting).
-    val valueExceptions = columnChecks(dataset, settings)
-      .filter(c => typed.columns.contains(c.column))
-      .map { c =>
-        exceptionRows(
-          typed.filter(col(c.column).isNotNull && !c.predicate),
-          dataset, c.column, c.name, col(c.column))
-      }
-
-    // Duplicate-key groups (A6): one exception per offending key-group.
-    val dupExceptions = DupKeys.get(dataset).toSeq
-      .filter(_.forall(typed.columns.contains))
-      .map { keys =>
-        val grouped = typed.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
-        exceptionRows(
-          grouped, dataset, keys.mkString(","),
-          s"duplicate_key(${keys.mkString(",")})",
-          concat_ws("|", keys.map(col): _*), schemaContext = "DataFrameSchema")
-      }
-
+    // null cells are reported above, so value checks skip them
+    val valueChecks = columnChecks(dataset, settings).map { c =>
+      failure(col(c.column).isNotNull && !c.predicate, c.column, c.name, col(c.column))
+    }
     // Payroll identity |gross - deductions - net| < 0.01 (A7, quality.py:59-65),
     // reported per offending row.
-    val identityExceptions =
-      if (dataset == "payroll" && Seq("gross", "deductions", "net").forall(typed.columns.contains))
-        Seq(exceptionRows(
-          typed.filter(abs(col("gross") - col("deductions") - col("net")) >= 0.01),
-          dataset, "net", "payroll_identity", col("net"),
-          schemaContext = "DataFrameSchema"))
-      else Nil
+    val identityCheck =
+      if (dataset != "payroll") Nil
+      else Seq(failure(abs(col("gross") - col("deductions") - col("net")) >= 0.01,
+        "net", "payroll_identity", col("net"), "DataFrameSchema"))
+    // one exception row per failed check; array_compact drops the passed ones
+    val rowExceptions = view.select(
+      inline(array_compact(array(cellChecks ++ valueChecks ++ identityCheck: _*))))
 
-    val all = missingCols ++ extraCols ++ cellExceptions ++ valueExceptions ++
-      dupExceptions ++ identityExceptions
-    val exCols = Seq("dataset", "index", "column", "check", "failure_case",
-      "schema_context", "check_number")
-    all.map(_.select(exCols.map(col): _*))
-      .reduceOption(_.unionByName(_))
-      .getOrElse(emptyExceptions(spark).select(exCols.map(col): _*))
+    // Duplicate-key groups (A6): one exception per offending key-group.
+    val dupExceptions = DupKeys.get(dataset).toSeq.map { keys =>
+      val grouped = view.groupBy(keys.map(col): _*).count().filter(col("count") > 1)
+      exceptionRows(
+        grouped, dataset, keys.mkString(","),
+        s"duplicate_key(${keys.mkString(",")})",
+        concat_ws("|", keys.map(col): _*), schemaContext = "DataFrameSchema")
+    }
+
+    (shapeExceptions ++ dupExceptions).foldLeft(rowExceptions)(_.unionByName(_))
   }
 
   /** COA referential-integrity check as a true anti-join — never collects the
     * key set to the driver (reference collects: pipeline.py:30-47; J3).
     */
-  def accountInCoaExceptions(df: DataFrame, dataset: String, coaCodes: DataFrame): DataFrame = {
-    val bad = df
-      .withColumn("account_code", col("account_code").cast("string"))
+  def accountInCoaExceptions(raw: DataFrame, dataset: String, coaCodes: DataFrame): DataFrame = {
+    // like the typed view, a missing account_code column reads as nulls
+    val code = if (raw.columns.contains("account_code")) col("account_code") else lit(null)
+    val bad = raw
+      .withColumn("account_code", code.cast("string"))
       .join(broadcast(coaCodes.select(col("account_code").cast("string").as("account_code"))),
         Seq("account_code"), "left_anti")
     exceptionRows(bad, dataset, "account_code", "account_in_coa", col("account_code"))

@@ -95,6 +95,15 @@ object Schemas {
     StructField("severity", StringType, nullable = true)
   ))
 
+  /** DQ summary contract (reference: src/finance_etl/quality.py:205-249). */
+  val dqSummary: StructType = StructType(Seq(
+    StructField("dataset", StringType),
+    StructField("error_count", LongType),
+    StructField("warn_count", LongType),
+    StructField("issue_count", LongType),
+    StructField("status", StringType)
+  ))
+
   /** All raw contracts keyed by dataset name (reference: quality.py DATASETS). */
   val rawContracts: Map[String, StructType] = Map(
     "sales" -> sales,

@@ -1,9 +1,8 @@
 package graft.fin
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.sources.Io
 
 /** Star-schema export (SURVEY.md §3.2; reference:
@@ -15,32 +14,6 @@ import graft.sources.Io
   * lookup joins, so fact_gl streams at any scale.
   */
 object StarExport {
-
-  /** `_to_month_str`: strings truncate to YYYY-MM; date-likes format
-    * (reference: export_powerbi_star_schema.py:25-33).
-    */
-  def monthStr(c: Column, dt: DataType): Column = dt match {
-    case StringType => substring(c, 1, 7)
-    case _ => date_format(c, "yyyy-MM")
-  }
-
-  /** Srt6: latest month = lexicographic max of YYYY-MM strings
-    * (reference: export_powerbi_star_schema.py:51-57).
-    */
-  def inferMonth(kpi: DataFrame): Option[String] =
-    if (kpi.isEmpty || !kpi.columns.contains("month")) None
-    else Option(kpi.agg(max(col("month"))).head().getString(0))
-
-  /** Candidate date columns, in pick order (reference: `:348`). */
-  val DateColCandidates: Seq[String] =
-    Seq("tx_date", "date", "transaction_date", "posting_date", "invoice_date")
-
-  /** P5: filter rows to the month via date formatting (reference: `:60-69`). */
-  def filterToMonthByDate(df: DataFrame, dateCol: Option[String], month: String): DataFrame =
-    dateCol.filter(df.columns.contains) match {
-      case Some(c) => df.filter(date_format(col(c), "yyyy-MM") === lit(month))
-      case None => df
-    }
 
   /** dim_entity: distinct non-blank entities from fact+kpi, surrogate-keyed;
     * currency enrichment as deterministic min_by (the reference's
@@ -211,28 +184,13 @@ object StarExport {
       outDirBase: String,
       monthArg: Option[String] = None): StarResult = {
 
-    val fact = Io.readParquetOrEmpty(spark, s"$curatedDir/fact_transactions.parquet",
-      StructType(Schemas.factColumns.map(StructField(_, StringType))))
-    val dimAccountsSrc = Io.readParquetOrEmpty(spark, s"$curatedDir/dim_accounts.parquet",
-      Schemas.chartOfAccounts)
-    val kpi0 = Io.readParquetOrEmpty(spark, s"$curatedDir/kpi_monthly.parquet",
-      StructType(Seq(StructField("entity", StringType), StructField("month", StringType))))
-
-    val kpi =
-      if (kpi0.columns.contains("month"))
-        kpi0.withColumn("month", monthStr(col("month"), kpi0.schema("month").dataType))
-      else kpi0
-
-    val month = monthArg.orElse(inferMonth(kpi)).getOrElse(
-      throw new IllegalArgumentException("Could not infer month. Provide month=YYYY-MM."))
+    val CuratedMonth(_, month, dateCol, factM, dimAccountsSrc, kpi) =
+      CuratedMonth.read(spark, curatedDir, monthArg)
     val outDir = s"$outDirBase/$month"
-
-    val dateCol = Io.pickCol(fact, DateColCandidates)
-    val factM = filterToMonthByDate(fact, dateCol, month)
 
     val dimEntity = buildDimEntity(factM, kpi)
     val dimAccount = buildDimAccount(dimAccountsSrc)
-    val (dimDate, dimMonth) = dateCol.filter(factM.columns.contains) match {
+    val (dimDate, dimMonth) = dateCol match {
       case Some(c) =>
         val dd = buildDimDate(factM, c)
         (dd, buildDimMonth(dd))

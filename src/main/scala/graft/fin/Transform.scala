@@ -67,7 +67,7 @@ object Transform {
       .drop("fx_date", "from_currency", "fx_rate")
 
     // Hard error on unresolved rates — mirrors transform.py:40-42. The sample
-    // collect is bounded and only runs when a violation exists.
+    // collect runs a job on every call and returns at most MissingFxSample rows.
     val missing = withRate
       .filter(col("rate").isNull)
       .select(col("date"), col("currency"))

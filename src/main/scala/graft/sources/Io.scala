@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink layer (SURVEY.md §2.1 S1-S6).
@@ -44,6 +44,12 @@ object Io {
     spark.read.option("header", "true").csv(path)
   }
 
+  /** Internal working column carrying the pandas-like 0-based file row
+    * index through the DQ layer (see `Quality.withRowIndex`). Never part
+    * of a curated/fact output.
+    */
+  val RowIndexCol = "__row_index"
+
   /** Typed view derived from the all-string raw frame: every contract
     * column comes from `try_cast` of its raw cell; columns missing from
     * the file become typed nulls (the DQ layer reports them as
@@ -59,20 +65,15 @@ object Io {
     * null in the typed frame yet passing try_cast would then silently
     * skip both the dtype check and the isNotNull-guarded value checks.
     */
-  /** Internal working column carrying the pandas-like 0-based file row
-    * index through the DQ layer (see `Quality.withRowIndex`). Projected
-    * away before any curated/fact output.
-    */
-  val RowIndexCol = "__row_index"
+  def typedFromRaw(raw: DataFrame, contract: StructType): DataFrame =
+    raw.select(typedColumns(raw, contract): _*)
 
-  def typedFromRaw(raw: DataFrame, contract: StructType): DataFrame = {
-    val passthrough =
-      if (raw.columns.contains(RowIndexCol)) Seq(raw(RowIndexCol)) else Nil
-    raw.select(contract.fields.toSeq.map { f =>
+  /** [[typedFromRaw]]'s columns, to project beside other columns of `raw`. */
+  def typedColumns(raw: DataFrame, contract: StructType): Seq[Column] =
+    contract.fields.toSeq.map { f =>
       (if (raw.columns.contains(f.name)) raw(f.name).try_cast(f.dataType)
        else org.apache.spark.sql.functions.lit(null).cast(f.dataType)).as(f.name)
-    } ++ passthrough: _*)
-  }
+    }
 
   /** S2: tolerant parquet scan — empty DataFrame with the given schema when the
     * path is absent (reference: scripts/export_bi_datasets.py:11-12).

@@ -34,9 +34,13 @@ import org.apache.spark.storage.StorageLevel
   * `Dataset.localCheckpoint` produces when AQE is off. Rows are copied
   * before caching (the executed plan reuses `UnsafeRow` buffers).
   *
-  * Lazy by default (materializes at the first action, like
-  * `localCheckpoint(false)`): no Spark job runs at plan-construction
-  * time, so the PlanAuditSpec construction-job invariant is preserved.
+  * Lazy by default in the sense of `localCheckpoint(false)`: the cached
+  * rows materialize at the first action. Building the checkpoint is not
+  * free, though: under adaptive query execution (on by default) creating
+  * the RDD of the executed plan runs every upstream shuffle stage, so
+  * Spark jobs do run at plan-construction time. PlanAuditSpec's
+  * construction-job rule matches driver-action stage names only
+  * (`collect at`, ...), so it does not count these jobs.
   *
   * At cluster scale this is the difference between shuffling the edge
   * list once and shuffling it `iters` times — the loop-invariant

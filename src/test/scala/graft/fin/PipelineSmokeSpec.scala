@@ -2,6 +2,7 @@ package graft.fin
 
 import graft.SparkSpec
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end smoke mirroring the reference's
   * tests/test_pipeline_smoke.py:13-48: generate a synthetic month, run the
@@ -89,6 +90,77 @@ class PipelineSmokeSpec extends SparkSpec {
     val cleared = spark.read.parquet(dec.fact)
     assert(cleared.select("month").distinct().as[String].collect().toSeq === Seq("2025-11"))
     assert(cleared.count() === novCount)
+  }
+
+  /** Lines of the single CSV part file a `writeCsv` sink produced. */
+  private def csvLines(dir: String): Seq[String] = {
+    val part = Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(p => p.getFileName.toString.startsWith("part-")).toSeq
+    assert(part.size === 1, s"$dir: ${part.mkString(", ")}")
+    Files.readAllLines(part.head).asScala.toSeq
+  }
+
+  test("DQ gate end to end: seeded defects are reported row by row; ERROR fails after both writes") {
+    val work = Files.createTempDirectory("graft-dq-gate").toString
+    SampleData.writeChartOfAccounts(s"$work/reference")
+    SampleData.generateSyntheticRaw(s"$work/raw", "2025-12", seed = 42L)
+    // overwrite cell `col` of 0-based data row `row` (the row's DQ index)
+    def edit(file: String, row: Int, col: Int, f: String => String): Unit = {
+      val p = java.nio.file.Paths.get(work, "raw", file)
+      val lines = Files.readAllLines(p).asScala.toIndexedSeq
+      val cells = lines(row + 1).split(",", -1)
+      cells(col) = f(cells(col))
+      Files.write(p, lines.updated(row + 1, cells.mkString(",")).mkString("", "\n", "\n").getBytes)
+    }
+    edit("expenses.csv", 3, 5, "-" + _)              // negative amount
+    edit("expenses.csv", 7, 3, _ => "99999999")      // account not in the COA
+    edit("inventory_movements.csv", 4, 5, "-" + _)   // negative unit cost
+    edit("sales.csv", 2, 5, _ => "junk")             // unparseable amount
+    edit("sales.csv", 6, 0, _ => "")                 // blank date
+
+    val expectedExceptions = Seq(
+      "dataset,index,column,check,failure_case,schema_context,check_number,severity",
+      "expenses,7,account_code,account_in_coa,99999999,Column,,ERROR",
+      "expenses,3,amount,greater_than(0),-2282.87,Column,,WARN",
+      "inventory_movements,4,unit_cost,greater_than_or_equal_to(0),-72.62,Column,,WARN",
+      "sales,2,amount,dtype('double'),junk,Column,,ERROR",
+      "sales,6,date,not_nullable,,Column,,ERROR")
+    def expectedSummary(salesStatus: String, expensesStatus: String) = Seq(
+      "dataset,error_count,warn_count,issue_count,status",
+      s"sales,2,0,2,$salesStatus",
+      s"expenses,1,1,2,$expensesStatus",
+      "payroll,0,0,0,PASS",
+      "inventory_movements,0,1,1,PASS",
+      "fx_rates,0,0,0,PASS")
+
+    val res = Pipeline.runMonth(spark, Settings.default, "2025-12",
+      s"$work/raw", s"$work/curated-never", s"$work/reference", "NEVER")
+    assert(res.status === "PASS")
+    assert(csvLines(res.dqExceptions) === expectedExceptions)
+    assert(csvLines(res.dqSummary) === expectedSummary("PASS", "PASS"))
+
+    val curated = s"$work/curated-error"
+    intercept[Pipeline.DataQualityException] {
+      Pipeline.runMonth(spark, Settings.default, "2025-12",
+        s"$work/raw", curated, s"$work/reference", "ERROR")
+    }
+    assert(csvLines(s"$curated/dq_exceptions.csv") === expectedExceptions)
+    assert(csvLines(s"$curated/dq_summary.csv") === expectedSummary("FAIL", "FAIL"))
+  }
+
+  test("the month's DQ exceptions take one row pass per raw dataset") {
+    val work = Files.createTempDirectory("graft-dq-plan").toString
+    SampleData.writeChartOfAccounts(s"$work/reference")
+    SampleData.generateSyntheticRaw(s"$work/raw", "2025-12", seed = 42L)
+    val raws = Quality.Datasets
+      .map(n => n -> graft.sources.Io.readCsvRaw(spark, s"$work/raw/$n.csv")).toMap
+    val coaCodes = Transform.buildDimAccounts(graft.sources.Io.readCsv(spark,
+      s"$work/reference/chart_of_accounts.csv", Schemas.chartOfAccounts))
+      .select("account_code").distinct()
+    val plan = Pipeline.dqExceptions(spark, Settings.default, raws, coaCodes)
+      .queryExecution.optimizedPlan
+    // 5 row passes + 3 dup-key passes + 2 COA anti-joins of two leaves each
+    assert(plan.collectLeaves().size <= 12, plan.treeString)
   }
 
   test("invalid fail_on is rejected early") {

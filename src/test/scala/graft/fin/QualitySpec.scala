@@ -58,7 +58,7 @@ class QualitySpec extends SparkSpec {
       .toDF("month", "entity", "employee_id", "currency", "gross", "deductions", "net")
     val raw = typed.select(typed.columns.toIndexedSeq.map(c => col(c).cast("string").as(c)): _*)
     val exs = Quality.validateDataset(
-      spark, typed, raw, "payroll", Schemas.payroll, Settings.default)
+      spark, raw, "payroll", Schemas.payroll, Settings.default)
       .select("check").as[String].collect().toSeq
     assert(exs.count(_.startsWith("isin")) === 1)
     assert(exs.count(_ == "greater_than_or_equal_to(0)") === 1)
@@ -69,11 +69,8 @@ class QualitySpec extends SparkSpec {
       ("2025-12-01", "E1", "I1", "40000001", "USD", "100.0", "d"),  // dup (entity, invoice_id)
       ("not-a-date", "E1", "I2", "40000001", "USD", "junk", "d"))   // dtype x2
       .toDF("date", "entity", "invoice_id", "account_code", "currency", "amount", "description")
-    val salesTyped = sales.select(
-      col("date").try_cast("date"), col("entity"), col("invoice_id"), col("account_code"),
-      col("currency"), col("amount").try_cast("double"), col("description"))
     val sexs = Quality.validateDataset(
-      spark, salesTyped, sales, "sales", Schemas.sales, Settings.default)
+      spark, sales, "sales", Schemas.sales, Settings.default)
       .select("check").as[String].collect().toSeq
     assert(sexs.count(_.startsWith("duplicate_key")) === 1)
     assert(sexs.count(_.startsWith("dtype")) === 2)
@@ -89,8 +86,7 @@ class QualitySpec extends SparkSpec {
         "2025-12-01,E1,I3,40000001,USD,junk,bad amt\n").getBytes)
     val raw = Quality.withRowIndex(
       graft.sources.Io.readCsvRaw(spark, s"$work/sales.csv"))
-    val typed = graft.sources.Io.typedFromRaw(raw, Schemas.sales)
-    val exs = Quality.validateDataset(spark, typed, raw, "sales", Schemas.sales, Settings.default)
+    val exs = Quality.validateDataset(spark, raw, "sales", Schemas.sales, Settings.default)
       .select("check", "index").collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
     assert(exs.collectFirst { case (c, i) if c.startsWith("isin") => i } === Some(1L))
@@ -162,9 +158,8 @@ class QualitySpec extends SparkSpec {
 
   test("strict schema shape: missing column -> column_required, extra -> column_in_schema") {
     val raw = Seq(("2025-12-01", "E1", "oops")).toDF("date", "entity", "bogus")
-    val typed = raw.select(col("date").cast("date"), col("entity"))
     val exs = Quality.validateDataset(
-      spark, typed, raw, "sales", Schemas.sales, Settings.default)
+      spark, raw, "sales", Schemas.sales, Settings.default)
     val byCheck = exs.groupBy("check").count().as[(String, Long)].collect().toMap
     assert(byCheck("column_required") === 5L)   // invoice_id, account_code, currency, amount, description
     assert(byCheck("column_in_schema") === 1L)  // bogus
@@ -173,6 +168,36 @@ class QualitySpec extends SparkSpec {
       .filter(col("check") === "column_required")
       .select("severity").distinct().as[String].collect()
     assert(sev.toSeq === Seq("ERROR"))
+  }
+
+  /** `rows` under the sales header, read back with its file row index. */
+  private def indexedSales(rows: String*) = {
+    val work = java.nio.file.Files.createTempDirectory("graft-dq-sales").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(work, "sales.csv"),
+      ("date,entity,invoice_id,account_code,currency,amount,description\n" +
+        rows.map(_ + "\n").mkString).getBytes)
+    Quality.withRowIndex(graft.sources.Io.readCsvRaw(spark, s"$work/sales.csv"))
+  }
+
+  test("a row failing several checks reports one exception per failed check") {
+    // row 1: bad currency, non-positive amount, and (with row 0) a duplicate key
+    val raw = indexedSales(
+      "2025-12-01,E1,I1,40000001,USD,100.0,ok",
+      "2025-12-01,E1,I1,40000001,XXX,-5.0,bad")
+    val exs = Quality.validateDataset(spark, raw, "sales", Schemas.sales, Settings.default)
+      .select("check", "index", "failure_case").collect()
+      .map(r => (r.getString(0), Option(r.get(1)), r.getString(2))).toSeq.sortBy(_._1)
+    assert(exs === Seq(
+      ("duplicate_key(entity,invoice_id)", None, "E1|I1"),
+      ("greater_than(0)", Some(1L), "-5.0"),
+      ("isin(USD,TZS,EUR)", Some(1L), "XXX")))
+  }
+
+  test("validateDataset reads its input in one row pass plus the dup-key pass") {
+    val raw = indexedSales("2025-12-01,E1,I1,40000001,USD,100.0,ok")
+    val plan = Quality.validateDataset(spark, raw, "sales", Schemas.sales, Settings.default)
+      .queryExecution.optimizedPlan
+    assert(plan.collectLeaves().size <= 2, plan.treeString)
   }
 
   test("accountInCoa anti-join emits exceptions only for unknown codes") {
