@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.QueryHelpers.{r6, shufflePartitions}
 
 /** All-pairs similarity search (APSS) over WEIGHTED sparse TF-IDF
   * vectors — the Bayardo/Ma/Srikant "Scaling Up All Pairs Similarity
@@ -43,11 +44,6 @@ import org.apache.spark.sql.functions._
   */
 object AllPairs {
 
-  /** Half-up 6dp rounding — floor(x·1e6 + 0.5)/1e6, the engine-portable
-    * form used at every summation point (see LlmQueries.roundHU).
-    */
-  private def r6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-
   private def dec(c: Column): Column = c.cast("decimal(18,6)")
 
   /** L2-normalized smooth-idf TF-IDF weights, one row per (doc, term):
@@ -82,15 +78,16 @@ object AllPairs {
   def tfidfNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                         threshold: Double): DataFrame = {
     // the weight table feeds FOUR plan subtrees (max-weight caps, the
-    // prefix window, both verification sides); checkpoint it once (lazy
-    // — materializes at first action, the ann_tuning_curve convention)
+    // prefix window, both verification sides); checkpoint it once
     // instead of re-running the tokenize/tf/df/norm pipeline per use.
+    // The cached rows fill at the first action, but under AQE building
+    // the checkpoint already runs the upstream shuffle stages as jobs.
     // Bridge checkpoint, partitioned by id and sorted (id, sdf, token):
     // the prefix-scan window below requires exactly that clustering +
     // ordering, so it runs off the checkpoint with no exchange and no
     // sort (plain localCheckpoint under AQE would surrender both — see
     // CheckpointBridge).
-    val np = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val np = shufflePartitions(df.sparkSession)
     val u = org.apache.spark.sql.graftbridge.CheckpointBridge
       .partitionedCheckpoint(tfidfUnitWeights(df, idCol, textCol), np,
         Seq("id"), Seq("id", "sdf", "token"))

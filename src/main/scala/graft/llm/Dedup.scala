@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.QueryHelpers.shufflePartitions
 
 /** Deduplication operators for large-scale corpora.
   *
@@ -422,9 +423,7 @@ object Dedup {
       // serializes the candidate-pair expansion below into a single
       // task (the allpairs_tfidf lesson); pinning keeps the expansion
       // parallel and both join sides reuse this one exchange
-      .repartition(
-        sets.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("shingle"))
+      .repartition(shufflePartitions(sets.sparkSession), col("shingle"))
     val a = prefix.select(col("shingle"), col(idCol).as("a_id"))
     val b = prefix.select(col("shingle"), col(idCol).as("b_id"))
     a.join(b, "shingle")
@@ -799,8 +798,7 @@ object Dedup {
     // silently re-exchanging and re-sorting the edge list every round;
     // with the declared layout only the label table moves per round
     val sym = org.apache.spark.sql.graftbridge.CheckpointBridge
-      .partitionedCheckpoint(sym0,
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      .partitionedCheckpoint(sym0, shufflePartitions(edges.sparkSession),
         Seq("dst"), Seq("dst"), declareStats = false)
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))

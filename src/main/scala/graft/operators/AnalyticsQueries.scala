@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
+import QueryHelpers.{coPurchaseEdges, decSum, docs, roundHU, t}
 
 /** Round-12 additions: the published analytics families still missing
   * from the catalog — spectral seasonality (the DFT periodogram),
@@ -29,26 +30,11 @@ import org.apache.spark.sql.expressions.Window
   */
 object AnalyticsQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.sources.ScanFanout.parquet(s, s"$dir/$name.parquet")
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-
   private def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = t(s, dir, "events")
     df.withColumn("ts_us", graft.sources.EventTime.tsUs(df))
   }
-
-  private def roundHU(c: Column, pow: Double): Column =
-    floor(c * lit(pow) + lit(0.5)) / lit(pow)
-
-  private def shufflePartitions(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
-
-  private def decSum(c: Column, scale: Int = 6): Column =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
 
   private val DayUs = 86400000000L
 
@@ -1148,16 +1134,7 @@ object AnalyticsQueries {
     // the round join key, each round is one streamed join + one
     // node-sized aggregate + a broadcast 1-row normalizer.
     "eigenvector_centrality" -> ((s, dir) => {
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val e = CheckpointBridge.partitionedCheckpoint(e0,
-        shufflePartitions(s), Seq("src"), Seq("src", "dst"),
-        dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "src", canonical = false)
       var x = e.select(col("src").as("node")).distinct()
         .withColumn("score", lit(1.0))
       for (_ <- 1 to 3) {
@@ -1305,16 +1282,7 @@ object AnalyticsQueries {
     // label joins (the modularity shape), exact decimal sums; E[I] =
     // −1/(n−1) reported alongside.
     "moran_i" -> ((s, dir) => {
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val e = CheckpointBridge.partitionedCheckpoint(e0,
-        shufflePartitions(s), Seq("dst"), Seq("dst", "src"),
-        dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "dst", canonical = false)
       val nodes = e.select(col("dst").as("node")).distinct()
         .join(t(s, dir, "part").select(col("p_partkey").as("node"),
           col("p_retailprice").as("p")), "node")
@@ -1737,16 +1705,7 @@ object AnalyticsQueries {
     // contrast where I reads global structure; C < 1 clustered, > 1
     // dispersed). Same single edge pass + node-keyed joins.
     "geary_c" -> ((s, dir) => {
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val e = CheckpointBridge.partitionedCheckpoint(e0,
-        shufflePartitions(s), Seq("dst"), Seq("dst", "src"),
-        dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "dst", canonical = false)
       val nodes = e.select(col("dst").as("node")).distinct()
         .join(t(s, dir, "part").select(col("p_partkey").as("node"),
           col("p_retailprice").as("p")), "node")

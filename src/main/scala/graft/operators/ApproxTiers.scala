@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import QueryHelpers.decSum
 
 /** The 100 TB tier of the four profiling/robust-stats queries whose exact
   * registered forms buffer values or Expand rows: callable code, not a
@@ -24,9 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   *    band keeps the same clamp/sum semantics with sketch memory.
   */
 object ApproxTiers {
-
-  private def decSum(c: Column, scale: Int = 6) =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
 
   /** One-pass column profiler with HLL cardinalities (no Expand): null
     * count, approx distinct, min/max per column, melted to long form.

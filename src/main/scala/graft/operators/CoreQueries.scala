@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import QueryHelpers.{coPurchaseEdges, coPurchasePairs, decSum, r2, r6, r8, shufflePartitions, t}
 
 /** Driver-contract queries: each SURVEY.md §2 operator expressed as a generic
   * query over the shared `/root/testdata` TPC-H-ish parquet tables, paired
@@ -29,20 +30,6 @@ import org.apache.spark.sql.types.DecimalType
   * values so no extra distinct job runs, and no query collects to the driver.
   */
 object CoreQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.sources.ScanFanout.parquet(s, s"$dir/$name.parquet")
-
-  /** Session shuffle width, for PINNED repartitions whose partitioning a
-    * downstream stage must be able to reuse (an unpinned repartition is
-    * AQE-coalescible, which both breaks the reuse and can serialize a
-    * later join's expansion into one task — the allpairs_tfidf lesson).
-    */
-  private def shufflePartitions(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
-
-  private def decSum(c: org.apache.spark.sql.Column, scale: Int = 4) =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
 
   /** Bucket count for [[exclusivePrefix]] — constant, so the coarse
     * bucket-rollup window is a constant-size single partition at any SF.
@@ -177,7 +164,9 @@ object CoreQueries {
     * round rebinds `r` through a join+agg, so without a periodic cut the
     * logical plan deepens linearly and Catalyst re-optimization cost
     * grows per round — harmless at 3 iterations, pathological at 30+.
-    * Lazy (eager=false) so the cut costs nothing until the plan executes.
+    * The cut is `localCheckpoint(false)`, which is not free: under AQE
+    * building it runs the upstream shuffle stages as Spark jobs at plan
+    * construction, before the query's own action.
     */
   private val PageRankCheckpointStride = 5
 
@@ -261,36 +250,6 @@ object CoreQueries {
     * [[LpaCheckpointStride]] rounds so plan depth stays bounded no
     * matter how high `iters` is raised.
     */
-  /** The DISTINCT directed co-purchase edge list (both orientations),
-    * checkpointed partitioned+sorted by `key` — the shared edge build of
-    * lpaPlan / wl_refinement / modularity / bfs_hops. TWO wide
-    * exchanges, not four: co-purchase baskets as ONE per-order
-    * collect_set (dedups pk within the order for free; basket size is
-    * bounded by order size, so the per-row array and the explode²
-    * fan-out — ≤ |basket|² pairs — stay O(1) at any SF), pairs by a
-    * narrow double-explode instead of the self-join (whose ok-keyed
-    * exchange the old baskets.distinct then re-paid), and the
-    * pair-level `.distinct()` folded into the bridge checkpoint as a
-    * partition-local adjacent dedup (equal pairs agree on the key, so
-    * the hash partitioning co-locates them and the sort makes them
-    * adjacent). Measured at sf0.1: 1.9s → 1.3s for the same 2.39M-edge
-    * result. declareStats=false: an edge list must never become a
-    * broadcast build side (see CheckpointBridge).
-    */
-  private def coPurchaseEdges(s: SparkSession, dir: String,
-                              key: String): DataFrame = {
-    val other = if (key == "dst") "src" else "dst"
-    val bo = t(s, dir, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("items"))
-    val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-      .select(col("src"), explode(col("items")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    org.apache.spark.sql.graftbridge.CheckpointBridge
-      .partitionedCheckpoint(e0, shufflePartitions(s), Seq(key),
-        Seq(key, other), dedupSorted = true, declareStats = false)
-  }
-
   private[operators] def lpaPlan(s: SparkSession, dir: String,
                                  iters: Int): DataFrame = {
     // checkpoint PARTITIONED AND SORTED BY THE ROUND JOIN KEY via the
@@ -300,7 +259,7 @@ object CoreQueries {
     // the declared partitioning + ordering each round's SMJ streams the
     // edge side with zero exchange and zero sort — only the (small)
     // label table shuffles
-    val e = coPurchaseEdges(s, dir, "dst")
+    val e = coPurchaseEdges(s, dir, "dst", canonical = false)
     lpaFrom(e, iters)
       .select(col("node").as("p_partkey"), col("lbl").as("community"))
       .orderBy("p_partkey")
@@ -496,17 +455,9 @@ object CoreQueries {
   private[operators] def pagerankPlan(s: SparkSession, dir: String,
                                       iters: Int): DataFrame = {
     require(iters >= 1, "pagerankPlan needs at least one iteration")
-    // Per-order collect_set + narrow double-explode instead of the
-    // baskets self-join (see lpaPlan — drops two of the edge build's
-    // wide exchanges; collect_set dedups pk within the order, so each
-    // (src, dst) appears once per co-order and the count equals the old
-    // DISTINCT-baskets join's multiplicity exactly).
-    val bo = t(s, dir, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg(collect_set(col("l_partkey")).as("items"))
-    val pairs = bo.select(explode(col("items")).as("src"), col("items"))
-      .select(col("src"), explode(col("items")).as("dst"))
-      .filter(col("src") =!= col("dst"))
+    // each (src, dst) appears once per co-order, so the count below is
+    // the pair's co-order multiplicity
+    val pairs = coPurchasePairs(s, dir, canonical = false)
     // ONE edge-sized exchange for the whole query: the (src, dst) →
     // multiplicity groupBy folds into the checkpoint's repartition as a
     // partition-local run-length count (countedCheckpoint) — the old
@@ -724,7 +675,7 @@ object CoreQueries {
       val o = t(s, dir, "orders").select("o_orderkey", "o_custkey")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy("o_custkey")
-        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
         .orderBy(desc("revenue"), col("o_custkey"))
         .limit(8)
     }),
@@ -808,7 +759,7 @@ object CoreQueries {
     "top_expense" -> ((s, dir) => {
       t(s, dir, "lineitem")
         .groupBy("l_partkey")
-        .agg(decSum(abs(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("total_spend"))
+        .agg(decSum(abs(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("total_spend"))
         .orderBy(desc("total_spend"), col("l_partkey"))
         .limit(15)
     }),
@@ -819,7 +770,7 @@ object CoreQueries {
         .groupBy("l_returnflag")
         .agg(
           decSum(col("l_extendedprice"), 2).as("gross"),
-          decSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("net"))
+          decSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("net"))
         .withColumn("margin_pct", col("net") / col("gross") * 100)
         .orderBy("l_returnflag")
     }),
@@ -872,7 +823,7 @@ object CoreQueries {
         .join(broadcast(n), su("s_nationkey") === n("n_nationkey"))
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .groupBy("r_name", "n_name")
-        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),
+        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"),
           count(lit(1)).as("n_items"))
         .orderBy("r_name", "n_name")
     }),
@@ -885,7 +836,7 @@ object CoreQueries {
       val p = t(s, dir, "part").select("p_partkey", "p_brand")
       li.join(p, li("l_partkey") === p("p_partkey"))
         .groupBy("p_brand")
-        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),
+        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"),
           sum("l_quantity").as("sum_qty"))
         .orderBy("p_brand")
     }),
@@ -1833,21 +1784,9 @@ object CoreQueries {
     // vertices at 100 TB. Each triangle is found exactly once and
     // credited to its three corners map-side; keyed shuffles only.
     "clustering_coeff" -> ((s, dir) => {
-      // Per-order collect_set + narrow double-explode instead of the
-      // baskets self-join, with the pair `.distinct()` folded into the
-      // bridge checkpoint's partition-local adjacent dedup (see
-      // lpaPlan / CheckpointBridge.dedupSorted) — the edge build drops
-      // from four wide exchanges to two. Checkpoint partitioned by src
-      // so the head-side degree count below aggregates exchange-free.
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") < col("dst"))
-      val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .partitionedCheckpoint(e0, shufflePartitions(s), Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
+      // canonical edge checkpoint partitioned by src, so the head-side
+      // degree count below aggregates exchange-free
+      val e = coPurchaseEdges(s, dir, "src", canonical = true)
       // degree via ONE explode + partial-agg pass over the checkpoint,
       // localCheckpointed because THREE subtrees read it (both
       // orientation joins + the output's degree column) — without the
@@ -1987,7 +1926,6 @@ object CoreQueries {
     // every leave-one-out mean is pure algebra on that table plus the
     // broadcast grand totals (no second data pass).
     "jackknife_mean_ci" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val g = t(s, dir, "customer")
         .groupBy("c_nationkey")
         .agg(sum(col("c_acctbal").cast(DecimalType(18, 2))).as("s"),
@@ -2024,15 +1962,7 @@ object CoreQueries {
     // SAME joined frame; moment sums route through decimal(38,0) on
     // exact integer degrees.
     "degree_assortativity" -> ((s, dir) => {
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") < col("dst"))
-      val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .partitionedCheckpoint(e0, shufflePartitions(s), Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "src", canonical = true)
       val dk = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
         .union(e.groupBy(col("dst").as("n")).agg(count(lit(1)).as("d")))
         .groupBy("n").agg(sum("d").as("d"))
@@ -2193,7 +2123,6 @@ object CoreQueries {
     // calendar-sized daily table is checkpointed once and reused by
     // all four window sizes.
     "hurst_exponent" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val daily = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(decSum(col("o_totalprice"), 2).as("rev"))
@@ -2259,7 +2188,6 @@ object CoreQueries {
     // result, no iterative solver). Brand comes from the part dim join
     // (auto-broadcast while it fits, keyed shuffle at scale).
     "grouped_ols" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_quantity").as("x"),
           col("l_extendedprice").as("y"))
@@ -2294,7 +2222,6 @@ object CoreQueries {
     // Replicate fan-out is a constant ×B, the only shuffle is the B-row
     // aggregate, and the quantile runs over B values.
     "poisson_bootstrap_ci" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val b = BootstrapReplicates
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -2420,15 +2347,7 @@ object CoreQueries {
     // semi-joins) read a materialized RDD instead of re-running the
     // whole peel chain. Output is round-sized (4 rows), never data-sized.
     "kcore_peel" -> ((s, dir) => {
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") < col("dst"))
-      var e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .partitionedCheckpoint(e0, shufflePartitions(s), Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
+      var e = coPurchaseEdges(s, dir, "src", canonical = true)
       val rounds = (1 to KCorePeelRounds).map { r =>
         val dk = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
           .union(e.groupBy(col("dst").as("n")).agg(count(lit(1)).as("d")))
@@ -2461,15 +2380,7 @@ object CoreQueries {
     // multiset hash is a commutative sum (see WlRounds' doc for the
     // scale rationale). Output is color-class-sized.
     "wl_refinement" -> ((s, dir) => {
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .partitionedCheckpoint(e0, shufflePartitions(s), Seq("dst"),
-          Seq("dst", "src"), dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "dst", canonical = false)
       var colors = e.select(col("src").as("n")).distinct()
         .select(col("n"), lit(1L).as("c"))
       for (_ <- 1 to WlRounds) {
@@ -2499,8 +2410,7 @@ object CoreQueries {
     // and community-sized algebra; per-community terms round 6dp before
     // the decimal sum.
     "modularity" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      val e = coPurchaseEdges(s, dir, "dst")
+      val e = coPurchaseEdges(s, dir, "dst", canonical = false)
       val lab = lpaFrom(e, LpaIters)
         .localCheckpoint(false) // reused: neighbor-label join + own-label join
       // ONE edge-cardinality pass total: the dst-side label join is
@@ -2545,8 +2455,7 @@ object CoreQueries {
     // labeled-edge joins and degree rollup as modularity; both
     // orientations present, so every term is 2m-consistent.
     "conductance" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      val e = coPurchaseEdges(s, dir, "dst")
+      val e = coPurchaseEdges(s, dir, "dst", canonical = false)
       val lab = lpaFrom(e, LpaIters)
         .localCheckpoint(false) // reused: neighbor-label join + own-label join
       // same single edge-cardinality pass as modularity (see there):
@@ -2596,7 +2505,7 @@ object CoreQueries {
     // src-partitioned checkpoint + a node-sized anti-join against the
     // visited set; frontiers and visited are node-sized checkpoints).
     "bfs_hops" -> ((s, dir) => {
-      val e = coPurchaseEdges(s, dir, "src")
+      val e = coPurchaseEdges(s, dir, "src", canonical = false)
       var frontier = e.agg(min(col("src")).as("n")).localCheckpoint(false)
       var visited = frontier
       val rows = (1 to BfsHops).map { k =>
@@ -2625,7 +2534,6 @@ object CoreQueries {
     // (Σrev, Σrev² with identical IEEE products), z rounds 6dp before
     // the per-segment decimal mean.
     "sax_symbols" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val m = t(s, dir, "orders")
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
         .agg(decSum(col("o_totalprice"), 2).as("rev"))
@@ -2688,7 +2596,6 @@ object CoreQueries {
     // 1-row result. Scale shape: a map-side partial aggregate to a
     // single row — nothing here grows with SF but the scan.
     "welch_ttest" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val g1 = (col("o_orderpriority") === "1-URGENT").cast("long")
       val x = col("o_totalprice")
       val m = t(s, dir, "orders").agg(
@@ -2723,11 +2630,9 @@ object CoreQueries {
     // and SSB/SSW accumulate 6dp-rounded per-group terms through
     // decimal so the k-way addition order can't diverge cross-engine.
     "anova_f" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       // sums of squares reach ~1e14 at sf0.01 (and grow with SF): Spark's
       // floor(double) returns LONG, so a 1e6-scaled round would overflow —
       // SS terms round at 1e2 (cents), the small F statistic at 1e6
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val x = col("o_totalprice")
       val grp = t(s, dir, "orders")
         .groupBy(col("o_orderpriority").as("pr"))
@@ -2761,8 +2666,6 @@ object CoreQueries {
     // "some group does". One fact pass into k-row moments (shared shape
     // with anova_f), pairs and MSW are pure k²-row algebra.
     "tukey_hsd" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val x = col("o_totalprice")
       val grp = t(s, dir, "orders")
         .groupBy(col("o_orderpriority").as("pr"))
@@ -2796,9 +2699,6 @@ object CoreQueries {
     // (the theil_index ln convention) so both engines fold identical
     // rationals.
     "bartlett_test" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: Column) = floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val x = col("c_acctbal")
       val grp = t(s, dir, "customer")
         .groupBy(col("c_nationkey").as("nk"))
@@ -2836,8 +2736,6 @@ object CoreQueries {
     // moments are decimal sums of 8dp-rounded rates; prior is a 1-row
     // broadcast.
     "eb_shrinkage" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: Column) = floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val rates = t(s, dir, "lineitem")
         .groupBy(col("l_partkey").as("p_partkey"))
         .agg(count(lit(1)).as("n_lines"),
@@ -2887,8 +2785,6 @@ object CoreQueries {
     // segment-keyed moments (decimal-exact), one-row-per-segment
     // algebra.
     "cuped_adjustment" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val spend = t(s, dir, "orders")
         .filter(year(col("o_orderdate")).isin(1995, 1996))
         .groupBy(col("o_custkey").as("ck"), year(col("o_orderdate")).as("yr"))
@@ -2935,7 +2831,6 @@ object CoreQueries {
     // aggregate is an EXACT integer sum; p̄ and the variance enter only
     // in the final one-row algebra.
     "cochran_armitage" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val yr = t(s, dir, "lineitem")
         .select(year(col("l_shipdate")).as("yr"),
           when(col("l_returnflag") === "R", 1L).otherwise(0L).as("ret"))
@@ -2969,7 +2864,6 @@ object CoreQueries {
     // machinery — no data-sized global sort); W± and the normal
     // approximation z are closed-form algebra on one aggregate row.
     "wilcoxon_signed_rank" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val spend = t(s, dir, "orders")
         .filter(year(col("o_orderdate")).isin(1995, 1996))
         .groupBy(col("o_custkey").as("ck"), year(col("o_orderdate")).as("yr"))
@@ -3012,7 +2906,6 @@ object CoreQueries {
     // into one result. The oracle derives identical cell counts
     // directly per pair — same integers either way.
     "cramers_v" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val obs3 = t(s, dir, "orders")
         .groupBy(col("o_orderstatus").as("st"), col("o_orderpriority").as("pr"),
           year(col("o_orderdate")).cast("string").as("yr"))
@@ -3078,7 +2971,6 @@ object CoreQueries {
     // doubles at this magnitude, so the casts are exact on both
     // engines), central moments and JB as closed-form 1-row algebra.
     "jarque_bera" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val x = col("o_totalprice")
       val m = t(s, dir, "orders").agg(
         count(lit(1)).as("n"),
@@ -3110,10 +3002,8 @@ object CoreQueries {
     // 6dp, then the one-way F machinery runs on them with decimal-
     // exact moments.
     "levene_test" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       // SS terms reach ~1e14 — Spark's floor(double)→LONG overflows a
       // 1e6-scaled round (the anova_f lesson), so they round at 1e2
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val o = t(s, dir, "orders")
         .select(col("o_orderpriority").as("pr"), col("o_totalprice").as("x"),
           col("o_orderkey").as("ok"))
@@ -3171,15 +3061,7 @@ object CoreQueries {
     // existing edges drop via a canonical-ordered anti-join;
     // deterministic per-probe top-10 via a probe-partitioned window.
     "adamic_adar" -> ((s, dir) => {
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") < col("dst"))
-      val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .partitionedCheckpoint(e0, shufflePartitions(s), Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "src", canonical = true)
       val nbr0 = e.select(col("src").as("z"), col("dst").as("n"))
         .unionAll(e.select(col("dst").as("z"), col("src").as("n")))
       val nbr = org.apache.spark.sql.graftbridge.CheckpointBridge
@@ -3223,17 +3105,8 @@ object CoreQueries {
     // single 1-row reduce (no per-k rescan), exploded to the k-level
     // rows at the end.
     "rich_club" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val ks = Seq(2, 4, 8, 16, 32)
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") < col("dst"))
-      val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .partitionedCheckpoint(e0, shufflePartitions(s), Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "src", canonical = true)
       val dk = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
         .union(e.groupBy(col("dst").as("n")).agg(count(lit(1)).as("d")))
         .groupBy("n").agg(sum("d").as("d"))
@@ -3273,15 +3146,7 @@ object CoreQueries {
     // checkpoint pushing the probe-bounded count vector one hop; no
     // level materializes more than (probes × nodes) rows.
     "katz_index" -> ((s, dir) => {
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") < col("dst"))
-      val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .partitionedCheckpoint(e0, shufflePartitions(s), Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "src", canonical = true)
       val nbr0 = e.select(col("src").as("z"), col("dst").as("n"))
         .unionAll(e.select(col("dst").as("z"), col("src").as("n")))
       val nbr = org.apache.spark.sql.graftbridge.CheckpointBridge
@@ -3331,8 +3196,7 @@ object CoreQueries {
     // against the visited set; frontiers/visited are (K·node)-sized
     // checkpoints.
     "closeness_centrality" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      val e = coPurchaseEdges(s, dir, "src")
+      val e = coPurchaseEdges(s, dir, "src", canonical = false)
       val seeds = e.select(col("src")).distinct()
         .orderBy("src").limit(ClosenessSeeds)
         .select(col("src").as("seed"))
@@ -3377,15 +3241,7 @@ object CoreQueries {
     // graph. Never all-pairs; output is round-cardinality.
     "k_truss" -> ((s, dir) => {
       import org.apache.spark.sql.graftbridge.CheckpointBridge
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") < col("dst"))
-      val e = CheckpointBridge.partitionedCheckpoint(e0,
-        shufflePartitions(s), Seq("src"), Seq("src", "dst"),
-        dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "src", canonical = true)
       // ONE bloom, canonical-keyed, built from the START edges: rounds
       // only SHRINK the edge set, so the round-1 filter stays a valid
       // superset prefilter for every later round (false positives are
@@ -3635,18 +3491,15 @@ object CoreQueries {
     // 8dp-round into decimal sums (ln under the exp/ln floor-round
     // house rule).
     "theil_index" -> ((s, dir) => {
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: Column) = floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val cust = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("ck"))
-        .agg(decSum(col("o_totalprice")).as("x"))
+        .agg(decSum(col("o_totalprice"), 4).as("x"))
       val nat = t(s, dir, "customer")
         .select(col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
       val cx = cust.join(nat, "ck")
         .localCheckpoint(false) // reused: group moments + entropy terms
       val g = cx.groupBy("nk")
-        .agg(count(lit(1)).as("n_g"), decSum(col("x")).as("sx"))
+        .agg(count(lit(1)).as("n_g"), decSum(col("x"), 4).as("sx"))
         .withColumn("mu_g", col("sx") / col("n_g"))
         .localCheckpoint(false) // nation-sized; reused: totals + joins
       val tot = broadcast(g.agg(
@@ -3678,13 +3531,12 @@ object CoreQueries {
     // rollup to part-level (q, p), ln terms 6dp-round into decimal
     // brand moments, closed-form slope/intercept.
     "price_elasticity" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val li = t(s, dir, "lineitem")
       val p = t(s, dir, "part").select("p_partkey", "p_brand")
       val parts = li.join(p, col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"), col("l_partkey"))
         .agg(sum("l_quantity").as("q"),
-          decSum(col("l_extendedprice") * (lit(1) - col("l_discount")))
+          decSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
             .as("r"))
         .select(col("p_brand"), r6(log(col("q"))).as("lq"),
           r6(log(col("r") / col("q"))).as("lp"))
@@ -3711,15 +3563,12 @@ object CoreQueries {
     // broadcast cutoff + one conditional reduce; ln terms 8dp-round
     // into decimal sums (house exp/ln rule).
     "powerlaw_alpha" -> ((s, dir) => {
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: Column) = floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val cust = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("ck"))
-        .agg(decSum(col("o_totalprice")).as("x"))
+        .agg(decSum(col("o_totalprice"), 4).as("x"))
         .localCheckpoint(false) // reused: the cutoff + the tail reduce
       val xm = broadcast(cust.agg(
-        (decSum(col("x")) / count(lit(1))).as("x_min")))
+        (decSum(col("x"), 4) / count(lit(1))).as("x_min")))
       cust.crossJoin(xm)
         .filter(col("x") > col("x_min"))
         .groupBy("x_min")
@@ -3740,17 +3589,15 @@ object CoreQueries {
     // welfare". Fact rollup to customers, nation-keyed rollup; √x
     // terms 6dp-round into decimal sums.
     "atkinson_index" -> ((s, dir) => {
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val cust = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("ck"))
-        .agg(decSum(col("o_totalprice")).as("x"))
+        .agg(decSum(col("o_totalprice"), 4).as("x"))
       val nat = t(s, dir, "customer")
         .select(col("c_custkey").as("ck"), col("c_nationkey").as("nk"))
       cust.join(nat, "ck")
         .groupBy("nk")
         .agg(count(lit(1)).as("n_cust"),
-          decSum(col("x")).as("sx"),
+          decSum(col("x"), 4).as("sx"),
           sum(r6(sqrt(col("x"))).cast(DecimalType(18, 6))).cast("double")
             .as("ssq"))
         .select(col("nk").as("nationkey"), col("n_cust"),
@@ -3771,12 +3618,11 @@ object CoreQueries {
     // treatment rank sums (exact half-integer arithmetic, decimal-
     // routed). χ²(4) 95% critical value for the reject flag.
     "friedman_test" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val k = 5
       val m = t(s, dir, "orders")
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("blk"),
           col("o_orderpriority").as("trt"))
-        .agg((decSum(col("o_totalprice")) / count(lit(1))).as("v"))
+        .agg((decSum(col("o_totalprice"), 4) / count(lit(1))).as("v"))
         .localCheckpoint(false) // reused: completeness filter + ranking
       val full = m.groupBy("blk").agg(count(lit(1)).as("kk"))
         .filter(col("kk") === k).select("blk")
@@ -3809,7 +3655,6 @@ object CoreQueries {
     // (1 ≤ l ≤ 3), the release-gate readout next to k_anonymity's
     // size sweep. One grouped pass at QI-class cardinality (bounded).
     "l_diversity" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val sens = when(col("c_acctbal") < 0.0, "debt")
         .when(col("c_acctbal") < 5000.0, "low").otherwise("high")
       val classes = t(s, dir, "customer")
@@ -3838,16 +3683,7 @@ object CoreQueries {
     // t8 = round(1e8/d), existing edges anti-joined out, per-probe
     // top-10 by (CN desc, RA desc).
     "link_pred_suite" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      val bo = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(collect_set(col("l_partkey")).as("items"))
-      val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-        .select(col("src"), explode(col("items")).as("dst"))
-        .filter(col("src") < col("dst"))
-      val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .partitionedCheckpoint(e0, shufflePartitions(s), Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
+      val e = coPurchaseEdges(s, dir, "src", canonical = true)
       val nbr0 = e.select(col("src").as("z"), col("dst").as("n"))
         .unionAll(e.select(col("dst").as("z"), col("src").as("n")))
       val nbr = org.apache.spark.sql.graftbridge.CheckpointBridge
@@ -3893,12 +3729,11 @@ object CoreQueries {
     // windows (prefix decimal sum, prefix max) and a deterministic
     // (drawdown desc, day) head.
     "max_drawdown" -> ((s, dir) => {
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val wc = Window.orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       t(s, dir, "lineitem")
         .groupBy(col("l_shipdate").cast("date").as("day"))
-        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")))
+        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
           .as("rev"))
         .withColumn("cum",
           sum(col("rev").cast(DecimalType(18, 4))).over(wc).cast("double"))
@@ -3918,13 +3753,11 @@ object CoreQueries {
     // fact-side join+rollup to brand cardinality (bounded), squared
     // shares 8dp-rounded into a decimal reduce.
     "hhi_concentration" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: Column) = floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val li = t(s, dir, "lineitem")
       val p = t(s, dir, "part").select("p_partkey", "p_brand")
       val b = li.join(p, li("l_partkey") === p("p_partkey"))
         .groupBy("p_brand")
-        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")))
+        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
           .as("rev"))
         .localCheckpoint(false) // reused: the total + the share terms
       val tot = broadcast(b.agg(
@@ -3949,7 +3782,6 @@ object CoreQueries {
     // window), never a single-task global window. Per-part revenue in
     // exact cent-longs so every prefix sum is integer-exact.
     "abc_analysis" -> ((s, dir) => {
-      def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val pr = t(s, dir, "lineitem")
         .groupBy(col("l_partkey").as("pk"))
         .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) *
@@ -3980,11 +3812,10 @@ object CoreQueries {
     // Day-cardinality deltas via one calendar lag; the quantile rank is
     // a calendar-sized ordered window; the tail mean is decimal-exact.
     "var_historical" -> ((s, dir) => {
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val wd = Window.orderBy("day")
       val d = t(s, dir, "lineitem")
         .groupBy(col("l_shipdate").cast("date").as("day"))
-        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")))
+        .agg(decSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
           .as("rev"))
         .withColumn("delta", col("rev") - lag("rev", 1).over(wd))
         .filter(col("delta").isNotNull)
@@ -4016,7 +3847,6 @@ object CoreQueries {
     // fact pass to brand cardinality; quantities sum exactly in double,
     // revenue decimal-routed; effects are brand-level closed algebra.
     "price_volume_mix" -> ((s, dir) => {
-      def r2(c: Column) = floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val li = t(s, dir, "lineitem")
         .withColumn("m", date_format(col("l_shipdate"), "yyyy-MM"))
       val bounds = broadcast(li.agg(min("m").as("m0"), max("m").as("m1")))
@@ -4031,9 +3861,9 @@ object CoreQueries {
             .otherwise(lit(0.0))).as("q0"),
           sum(when(col("m") === col("m1"), col("l_quantity"))
             .otherwise(lit(0.0))).as("q1"),
-          decSum(when(col("m") === col("m0"), amount).otherwise(lit(0.0)))
+          decSum(when(col("m") === col("m0"), amount).otherwise(lit(0.0)), 4)
             .as("r0"),
-          decSum(when(col("m") === col("m1"), amount).otherwise(lit(0.0)))
+          decSum(when(col("m") === col("m1"), amount).otherwise(lit(0.0)), 4)
             .as("r1"))
       val volRaw = when(col("q0") > 0.0,
         (col("q1") - col("q0")) * (col("r0") / col("q0")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
+import QueryHelpers.{decSum, docs, events, r6, roundHU}
 
 /** Round-11 additions: the remaining published curation / evaluation /
   * privacy families not yet in the catalog — multiple-testing control
@@ -22,27 +23,8 @@ import org.apache.spark.sql.expressions.Window
   */
 object CurationQueries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    graft.sources.ScanFanout.parquet(s, s"$dir/documents.parquet")
-
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/events.parquet")
-    val wide = df.withColumn("ts_us", graft.sources.EventTime.tsUs(df))
-    // fan out AFTER the ts_us projection so the schema-dependent column
-    // derivation is not re-resolved against the repartitioned child
-    graft.sources.ScanFanout.fanOut(wide, s"$dir/events.parquet")
-  }
-
   private def cust(s: SparkSession, dir: String): DataFrame =
     graft.sources.ScanFanout.parquet(s, s"$dir/customer.parquet")
-
-  private def roundHU(c: org.apache.spark.sql.Column,
-                      pow: Double): org.apache.spark.sql.Column =
-    floor(c * lit(pow) + lit(0.5)) / lit(pow)
-
-  private def decSum(c: org.apache.spark.sql.Column, scale: Int = 6) =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
 
   /** Abramowitz & Stegun 26.2.17 upper-tail normal approximation
     * (|error| < 7.5e-8): Q(z) = φ(z)·(b₁t + … + b₅t⁵), t = 1/(1+pz) for
@@ -559,7 +541,6 @@ object CurationQueries {
       val series = grid.join(counts, Seq("day"), "left")
         .select(col("day"), coalesce(col("x"), lit(0.0)).as("x"))
       val w7 = Window.orderBy("day").rowsBetween(-3, 3)
-      def r6(c: org.apache.spark.sql.Column) = roundHU(c, 1e6)
       val tr = series
         .withColumn("win_n", count(lit(1)).over(w7))
         .withColumn("trend",

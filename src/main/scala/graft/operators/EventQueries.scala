@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import QueryHelpers.{decSum, events, r2, r6, r8}
 
 /** Event-analytics queries over the `events` table: JSON prop extraction,
   * as-of/lag sequencing, and batch session-window analysis — the
@@ -38,16 +39,6 @@ object EventQueries {
     (0 until EwmaDepth).map(i => math.pow(0.5, i))
   private def ewmaWeightLit(i: Int): String =
     java.math.BigDecimal.valueOf(EwmaWeights(i)).toPlainString
-
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/events.parquet")
-    val wide = df.withColumn("ts_us", graft.sources.EventTime.tsUs(df))
-    graft.sources.ScanFanout.fanOut(wide, s"$dir/events.parquet")
-  }
-
-  private def decSum(c: org.apache.spark.sql.Column, scale: Int = 6) =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
 
   /** `decayed_user_value`'s decay rate (7-day half-life), computed ONCE
     * in Scala and interpolated as the identical double literal into the
@@ -190,8 +181,6 @@ object EventQueries {
     // silently REDUCES the result scale (38,8)→(38,6) while DuckDB
     // keeps 8dp — the engines then disagree below 1e-6.
     "nelson_aalen" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val pv = survivalSubjects(s, dir).groupBy("t_hr")
         .agg(sum("d").as("ev"), (count(lit(1)) - sum("d")).as("cen"))
         .localCheckpoint(false) // reused: the n_subj total + the prefix
@@ -705,8 +694,6 @@ object EventQueries {
     // same intermediates, so the double arithmetic matches op for op);
     // all the data-sized work is daily_acf's shared pipeline.
     "pacf_yule_walker" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val K = 7
       var df = dailyAcfFrame(s, dir)
         .groupBy()
@@ -746,8 +733,6 @@ object EventQueries {
     "cusum_changepoint" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val dayUs = 86400000000L
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val counts = events(s, dir)
         .groupBy(expr(s"ts_us div $dayUs").as("day"))
         .agg(decSum(col("value")).as("x"))
@@ -780,8 +765,6 @@ object EventQueries {
     "seasonal_decompose" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val dayUs = 86400000000L
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val counts = events(s, dir)
         .groupBy(expr(s"ts_us div $dayUs").as("day"))
         .agg(decSum(col("value")).as("x"))
@@ -830,8 +813,6 @@ object EventQueries {
         sum(lit(2L) * col("ca") * col("cum_cb") + col("ca") * col("cb")).as("u2"),
         sum((col("ca") + col("cb")) * (col("ca") + col("cb")) *
           (col("ca") + col("cb")) - (col("ca") + col("cb"))).as("tie3"))
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       agg
         .withColumn("nn", col("n_a") + col("n_b"))
         .withColumn("sigma2",
@@ -860,8 +841,6 @@ object EventQueries {
     "pettitt_test" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val dayUs = 86400000000L
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val counts = events(s, dir)
         .groupBy(expr(s"ts_us div $dayUs").as("day"))
         .agg(decSum(col("value")).as("x"))
@@ -898,10 +877,6 @@ object EventQueries {
     // (T,H)-sized joint (never the fact table); −p·ln p terms 8dp-round
     // into decimal sums.
     "event_mutual_info" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val joint = events(s, dir)
         .groupBy(col("event_type").as("t"),
           (expr("ts_us div 3600000000") % 24).as("h"))
@@ -936,10 +911,6 @@ object EventQueries {
     // Σ(t³−t) tie correction is exact longs. Groups stay DYNAMIC (no
     // pinned type list) — R_g accumulates group-keyed.
     "kruskal_wallis" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r2(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val e = events(s, dir)
       val pv2 = e.groupBy("value", "event_type").agg(count(lit(1)).as("c"))
       val pvt = e.groupBy("value").agg(count(lit(1)).as("ct"))
@@ -980,8 +951,6 @@ object EventQueries {
     // exclusivePrefix pass over the (time, group)-wide event/censor
     // counts.
     "log_rank_test" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val e = events(s, dir)
       val maxTs = broadcast(e.agg(max("ts_us").as("max_us")))
       val su = e.filter(col("event_type") === "signup")
@@ -1040,8 +1009,6 @@ object EventQueries {
     // algebra on exact longs, global argmin via top-1 TakeOrdered
     // (ties break on the smaller threshold).
     "decision_stump" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val pv = events(s, dir)
         .groupBy("value")
         .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -1079,8 +1046,6 @@ object EventQueries {
     // pass to a single row (counts are exact longs), pooled-variance z
     // as closed-form double algebra.
     "prop_ztest" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val g1 = (col("user_id") % 2 === 0).cast("long")
       val conv = (col("event_type") === "purchase").cast("long")
       val m = events(s, dir).agg(
@@ -1105,8 +1070,6 @@ object EventQueries {
     // sized matrix — SF-invariant joins, contribution sums routed
     // through DECIMAL(28,18) exactly as pagerank's rounds.
     "markov_stationary" -> ((s, dir) => {
-      def r8(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val (_, v) = markovChain(s, dir)
       v.select(col("st").as("event_type"), r8(col("v")).as("p_stationary"))
         .orderBy("event_type")
@@ -1122,10 +1085,6 @@ object EventQueries {
     // decimal row sums, π weighting the same before the final 1-row
     // reduce; branching-factor perplexity = exp(H).
     "markov_entropy_rate" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val (p, v) = markovChain(s, dir)
       val h = p
         .select(col("src"), r8(-(col("p") * log(col("p"))))
@@ -1148,8 +1107,6 @@ object EventQueries {
     // one raw-event lag pass; every round is a TYPE²-sized join with
     // DECIMAL(28,18)-routed contraction sums.
     "absorbing_time" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val (_, p) = markovP(s, dir)
       val q = p.filter(col("src") =!= "purchase" && col("dst") =!= "purchase")
       // The purchase-deleted matrix is TYPE²-sized — SF-INVARIANT (more
@@ -1178,8 +1135,6 @@ object EventQueries {
     // rollup carrying BOTH series, deviations 6dp-round into decimal
     // sums, the 15-lag × days self-join is calendar-sized.
     "daily_ccf" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val dayUs = 86400000000L
       val counts = events(s, dir)
         .groupBy(expr(s"ts_us div $dayUs").as("day"))
@@ -1224,10 +1179,6 @@ object EventQueries {
     // 6dp-rounded products (the daily_ccf spelling); the 2×2 normal
     // equations solve in closed form — no iteration, no matrix library.
     "granger_lag1" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r2(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       // degenerate-series guard (r9 ADVICE): a zero-variance series, a
       // perfect fit (sseu = 0), or < 4 days (n − 3 = 0) zeroes these
       // divisors — Spark would emit Infinity/NaN where DuckDB NULLs, a
@@ -1297,8 +1248,6 @@ object EventQueries {
     // per-row terms 6dp-round into exact decimal sums, so the decayed
     // total is merge-order-free. Top 100 users.
     "decayed_user_value" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val dayUs = 86400000000L
       val ev = events(s, dir)
         .select(col("user_id"), expr(s"ts_us div $dayUs").as("day"), col("value"))
@@ -1324,10 +1273,6 @@ object EventQueries {
     // event stream spans ~1 month). Day rollup → block maxima
     // (calendar-sized) → one moment reduce.
     "extreme_value_fit" -> ((s, dir) => {
-      def r2(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val dayUs = 86400000000L
       val gamma = 0.5772156649
       val pi10 = 3.1415926536
@@ -1360,8 +1305,6 @@ object EventQueries {
     // cumulative runs in a cohort-PARTITIONED window over offsets, and
     // missing offsets gapfill to carry the curve flat.
     "cohort_ltv" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val wkUs = 604800000000L
       val e = events(s, dir)
         .select(col("user_id"), expr(s"ts_us div $wkUs").as("wk"),
@@ -1399,8 +1342,6 @@ object EventQueries {
     // argument taken to all lags), never data-sized; sign sums are
     // exact longs and the variance is closed integer algebra.
     "mann_kendall" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val ser = dailySeries(s, dir)
       val pairs = ser.select(col("day").as("d1"), col("x").as("x1"))
         .join(ser.select(col("day").as("d2"), col("x").as("x2")),
@@ -1431,8 +1372,6 @@ object EventQueries {
     // decimal-exact OLS moments + 6dp-rounded residual terms, exactly
     // durbin_watson's determinism recipe.
     "dickey_fuller" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val w = Window.orderBy("day")
       val d = dailySeries(s, dir)
         .withColumn("z", lag("x", 1).over(w))
@@ -1468,8 +1407,6 @@ object EventQueries {
     // per stream before alarming on volume spikes. Type×calendar grid
     // (bounded), exact long count moments, closed-form sample variance.
     "fano_factor" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val dayUs = 86400000000L
       val counts = events(s, dir)
         .groupBy(col("event_type"), expr(s"ts_us div $dayUs").as("day"))
@@ -1506,8 +1443,6 @@ object EventQueries {
     // algebra under the house floor-round rule; degenerate cells
     // (any zero) null the ratio outputs instead of dividing by zero.
     "odds_ratio" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val u = events(s, dir)
         .groupBy("user_id")
         .agg(count(lit(1)).as("ne"),
@@ -1545,8 +1480,6 @@ object EventQueries {
     // identically in both engines. n−k = n_pairs(k) on the gapfilled
     // grid by construction; reject at the χ²(7) 95% critical value.
     "ljung_box" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val K = 7
       val aggs =
         (max(when(col("lag_days") === 1, col("n_pairs"))) + 1L).as("n") +:
@@ -1572,8 +1505,6 @@ object EventQueries {
     // the gapfilled grid, 6dp-rounded residuals so the lag difference
     // is bit-identical cross-engine, one calendar-sized ordered window.
     "durbin_watson" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val ser = dailySeries(s, dir)
       val m = broadcast(ser.agg(
         min("day").as("d0"), count(lit(1)).as("n"),
@@ -1611,8 +1542,6 @@ object EventQueries {
     // median) centering keeps the threshold decimal-exact cross-engine;
     // one calendar-sized lag window counts the run boundaries.
     "runs_test" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val ser = dailySeries(s, dir)
       val m = broadcast(ser.agg(
         (decSum(col("x")) / count(lit(1))).as("mu")))
@@ -1650,8 +1579,6 @@ object EventQueries {
     // pass computes both lags; per-day error terms 6dp-round before
     // the decimal sums; MAPE skips zero-revenue days by definition.
     "forecast_eval" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val w = Window.orderBy("day")
       val lagged = dailySeries(s, dir)
         .withColumn("f1", lag("x", 1).over(w))
@@ -1685,8 +1612,6 @@ object EventQueries {
     // squares on the day-cardinality rollup; the argmax day is the
     // deterministic (G desc, day) head.
     "grubbs_test" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val ser = dailySeries(s, dir)
       val m = broadcast(ser.agg(count(lit(1)).as("n"),
         (decSum(col("x")) / count(lit(1))).as("mu")))
@@ -1713,8 +1638,6 @@ object EventQueries {
     // running mean and for m_t (per-term 6dp rounds), a prefix MIN,
     // and the deterministic (PH desc, day) head as the alarm point.
     "page_hinkley" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val wc = Window.orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       dailySeries(s, dir)
@@ -1772,8 +1695,6 @@ object EventQueries {
     val dev = series.crossJoin(m)
       .select(col("day"), (col("n") - col("mu")).as("d"))
       .localCheckpoint(false) // both sides of the lag join + denominator
-    def r6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val den = broadcast(dev.agg(
       decSum(r6(col("d") * col("d"))).as("den")))
     dev.select(explode(sequence(lit(1L), lit(7L))).as("lag_days"),

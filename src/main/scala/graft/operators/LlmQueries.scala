@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.llm.{AllPairs, Dedup, Similarity, TextOps}
 import graft.llm.TextOps._
+import QueryHelpers.{docs, r2, r6, r8, roundHU}
 
 /** LLM-training-data-pipeline queries over the shared `documents` /
   * `embeddings` tables, each paired with DuckDB oracle SQL built from the
@@ -24,8 +25,6 @@ import graft.llm.TextOps._
   */
 object LlmQueries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    graft.sources.ScanFanout.parquet(s, s"$dir/documents.parquet")
   private def embs(s: SparkSession, dir: String): DataFrame =
     graft.sources.ScanFanout.parquet(s, s"$dir/embeddings.parquet")
 
@@ -294,17 +293,6 @@ object LlmQueries {
 
   private def sqlSampleHash(idExpr: String, buckets: Long): String =
     s"(($idExpr % $SampleHashPreMod) * $SampleHashMult) % $buckets"
-
-  /** Half-up rounding via floor(x·10^d + 0.5)/10^d — the bit-deterministic
-    * cross-engine form (Spark bround is half-even on the exact double
-    * value; DuckDB round is half-away after an x·10^d double product; the
-    * two genuinely diverge on near-tie values — hit at sf0.01 for
-    * bigram_logprob). floor is IEEE-exact on both engines for any sign,
-    * so this is safe for negative inputs too (ties go toward +∞).
-    */
-  private def roundHU(c: org.apache.spark.sql.Column,
-                      pow: Double): org.apache.spark.sql.Column =
-    floor(c * lit(pow) + lit(0.5)) / lit(pow)
 
   /** Per-source sampling rates (per-mille) for the mixture query — the
     * single source of truth both the Spark when-chain and the oracle's
@@ -1105,8 +1093,6 @@ object LlmQueries {
     // true_pairs exposes). Reuses near_dup_ensemble's keyed joins; one
     // aggregate row of algebra.
     "capture_recapture" -> ((s, dir) => {
-      def r2(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e2) + lit(0.5)) / lit(1e2)
       val d = docs(s, dir).filter(col("doc_id") < EvalSampleBound)
       val sigs = Dedup.minhashSignatures(d, "doc_id", "text")
         .localCheckpoint(false)
@@ -2058,9 +2044,10 @@ object LlmQueries {
         .drop("keep")
       // materialize the dedup survivors once: the block self-join consumes
       // them on BOTH sides and the anti-join once more — without a
-      // checkpoint the filter+agg+join chain replays 3×. LAZY (eager =
-      // false): materializes on the first action, so explain-only tooling
-      // (PlanAudit) never executes the pipeline just to print a plan.
+      // checkpoint the filter+agg+join chain replays 3×. eager = false
+      // defers only the cached rows: under AQE building the checkpoint
+      // still runs the upstream shuffle stages as Spark jobs, so even
+      // explain-only tooling (PlanAudit) executes part of the pipeline.
       // (At cluster scale a real curation run writes each stage to
       // storage anyway.)
       val survivors = kept.join(
@@ -2312,8 +2299,6 @@ object LlmQueries {
     // Counts are vocabulary²-keyed aggregations (map-side partials);
     // the prefix count joins on w₁.
     "bigram_logprob" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val bgs = docs(s, dir)
         .select(col("doc_id"), explode(bigrams(col("text"))).as("g"))
         .withColumn("w1", substring_index(col("g"), " ", 1))
@@ -2835,8 +2820,6 @@ object LlmQueries {
     // no per-depth explode.
     "rbo_rankings" -> ((s, dir) => {
       import graft.functions.VectorExpressions.vectorDot
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 10)
       val c = e.select(col("vec_id").as("neighbor_id"),
@@ -2878,8 +2861,6 @@ object LlmQueries {
     // scrolls before a relevant hit). One broadcast-query corpus scan;
     // misses surface as NULL rank / rr = 0, never dropped rows.
     "mrr_eval" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 10)
       val top = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
@@ -2907,10 +2888,6 @@ object LlmQueries {
     // query-PARTITIONED 10-row window; precision terms 8dp-round into
     // exact decimal sums.
     "map_eval" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 10)
       val top = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
@@ -3982,8 +3959,6 @@ object LlmQueries {
     // rounds are node-sized rank÷out-weight joins + one streamed pass
     // over the edge list with decimal-exact contribution sums.
     "textrank_keywords" -> ((s, dir) => {
-      def r8(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val W = 2
       val tp = docs(s, dir)
         .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("p", "w")))
@@ -4934,8 +4909,6 @@ object LlmQueries {
     // MIN is a tie-free pick); deterministic top-20.
     "rake_keywords" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      def r6(c: org.apache.spark.sql.Column) =
-        roundHU(c, 1e6)
       val stops = TextOps.Stopwords
       val tp = docs(s, dir)
         .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("p", "w")))
@@ -5084,8 +5057,6 @@ object LlmQueries {
     // pivot (no per-term shuffle); ln terms 6dp-round and sum in
     // fixed written order.
     "query_likelihood" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val terms = Seq("spark", "join", "window")
       val mu = 2000.0
       val d = docs(s, dir)
@@ -5129,8 +5100,6 @@ object LlmQueries {
     // one linear scan; the argmin is a vec-partitioned k-row window.
     "nearest_centroid_eval" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val e = embs(s, dir)
         .select(col("label"), col("vec_id"),
           Similarity.toDouble(col("embedding")).as("e"))
@@ -5167,10 +5136,6 @@ object LlmQueries {
     // sums, then a doc-partitioned (bounded) top-1 window.
     "extractive_summary" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      def r8(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
       val tf = docs(s, dir)
         .select(explode(tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("f"))
@@ -5206,8 +5171,6 @@ object LlmQueries {
     // integer row/column totals from ONE joined pass; the reject flag
     // uses the χ²(2) 95% critical value.
     "cochran_q" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val a = c4Frame(s, dir).select(col("doc_id"),
         when(col("keep"), 1L).otherwise(0L).as("f1"))
       val b = gopherFrame(s, dir).select(col("doc_id"),
@@ -5244,8 +5207,6 @@ object LlmQueries {
     // is closed algebra on exact per-source longs (Σf² routed through
     // DECIMAL(38,0)); ln(N) 6dp-rounded by house practice.
     "lexical_richness" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val tf = docs(s, dir)
         .select(col("source"), explode(tokens(col("text"))).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("f"))
@@ -5282,8 +5243,6 @@ object LlmQueries {
     // through DECIMAL(38,0).
     "roc_auc" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val g = scoredDocs(s, dir).groupBy("score")
         .agg(sum("y").as("n1s"), (count(lit(1)) - sum("y")).as("n0s"))
       val w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
@@ -5307,8 +5266,6 @@ object LlmQueries {
     // while calibration is garbage). One grouped pass to the constant
     // bin grid; Brier terms 6dp-round into decimal sums.
     "calibration_bins" -> ((s, dir) => {
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       scoredDocs(s, dir)
         .withColumn("bin", least(floor(col("score") * 20).cast("long"), lit(19L)))
         .groupBy("bin")
@@ -5334,8 +5291,6 @@ object LlmQueries {
     // grid and the 10-row tile rollup only.
     "lift_gains" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      def r6(c: org.apache.spark.sql.Column) =
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
       val g = scoredDocs(s, dir).groupBy("score")
         .agg(count(lit(1)).as("c"), sum("y").as("p"))
         .localCheckpoint(false) // grid-sized; reused: totals + the scan

@@ -1,18 +1,53 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
-// Temporary stage-level profiler for the graph-family constant-factor hunt.
+/** Steady-state profile of registered queries, one noop-sink action per
+  * iteration exactly as Bench runs them. Per iteration it prints wall
+  * time, executor run time (`run=`, summed task `executorRunTime`),
+  * executor CPU time (`cpu=`, summed task `executorCpuTime`), the
+  * scheduler's job and stage counts, and the stages with the most run
+  * time — the inputs a floor analysis needs. If run time summed over
+  * the cores is far below wall time, the query is bound by planning and
+  * scheduling, not by data.
+  *
+  * Usage: tools/run_prof.sh run:<query>[,<query>...]
+  * Environment: SPARK_GRAFT_SF_DIR (the table directory),
+  * SPARK_GRAFT_PROF_Q (the `run:` list), SPARK_GRAFT_PROF_ITERS
+  * (iterations per query, default 4).
+  */
 object Prof {
-  // cumulative executor task time, fed by the listener registered in main
-  val cpuNs = new java.util.concurrent.atomic.AtomicLong
-  private def time(name: String)(df: => DataFrame): Unit = {
-    val t0 = System.nanoTime()
-    val c0 = cpuNs.get
-    df.write.mode("overwrite").format("noop").save()
-    Thread.sleep(150) // let the listener drain
-    println(f"PROF $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s" +
-      f"  cpu=${(cpuNs.get - c0) / 1e9}%8.2f s")
+  private val TopStages = 5
+
+  /** Counters fed by the listener; `reset` between iterations. */
+  private object Counters extends SparkListener {
+    val jobs = new AtomicLong
+    val stages = new AtomicLong
+    val runMs = new AtomicLong
+    val cpuNs = new AtomicLong
+    val stageRunMs = new ConcurrentHashMap[Int, java.lang.Long]()
+    val stageNames = new ConcurrentHashMap[Int, String]()
+
+    def reset(): Unit = {
+      Seq(jobs, stages, runMs, cpuNs).foreach(_.set(0L))
+      stageRunMs.clear(); stageNames.clear()
+    }
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      stageNames.put(st.stageInfo.stageId, st.stageInfo.name.take(70))
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskMetrics != null) {
+        runMs.addAndGet(t.taskMetrics.executorRunTime)
+        cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
+        stageRunMs.merge(t.stageId, t.taskMetrics.executorRunTime, _ + _)
+      }
   }
 
   def main(args: Array[String]): Unit = {
@@ -24,639 +59,35 @@ object Prof {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val q = sys.env.getOrElse("SPARK_GRAFT_PROF_Q", "pagerank")
-    s.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            cpuNs.addAndGet(t.taskMetrics.executorRunTime * 1000000L)
-      })
+    val q = sys.env.getOrElse("SPARK_GRAFT_PROF_Q", "")
+    require(q.startsWith("run:"),
+      s"usage: SPARK_GRAFT_PROF_Q=run:<query>[,<query>...] (got '$q')")
+    val names = q.stripPrefix("run:").split(",").map(_.trim).filter(_.nonEmpty)
+    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val iters = sys.env.getOrElse("SPARK_GRAFT_PROF_ITERS", "4").toInt
+    s.sparkContext.addSparkListener(Counters)
     // warm-up: file indexes + codegen
     Seq("lineitem", "documents").foreach(t =>
       s.read.parquet(s"$dir/$t.parquet").count())
-    if (q.startsWith("run:")) {
-      // generic steady-state profile of REGISTERED queries, one action
-      // per iteration exactly as Bench runs them: wall + executor-cpu
-      // + scheduler job count — the inputs a floor analysis needs
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
-        })
-      q.stripPrefix("run:").split(",").map(_.trim).filter(_.nonEmpty)
-        .foreach { name =>
-          val fn = graft.SparkEntry.queries(name)
-          (1 to sys.env.getOrElse("SPARK_GRAFT_PROF_ITERS", "4").toInt).foreach { it =>
-            val t0 = System.nanoTime(); val c0 = cpuNs.get; val j0 = jobs.get
-            fn(s, dir).write.mode("overwrite").format("noop").save()
-            val wallS = (System.nanoTime() - t0) / 1e9 // before the drain sleep
-            Thread.sleep(200) // listener drain (cpu/jobs deltas only)
-            println(f"PROF $name%-22s [$it] $wallS%7.3f s" +
-              f"  cpu=${(cpuNs.get - c0) / 1e9}%7.2f s  jobs=${jobs.get - j0}")
-            s.sharedState.cacheManager.clearCache()
-            s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          }
-        }
-    } else if (q == "lpa_modeab") {
-      // A/B: the shipped mode() rounds (TypedImperativeAggregate →
-      // ObjectHashAggregate, per-partial serialized count maps) vs a
-      // packed-long two-agg spelling (count per (src,lbl) then a single
-      // primitive max over cnt<<40 | (2^40-1-lbl) — both phases stay in
-      // codegen'd HashAggregate; (max cnt, min lbl) tie rule preserved
-      // exactly). Same checkpointed edge list, 4 rounds, same result.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      val MAXL = (1L << 40) - 1
-      (1 to 3).foreach { it =>
-        val bo = s.read.parquet(s"$dir/lineitem.parquet")
-          .groupBy(col("l_orderkey"))
-          .agg(collect_set(col("l_partkey")).as("items"))
-        val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-          .select(col("src"), explode(col("items")).as("dst"))
-          .filter(col("src") =!= col("dst"))
-        val e = CheckpointBridge.partitionedCheckpoint(e0, 32, Seq("dst"),
-          Seq("dst", "src"), dedupSorted = true, declareStats = false)
-        e.limit(1).write.mode("overwrite").format("noop").save() // materialize
-        time(s"[$it] mode_4rounds") {
-          var lbl = e.groupBy(col("dst").as("node")).agg(min(col("src")).as("lbl"))
-          for (_ <- 2 to 4)
-            lbl = e.join(lbl.withColumnRenamed("node", "dst")
-                .hint("shuffle_hash"), "dst")
-              .groupBy(col("src").as("node"))
-              .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-          lbl
-        }
-        time(s"[$it] packed_4rounds") {
-          var lbl = e.groupBy(col("dst").as("node")).agg(min(col("src")).as("lbl"))
-          for (_ <- 2 to 4)
-            lbl = e.join(lbl.withColumnRenamed("node", "dst")
-                .hint("shuffle_hash"), "dst")
-              .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
-              .groupBy(col("src").as("node"))
-              .agg(max(shiftleft(col("cnt"), 40) +
-                (lit(MAXL) - col("lbl"))).as("pk"))
-              .select(col("node"), (lit(MAXL) - (col("pk") % lit(1L << 40)))
-                .as("lbl"))
-          lbl
-        }
-        // parity check once
-        if (it == 1) {
-          var a = e.groupBy(col("dst").as("node")).agg(min(col("src")).as("lbl"))
-          var b = a
-          for (_ <- 2 to 4) {
-            a = e.join(a.withColumnRenamed("node", "dst").hint("shuffle_hash"), "dst")
-              .groupBy(col("src").as("node"))
-              .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-            b = e.join(b.withColumnRenamed("node", "dst").hint("shuffle_hash"), "dst")
-              .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
-              .groupBy(col("src").as("node"))
-              .agg(max(shiftleft(col("cnt"), 40) + (lit(MAXL) - col("lbl"))).as("pk"))
-              .select(col("node"), (lit(MAXL) - (col("pk") % lit(1L << 40))).as("lbl"))
-          }
-          val diff = a.join(b.withColumnRenamed("lbl", "lbl2"), "node")
-            .filter(col("lbl") =!= col("lbl2")).count()
-          println(s"PROF [parity] mismatched labels: $diff")
-        }
-        s.sharedState.cacheManager.clearCache()
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    for (name <- names; it <- 1 to iters) {
+      Counters.reset()
+      val t0 = System.nanoTime()
+      graft.SparkEntry.queries(name)(s, dir)
+        .write.mode("overwrite").format("noop").save()
+      val wallS = (System.nanoTime() - t0) / 1e9 // before the drain sleep
+      Thread.sleep(200) // listener drain (counter deltas only)
+      println(f"PROF $name%-22s [$it] $wallS%7.3f s" +
+        f"  run=${Counters.runMs.get / 1e3}%7.2f s" +
+        f"  cpu=${Counters.cpuNs.get / 1e9}%7.2f s" +
+        f"  jobs=${Counters.jobs.get}  stages=${Counters.stages.get}")
+      Counters.stageRunMs.asScala.toSeq.sortBy(-_._2).take(TopStages).foreach {
+        case (id, ms) =>
+          val nm = Option(Counters.stageNames.get(id)).getOrElse("?")
+          println(f"PROF $name%-22s [$it]   stage $id%4d run=${ms / 1e3}%7.2f s  $nm")
       }
-    } else if (q == "allpairs_stages") {
-      import org.apache.spark.sql.functions._
-      val iters = 3
-      (1 to iters).foreach { i =>
-        val d = s.read.parquet(s"$dir/documents.parquet")
-          .filter(col("doc_id") < 1000)
-        val np = 32
-        time(s"[$i] tfidf_weights") {
-          graft.llm.AllPairs.tfidfUnitWeights(d, "doc_id", "text")
-        }
-        val u = org.apache.spark.sql.graftbridge.CheckpointBridge
-          .partitionedCheckpoint(
-            graft.llm.AllPairs.tfidfUnitWeights(d, "doc_id", "text"), np,
-            Seq("id"), Seq("id", "sdf", "token"))
-        time(s"[$i] ckpt_materialize") { u.select("id") }
-        import org.apache.spark.sql.expressions.Window
-        def r6(c: org.apache.spark.sql.Column) =
-          floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-        val maxw = u.groupBy("token").agg(max("u").as("maxw"))
-        val contrib = u.join(maxw, "token")
-          .withColumn("tail", sum(r6(col("u") * col("maxw"))
-            .cast("decimal(18,6)")).over(
-            Window.partitionBy("id").orderBy(col("sdf"), col("token"))
-              .rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-        val prefix = contrib.filter(col("tail").cast("double") >= lit(0.9))
-        time(s"[$i] prefix") { prefix }
-        val cand = prefix.select(col("token"), col("id").as("a_id"))
-          .repartition(np, col("token"))
-          .join(prefix.select(col("token"), col("id").as("b_id")), Seq("token"))
-          .filter(col("a_id") < col("b_id"))
-          .select("a_id", "b_id").distinct()
-          .repartition(np, col("a_id"))
-        time(s"[$i] candidates") { cand }
-        time(s"[$i] full") {
-          graft.llm.AllPairs.tfidfNearDupPairs(d, "doc_id", "text", 0.9)
-            .orderBy("a_id", "b_id")
-        }
-        println(s"PROF [$i] cand_count " + cand.count())
-      }
-    } else if (q == "cc_stages") {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      (1 to 3).foreach { i =>
-        val bo = s.read.parquet(s"$dir/lineitem.parquet")
-          .groupBy(col("l_orderkey"))
-          .agg(collect_set(col("l_partkey")).as("items"))
-        val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-          .select(col("src"), explode(col("items")).as("dst"))
-          .filter(col("src") < col("dst"))
-        val t0 = System.nanoTime()
-        val e = CheckpointBridge.partitionedCheckpoint(e0, 32, Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
-        time(s"[$i] edge_ckpt") { e.limit(1) }
-        val dk = e.select(explode(array(col("src"), col("dst"))).as("n"))
-          .groupBy("n").agg(count(lit(1)).as("d")).localCheckpoint(false)
-        time(s"[$i] degrees") { dk.limit(1) }
-        val oriented0 = e
-          .join(dk.select(col("n").as("src"), col("d").as("ds")), "src")
-          .join(dk.select(col("n").as("dst"), col("d").as("dd")), "dst")
-          .select(when(col("ds") < col("dd") ||
-              (col("ds") === col("dd") && col("src") < col("dst")),
-              struct(col("src").as("u"), col("dst").as("v"), col("dd").as("dv")))
-            .otherwise(struct(col("dst").as("u"), col("src").as("v"),
-              col("ds").as("dv"))).as("o"))
-          .select(col("o.u").as("u"), col("o.v").as("v"), col("o.dv").as("dv"))
-        val oriented = CheckpointBridge.partitionedCheckpoint(oriented0, 32,
-          Seq("u"), Seq("u"), declareStats = false)
-        time(s"[$i] oriented_ckpt") { oriented.limit(1) }
-        val tb = System.nanoTime()
-        val edgeBloom = s.sparkContext.broadcast(
-          oriented.select(xxhash64(least(col("u"), col("v")),
-            greatest(col("u"), col("v"))).as("k"))
-            .stat.bloomFilter("k", 4000000L, 1L << 23))
-        println(f"PROF [$i] bloom_build ${(System.nanoTime() - tb) / 1e9}%8.3f s")
-        val adj = oriented.groupBy(col("u"))
-          .agg(sort_array(collect_list(struct(col("dv"), col("v")))).as("nbrs"))
-        val wed = adj.select(col("u"), explode(graft.functions.WedgeClosures
-            .wedgeClosures(edgeBloom, col("nbrs"))).as("w"))
-          .select(col("u"), col("w.a").as("a"), col("w.b").as("b"))
-        time(s"[$i] wedges_kernel") { wed }
-        val tris = wed
-          .join(oriented.select(col("u").as("a"), col("v").as("b"))
-            .hint("shuffle_hash"), Seq("a", "b"))
-          .select(col("u"), col("a"), col("b"))
-        time(s"[$i] tris_confirm") { tris }
-        val tri = tris.select(explode(array(col("u"), col("a"), col("b"))).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("n_triangles"))
-        time(s"[$i] tri_counts") { tri }
-        println(f"PROF [$i] total_from_ckpt ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      }
-    } else if (q == "lpa_stages") {
-      // conductance/modularity breakdown: edge build, per-round LPA
-      // cost, and the scoring tail — which side of the carried <=3s ask
-      // actually needs work
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      (1 to 3).foreach { it =>
-        val t00 = System.nanoTime()
-        val bo = s.read.parquet(s"$dir/lineitem.parquet")
-          .groupBy(col("l_orderkey"))
-          .agg(collect_set(col("l_partkey")).as("items"))
-        val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-          .select(col("src"), explode(col("items")).as("dst"))
-          .filter(col("src") =!= col("dst"))
-        val e = CheckpointBridge.partitionedCheckpoint(e0, 32, Seq("dst"),
-          Seq("dst", "src"), dedupSorted = true, declareStats = false)
-        time(s"[$it] edge_ckpt") { e.limit(1) }
-        var lbl = e.groupBy(col("src").as("node"))
-          .agg(mode(col("dst"), deterministic = true).as("lbl"))
-        time(s"[$it] lpa_round1") { lbl }
-        for (i <- 2 to 4) {
-          lbl = e.join(lbl.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(col("src").as("node"))
-            .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-          time(s"[$it] lpa_round$i") { lbl }
-        }
-        val lab = lbl.localCheckpoint(false)
-        time(s"[$it] lab_ckpt") { lab.limit(1) }
-        val nbr = e
-          .join(lab.withColumnRenamed("node", "dst")
-            .withColumnRenamed("lbl", "lb"), "dst")
-          .groupBy(col("src"), col("lb")).agg(count(lit(1)).as("cnt"))
-          .join(lab.withColumnRenamed("node", "src")
-            .withColumnRenamed("lbl", "la"), "src")
-        val vol = nbr.groupBy(col("la").as("c"))
-          .agg(countDistinct(col("src")).as("n_nodes"), sum("cnt").as("vv"),
-            sum(when(col("la") =!= col("lb"), col("cnt"))
-              .otherwise(lit(0L))).as("ce"))
-        time(s"[$it] score_tail") { vol }
-        println(f"PROF [$it] lpa_total ${(System.nanoTime() - t00) / 1e9}%8.3f s")
-        s.sharedState.cacheManager.clearCache()
-      }
-    } else if (q == "lpa_shapes") {
-      // candidate round shapes for the LPA family: (A) shipped
-      // edge-join + mode, (B) adjacency-array join + in-stage explode +
-      // mode, (C) edge-join with shuffle_hash hint
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      (1 to 3).foreach { it =>
-        val bo = s.read.parquet(s"$dir/lineitem.parquet")
-          .groupBy(col("l_orderkey"))
-          .agg(collect_set(col("l_partkey")).as("items"))
-        val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-          .select(col("src"), explode(col("items")).as("dst"))
-          .filter(col("src") =!= col("dst"))
-        val e = CheckpointBridge.partitionedCheckpoint(e0, 32, Seq("dst"),
-          Seq("dst", "src"), dedupSorted = true, declareStats = false)
-        time(s"[$it] edge_ckpt") { e.limit(1) }
-        // (A) shipped: 4 rounds of edge-join + mode
-        val tA = System.nanoTime()
-        var lblA = e.groupBy(col("src").as("node"))
-          .agg(mode(col("dst"), deterministic = true).as("lbl"))
-        for (_ <- 2 to 4)
-          lblA = e.join(lblA.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(col("src").as("node"))
-            .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-        lblA.write.mode("overwrite").format("noop").save()
-        println(f"PROF [$it] shape_A_edge_join ${(System.nanoTime() - tA) / 1e9}%8.3f s")
-        // (B) adjacency arrays: one exchange-free collect_list off the
-        // checkpoint, then node-sized joins + in-stage explode per round
-        val tB = System.nanoTime()
-        val adj = CheckpointBridge.partitionedCheckpoint(
-          e.groupBy(col("dst")).agg(collect_list(col("src")).as("outs")),
-          32, Seq("dst"), Seq("dst"), declareStats = false)
-        var lblB = e.groupBy(col("src").as("node"))
-          .agg(mode(col("dst"), deterministic = true).as("lbl"))
-        for (_ <- 2 to 4)
-          lblB = adj.join(lblB.withColumnRenamed("node", "dst"), "dst")
-            .select(explode(col("outs")).as("node"), col("lbl"))
-            .groupBy("node")
-            .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-        lblB.write.mode("overwrite").format("noop").save()
-        println(f"PROF [$it] shape_B_adjacency ${(System.nanoTime() - tB) / 1e9}%8.3f s")
-        // (C) shipped join but hash join instead of SMJ
-        val tC = System.nanoTime()
-        var lblC = e.groupBy(col("src").as("node"))
-          .agg(mode(col("dst"), deterministic = true).as("lbl"))
-        for (_ <- 2 to 4)
-          lblC = e.join(lblC.withColumnRenamed("node", "dst")
-              .hint("shuffle_hash"), "dst")
-            .groupBy(col("src").as("node"))
-            .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-        lblC.write.mode("overwrite").format("noop").save()
-        println(f"PROF [$it] shape_C_shuffle_hash ${(System.nanoTime() - tC) / 1e9}%8.3f s")
-        // (D) adjacency + shuffle_hash on the label side
-        val tD = System.nanoTime()
-        val adjD = CheckpointBridge.partitionedCheckpoint(
-          e.groupBy(col("dst")).agg(collect_list(col("src")).as("outs")),
-          32, Seq("dst"), Seq("dst"), declareStats = false)
-        var lblD = e.groupBy(col("src").as("node"))
-          .agg(mode(col("dst"), deterministic = true).as("lbl"))
-        for (_ <- 2 to 4)
-          lblD = adjD.join(lblD.withColumnRenamed("node", "dst")
-              .hint("shuffle_hash"), "dst")
-            .select(explode(col("outs")).as("node"), col("lbl"))
-            .groupBy("node")
-            .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-        lblD.write.mode("overwrite").format("noop").save()
-        println(f"PROF [$it] shape_D_adj_shj ${(System.nanoTime() - tD) / 1e9}%8.3f s")
-        // (E) = C + symmetric round 1: groupBy(dst) is exchange-free off
-        // the checkpoint and equals groupBy(src) on a symmetric edge set
-        val tE = System.nanoTime()
-        var lblE = e.groupBy(col("dst").as("node"))
-          .agg(mode(col("src"), deterministic = true).as("lbl"))
-        for (_ <- 2 to 4)
-          lblE = e.join(lblE.withColumnRenamed("node", "dst")
-              .hint("shuffle_hash"), "dst")
-            .groupBy(col("src").as("node"))
-            .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-        lblE.write.mode("overwrite").format("noop").save()
-        println(f"PROF [$it] shape_E_sym_r1_shj ${(System.nanoTime() - tE) / 1e9}%8.3f s")
-        s.sharedState.cacheManager.clearCache()
-      }
-    } else if (q == "cond_ab") {
-      // conductance scoring tail A/B: countDistinct over node×label rows
-      // vs a node-sized label rollup join
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      (1 to 3).foreach { it =>
-        val bo = s.read.parquet(s"$dir/lineitem.parquet")
-          .groupBy(col("l_orderkey"))
-          .agg(collect_set(col("l_partkey")).as("items"))
-        val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-          .select(col("src"), explode(col("items")).as("dst"))
-          .filter(col("src") =!= col("dst"))
-        val e = CheckpointBridge.partitionedCheckpoint(e0, 32, Seq("dst"),
-          Seq("dst", "src"), dedupSorted = true, declareStats = false)
-        var lbl = e.groupBy(col("dst").as("node"))
-          .agg(mode(col("src"), deterministic = true).as("lbl"))
-        for (_ <- 2 to 4)
-          lbl = e.join(lbl.withColumnRenamed("node", "dst")
-              .hint("shuffle_hash"), "dst")
-            .groupBy(col("src").as("node"))
-            .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-        val lab = lbl.localCheckpoint(false)
-        time(s"[$it] lab") { lab.limit(1) }
-        def nbrOf = e
-          .join(lab.withColumnRenamed("node", "dst")
-            .withColumnRenamed("lbl", "lb").hint("shuffle_hash"), "dst")
-          .groupBy(col("src"), col("lb")).agg(count(lit(1)).as("cnt"))
-          .join(lab.withColumnRenamed("node", "src")
-            .withColumnRenamed("lbl", "la").hint("shuffle_hash"), "src")
-        time(s"[$it] A_countDistinct") {
-          nbrOf.groupBy(col("la").as("c"))
-            .agg(countDistinct(col("src")).as("n_nodes"),
-              sum("cnt").as("vv"),
-              sum(when(col("la") =!= col("lb"), col("cnt"))
-                .otherwise(lit(0L))).as("ce"))
-        }
-        time(s"[$it] B_nodes_join") {
-          nbrOf.groupBy(col("la").as("c"))
-            .agg(sum("cnt").as("vv"),
-              sum(when(col("la") =!= col("lb"), col("cnt"))
-                .otherwise(lit(0L))).as("ce"))
-            .join(lab.groupBy(col("lbl").as("c"))
-              .agg(count(lit(1)).as("n_nodes")), "c")
-        }
-        s.sharedState.cacheManager.clearCache()
-      }
-    } else if (q == "truss_lazy") {
-      // EXPERIMENT: the shipped k_truss shape minus (a) the `oriented`
-      // bridge checkpoint (it has exactly one consumer — the adjacency
-      // groupBy — so the materialization bought nothing) and (b) ALL
-      // per-round eager localCheckpoints: rounds stay lazy DataFrames
-      // and the whole drop cascade runs as ONE action, letting
-      // ReuseExchange share the repeated subtrees instead of paying a
-      // scheduler round-trip per materialization.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      import org.apache.spark.sql.DataFrame
-      (1 to 3).foreach { it =>
-        val t00 = System.nanoTime(); val c00 = cpuNs.get
-        val bo = s.read.parquet(s"$dir/lineitem.parquet")
-          .groupBy(col("l_orderkey"))
-          .agg(collect_set(col("l_partkey")).as("items"))
-        val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-          .select(col("src"), explode(col("items")).as("dst"))
-          .filter(col("src") < col("dst"))
-        val e = CheckpointBridge.partitionedCheckpoint(e0, 32, Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
-        val edgeBloom = s.sparkContext.broadcast(
-          e.select(xxhash64(col("src"), col("dst")).as("k"))
-            .stat.bloomFilter("k", 4000000L, 1L << 24))
-        val dk = e.select(explode(array(col("src"), col("dst"))).as("n"))
-          .groupBy("n").agg(count(lit(1)).as("d"))
-        val oriented = e
-          .join(dk.select(col("n").as("src"), col("d").as("ds")), "src")
-          .join(dk.select(col("n").as("dst"), col("d").as("dd")), "dst")
-          .select(when(col("ds") < col("dd") ||
-              (col("ds") === col("dd") && col("src") < col("dst")),
-              struct(col("src").as("u"), col("dst").as("v"), col("dd").as("dv")))
-            .otherwise(struct(col("dst").as("u"), col("src").as("v"),
-              col("ds").as("dv"))).as("o"))
-          .select(col("o.u").as("u"), col("o.v").as("v"), col("o.dv").as("dv"))
-        val adjA = oriented.groupBy(col("u"))
-          .agg(sort_array(collect_list(struct(col("dv"), col("v")))).as("nbrs"),
-            collect_list(col("v")).as("vs"))
-          .localCheckpoint(false)
-        val wed = adjA
-          .select(col("u"), explode(graft.functions.WedgeClosures
-            .wedgeClosures(edgeBloom, col("nbrs"))).as("w"))
-          .select(col("u"), col("w.a").as("a"), col("w.b").as("b"))
-        val tri0 = wed
-          .join(adjA.select(col("u").as("a"), col("vs")).hint("shuffle_hash"),
-            Seq("a"))
-          .filter(array_contains(col("vs"), col("b")))
-          .select(col("u"), col("a"), col("b"))
-        def edgesOf(t: DataFrame): DataFrame = t
-          .select(col("u"), col("a"), col("b"), explode(array(
-            struct(col("u").as("eu"), col("a").as("ev")),
-            struct(col("u").as("eu"), col("b").as("ev")),
-            struct(col("a").as("eu"), col("b").as("ev")))).as("t"))
-          .select(col("u"), col("a"), col("b"),
-            col("t.eu").as("eu"), col("t.ev").as("ev"))
-        val triByEdge = CheckpointBridge.partitionedCheckpoint(
-          edgesOf(tri0), 32, Seq("eu", "ev"), declareStats = false)
-        val base = CheckpointBridge.partitionedCheckpoint(
-          triByEdge.groupBy(col("eu").as("u"), col("ev").as("v"))
-            .agg(count(lit(1)).as("sup")),
-          32, Seq("u", "v"), declareStats = false)
-        var destroyedSoFar: Option[DataFrame] = None
-        var touchedPrev: Option[DataFrame] = None
-        def dropsOf(touched: DataFrame, prev: Option[DataFrame]): DataFrame = {
-          val withPrev = prev.fold(touched.withColumn("d0", lit(0L)))(p =>
-            touched.join(p.select(col("u"), col("v"), col("dec").as("d0")),
-              Seq("u", "v"), "left"))
-          withPrev
-            .filter(col("sup") - coalesce(col("d0"), lit(0L)) >= 2 &&
-              col("sup") - col("dec") < 2)
-            .select(col("u"), col("v"))
-        }
-        var lastDrops = base.filter(col("sup") < 2).select(col("u"), col("v"))
-        val n1 = base.filter(col("sup") >= 2)
-          .agg(count(lit(1)).as("n_edges"))
-        var dropCounts: Seq[DataFrame] = Nil
-        val rounds = (1 to 3).map { r =>
-          if (r > 1) {
-            val hit = triByEdge
-              .join(lastDrops.select(col("u").as("eu"), col("v").as("ev"))
-                .hint("shuffle_hash"), Seq("eu", "ev"), "left_semi")
-              .select("u", "a", "b").dropDuplicates("u", "a", "b")
-            val nd = destroyedSoFar.fold(hit)(d =>
-              hit.join(d, Seq("u", "a", "b"), "left_anti"))
-            val dec = edgesOf(nd)
-              .groupBy(col("eu").as("u"), col("ev").as("v"))
-              .agg(count(lit(1)).as("dec"))
-            val decCum = touchedPrev.fold(dec)(p =>
-              p.select(col("u"), col("v"), col("dec").as("d0"))
-                .join(dec, Seq("u", "v"), "full_outer")
-                .select(col("u"), col("v"),
-                  (coalesce(col("d0"), lit(0L)) +
-                    coalesce(col("dec"), lit(0L))).as("dec")))
-            val touched = base.join(decCum.hint("shuffle_hash"), Seq("u", "v"))
-            lastDrops = dropsOf(touched, touchedPrev)
-            dropCounts = dropCounts :+ lastDrops
-              .agg(count(lit(1)).as(s"nd$r"))
-            touchedPrev = Some(touched)
-            destroyedSoFar = Some(destroyedSoFar.fold(nd)(_ union nd))
-          }
-          dropCounts.foldLeft(n1)((acc, dc) => acc.crossJoin(dc))
-            .select(lit(r.toLong).as("round"),
-              (2 to r).foldLeft(col("n_edges"))((c, j) =>
-                c - col(s"nd$j")).as("n_edges"))
-        }
-        time(s"[$it] truss_lazy_all") {
-          rounds.reduce(_ unionAll _).orderBy("round")
-        }
-        println(f"PROF [$it] truss_lazy_total ${(System.nanoTime() - t00) / 1e9}%8.3f s  cpu=${(cpuNs.get - c00) / 1e9}%8.2f s")
-        s.sharedState.cacheManager.clearCache()
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-    } else if (q == "truss_stages") {
-      // mirrors the SHIPPED k_truss shape (r11: merged adjacency pass,
-      // unsorted index/support checkpoints, drop-ledger rounds) with
-      // per-stage wall + executor-cpu timing
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.graftbridge.CheckpointBridge
-      import org.apache.spark.sql.DataFrame
-      (1 to 3).foreach { it =>
-        val t00 = System.nanoTime()
-        val bo = s.read.parquet(s"$dir/lineitem.parquet")
-          .groupBy(col("l_orderkey"))
-          .agg(collect_set(col("l_partkey")).as("items"))
-        val e0 = bo.select(explode(col("items")).as("src"), col("items"))
-          .select(col("src"), explode(col("items")).as("dst"))
-          .filter(col("src") < col("dst"))
-        val e = CheckpointBridge.partitionedCheckpoint(e0, 32, Seq("src"),
-          Seq("src", "dst"), dedupSorted = true, declareStats = false)
-        time(s"[$it] edge_ckpt") { e.limit(1) }
-        val tb0 = System.nanoTime(); val cb0 = cpuNs.get
-        val edgeBloom = s.sparkContext.broadcast(
-          e.select(xxhash64(col("src"), col("dst")).as("k"))
-            .stat.bloomFilter("k", 4000000L, 1L << 24))
-        println(f"PROF [$it] bloom_build ${(System.nanoTime() - tb0) / 1e9}%8.3f s  cpu=${(cpuNs.get - cb0) / 1e9}%8.2f s")
-        val dk = e.select(explode(array(col("src"), col("dst"))).as("n"))
-          .groupBy("n").agg(count(lit(1)).as("d"))
-        val oriented0 = e
-          .join(dk.select(col("n").as("src"), col("d").as("ds")), "src")
-          .join(dk.select(col("n").as("dst"), col("d").as("dd")), "dst")
-          .select(when(col("ds") < col("dd") ||
-              (col("ds") === col("dd") && col("src") < col("dst")),
-              struct(col("src").as("u"), col("dst").as("v"), col("dd").as("dv")))
-            .otherwise(struct(col("dst").as("u"), col("src").as("v"),
-              col("ds").as("dv"))).as("o"))
-          .select(col("o.u").as("u"), col("o.v").as("v"), col("o.dv").as("dv"))
-        val oriented = CheckpointBridge.partitionedCheckpoint(oriented0, 32,
-          Seq("u"), Seq("u"), declareStats = false)
-        time(s"[$it] oriented_ckpt") { oriented.limit(1) }
-        val adjA = oriented.groupBy(col("u"))
-          .agg(sort_array(collect_list(struct(col("dv"), col("v")))).as("nbrs"),
-            collect_list(col("v")).as("vs"))
-          .localCheckpoint(false)
-        time(s"[$it] adjA_ckpt") { adjA.limit(1) }
-        val wed = adjA
-          .select(col("u"), explode(graft.functions.WedgeClosures
-            .wedgeClosures(edgeBloom, col("nbrs"))).as("w"))
-          .select(col("u"), col("w.a").as("a"), col("w.b").as("b"))
-        time(s"[$it] wedge_only") { wed }
-        val tri0 = wed
-          .join(adjA.select(col("u").as("a"), col("vs")).hint("shuffle_hash"),
-            Seq("a"))
-          .filter(array_contains(col("vs"), col("b")))
-          .select(col("u"), col("a"), col("b"))
-        def edgesOf(t: DataFrame): DataFrame = t
-          .select(col("u"), col("a"), col("b"), explode(array(
-            struct(col("u").as("eu"), col("a").as("ev")),
-            struct(col("u").as("eu"), col("b").as("ev")),
-            struct(col("a").as("eu"), col("b").as("ev")))).as("t"))
-          .select(col("u"), col("a"), col("b"),
-            col("t.eu").as("eu"), col("t.ev").as("ev"))
-        val triByEdge = CheckpointBridge.partitionedCheckpoint(
-          edgesOf(tri0), 32, Seq("eu", "ev"), declareStats = false)
-        time(s"[$it] triByEdge_ckpt") { triByEdge.limit(1) }
-        val base = CheckpointBridge.partitionedCheckpoint(
-          triByEdge.groupBy(col("eu").as("u"), col("ev").as("v"))
-            .agg(count(lit(1)).as("sup")),
-          32, Seq("u", "v"), declareStats = false)
-        time(s"[$it] base_ckpt") { base.limit(1) }
-        var destroyedSoFar: Option[DataFrame] = None
-        var touchedPrev: Option[DataFrame] = None
-        def dropsOf(touched: DataFrame, prev: Option[DataFrame]): DataFrame = {
-          val withPrev = prev.fold(touched.withColumn("d0", lit(0L)))(p =>
-            touched.join(p.select(col("u"), col("v"), col("dec").as("d0")),
-              Seq("u", "v"), "left"))
-          withPrev
-            .filter(col("sup") - coalesce(col("d0"), lit(0L)) >= 2 &&
-              col("sup") - col("dec") < 2)
-            .select(col("u"), col("v"))
-        }
-        var lastDrops = base.filter(col("sup") < 2).select(col("u"), col("v"))
-        val n1 = base.filter(col("sup") >= 2)
-          .agg(count(lit(1)).as("n_edges")).localCheckpoint(false)
-        time(s"[$it] n1") { n1 }
-        (2 to 3).foreach { r =>
-          val tr0 = System.nanoTime(); val cr0 = cpuNs.get
-          val hit = triByEdge
-            .join(lastDrops.select(col("u").as("eu"), col("v").as("ev"))
-              .hint("shuffle_hash"), Seq("eu", "ev"), "left_semi")
-            .select("u", "a", "b").dropDuplicates("u", "a", "b")
-          val nd = destroyedSoFar.fold(hit)(d =>
-              hit.join(d, Seq("u", "a", "b"), "left_anti"))
-            .localCheckpoint(false)
-          time(s"[$it:r$r] nd") { nd }
-          val dec = edgesOf(nd)
-            .groupBy(col("eu").as("u"), col("ev").as("v"))
-            .agg(count(lit(1)).as("dec"))
-          val decCum = touchedPrev.fold(dec)(p =>
-            p.select(col("u"), col("v"), col("dec").as("d0"))
-              .join(dec, Seq("u", "v"), "full_outer")
-              .select(col("u"), col("v"),
-                (coalesce(col("d0"), lit(0L)) +
-                  coalesce(col("dec"), lit(0L))).as("dec")))
-          val touched = base.join(decCum.hint("shuffle_hash"), Seq("u", "v"))
-            .localCheckpoint(false)
-          time(s"[$it:r$r] touched") { touched }
-          val dcount = dropsOf(touched, touchedPrev)
-            .agg(count(lit(1)).as(s"nd$r")).localCheckpoint(false)
-          time(s"[$it:r$r] dropcount") { dcount }
-          lastDrops = dropsOf(touched, touchedPrev)
-          touchedPrev = Some(touched)
-          destroyedSoFar = Some(destroyedSoFar.fold(nd)(_ union nd))
-          println(f"PROF [$it:r$r] round_total ${(System.nanoTime() - tr0) / 1e9}%8.3f s  cpu=${(cpuNs.get - cr0) / 1e9}%8.2f s")
-        }
-        println(f"PROF [$it] truss_total ${(System.nanoTime() - t00) / 1e9}%8.3f s")
-        s.sharedState.cacheManager.clearCache()
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-    } else if (q.endsWith(":jobs")) {
-      // wall vs executor accounting: if Σ task time / cores << wall,
-      // the query is driver-bound (planning/scheduling), not data-bound
-      val name = q.stripSuffix(":jobs")
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerStageCompleted}
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val taskNs = new java.util.concurrent.atomic.AtomicLong
-      val perStage = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-      val stageNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet()
-          stageNames.put(st.stageInfo.stageId, st.stageInfo.name.take(70))
-        }
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) {
-            taskNs.addAndGet(t.taskMetrics.executorRunTime * 1000000L)
-            perStage.merge(t.stageId,
-              (s"${t.stageId}", t.taskMetrics.executorRunTime),
-              (a, b) => (a._1, a._2 + b._2))
-          }
-      })
-      (1 to 3).foreach { it =>
-        jobs.set(0); stages.set(0); taskNs.set(0)
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(s, dir)
-          .write.mode("overwrite").format("noop").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // let listener drain
-        println(f"PROF [$it] $name wall=$wall%.3f s jobs=${jobs.get} " +
-          f"stages=${stages.get} taskSum=${taskNs.get / 1e9}%.2f s " +
-          f"(=${taskNs.get / 1e9 / 32}%.3f s at 32x)")
-        import scala.jdk.CollectionConverters._
-        perStage.asScala.toSeq.sortBy(-_._2._2).take(10).foreach {
-          case (id, (_, ms)) =>
-            val nm = Option(stageNames.get(id)).getOrElse("?")
-            println(f"PROF [$it]   stage $id%4d ${ms / 1e3}%8.2f cpu-s  $nm")
-        }
-        perStage.clear(); stageNames.clear()
-      }
-    } else {
-      val df = graft.SparkEntry.queries(q)(s, dir)
-      df.write.mode("overwrite").format("noop").save()
-      println(df.queryExecution.executedPlan.toString.take(12000))
+      s.sharedState.cacheManager.clearCache()
+      s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     s.stop()
   }

@@ -98,7 +98,7 @@ object ScanFanout {
     val s = df.sparkSession
     val decision: Option[Int] =
       try {
-        val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
+        val parts = graft.operators.QueryHelpers.shufflePartitions(s)
         val splitBytes =
           try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
             s.conf.get("spark.sql.files.maxPartitionBytes"))
