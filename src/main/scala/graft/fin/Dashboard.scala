@@ -81,10 +81,11 @@ object Dashboard {
     val month = cur.month
     val kpi = Transform.addMarginCols(cur.kpi)
 
-    // each series feeds the charts, the HTML tables AND the CSVs — persist
-    // the (display-sized) results so the aggregations run once, not thrice
-    val trend = kpiTrend(kpi).persist()
-    val topExpense = topExpenseAccounts(cur.factM, cur.dimAccounts).persist()
+    // each series feeds the charts, the HTML tables AND the CSVs — collect
+    // the (display-sized) results once and serve every consumer from the
+    // driver, so each aggregation runs once
+    val trend = Io.onDriver(kpiTrend(kpi))
+    val topExpense = Io.onDriver(topExpenseAccounts(cur.factM, cur.dimAccounts))
 
     // chart rendering (reference: build_dashboard.py:96-122 px.line ×2,
     // :162-166 px.bar) — same figures, inline SVG instead of plotly JS
@@ -141,8 +142,6 @@ object Dashboard {
       Seq("Revenue", "gross_profit", "operating_profit").filter(kpi.columns.contains)
     Io.writeCsv(trend.select(trendCols.map(col): _*), s"$seriesDir/revenue_trend.csv")
     Io.writeCsv(topExpense, s"$seriesDir/top_expense.csv")
-    trend.unpersist()
-    topExpense.unpersist()
 
     DashResult(outHtml, seriesDir, month)
   }

@@ -2,6 +2,7 @@ package graft.fin
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.sources.Io
 
 /** The monthly-close pipeline — `runMonth`
@@ -10,10 +11,13 @@ import graft.sources.Io
   * Steps 2-10 of the reference DAG become lazy Catalyst plans with two
   * deliberate barriers: the DQ gate (exceptions must materialize before the
   * pipeline may proceed — pipeline.py:129-162) and the final writes. The gate
-  * aggregates severity counts on the executors and collects only two longs.
-  * Other jobs run before the writes too: the row index of the DQ copies
-  * collects per-split row counts (one job per raw dataset, five in all),
-  * and `Transform.addFxAmountBase` collects its missing-rate sample.
+  * aggregates the per-dataset summary on the executors and collects its
+  * five rows, which both decide the gate and are written as
+  * `dq_summary.csv`. Other jobs run before the writes too: the chart of
+  * accounts is collected once, the row index of the DQ copies collects
+  * per-split row counts (one job for the five raw datasets), and
+  * `Transform.addFxAmountBase` collects its missing-rate sample. No read
+  * runs a schema-inference job (see `Io`).
   */
 object Pipeline {
 
@@ -42,10 +46,13 @@ object Pipeline {
     val mode = Option(failOn).getOrElse("ERROR").toUpperCase.trim
     require(FailOnModes.contains(mode), "fail_on must be one of: ERROR, WARN, NEVER")
 
-    // reference dim + key set as a DataFrame (never a driver-side set — J3)
+    // the chart of accounts is dimension-sized and feeds the two COA
+    // anti-joins, its parquet sink and the KPI join: collect it once and
+    // serve every consumer from the driver
     val coa = Io.readCsv(spark, s"$referenceDir/chart_of_accounts.csv", Schemas.chartOfAccounts)
-    val dimAccounts = Transform.buildDimAccounts(coa)
-    val coaCodes = dimAccounts.select("account_code").distinct()
+    val dimAccounts = Io.onDriver(Transform.buildDimAccounts(coa))
+    val codes = dimAccounts.select("account_code")
+    val coaCodes = spark.createDataFrame(codes.collect().distinct.toSeq.asJava, codes.schema)
 
     // one all-string read per dataset; each typed frame is DERIVED from it
     // via try_cast (S1; pipeline.py:78-101) so the DQ dtype check and the
@@ -55,14 +62,16 @@ object Pipeline {
     val exceptions = dqExceptions(spark, settings, raws, coaCodes)
 
     // ---- DQ gate: the deliberate mid-pipeline barrier (pipeline.py:129-162) ----
+    // every exception is in exactly one of the five summary rows, so their
+    // sums are the gate's error and total counts
     exceptions.persist()
-    val sevCounts = exceptions.groupBy("severity").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val errorCount = sevCounts.getOrElse("ERROR", 0L)
-    val totalCount = sevCounts.values.sum
+    val summaryPlan = Quality.summaryTable(spark, exceptions, mode)
+    val summaryRows = summaryPlan.collect().toSeq
+    val errorCount = summaryRows.map(_.getAs[Long]("error_count")).sum
+    val totalCount = summaryRows.map(_.getAs[Long]("issue_count")).sum
     val overall = Quality.overallStatus(errorCount, totalCount, mode)
 
-    val summary = Quality.summaryTable(spark, exceptions, mode)
+    val summary = spark.createDataFrame(summaryRows.asJava, summaryPlan.schema)
     val dqExceptionsPath = s"$curatedDir/dq_exceptions.csv"
     val dqSummaryPath = s"$curatedDir/dq_summary.csv"
     Io.writeCsv(exceptions.orderBy("dataset", "column", "check", "failure_case", "index"),
@@ -102,11 +111,14 @@ object Pipeline {
         fact.withColumn("month", date_format(col("date"), "yyyy-MM")),
         tmpRoot, Seq("month"))
     }
-    Io.writeParquet(dimAccounts, dimPath)
+    // one partition, as the single-file COA read wrote it
+    Io.writeParquet(dimAccounts.coalesce(1), dimPath)
     // build the KPI from the just-written fact (column-pruned parquet
     // scan) rather than the lazy raw→union→FX plan — otherwise the whole
-    // fact pipeline would execute a second time for the KPI write
-    val kpi = Transform.kpiMonthly(spark.read.parquet(factPath), dimAccounts)
+    // fact pipeline would execute a second time for the KPI write. The
+    // scan takes the schema of the frame just written; the month
+    // partition column is discovered as by any read.
+    val kpi = Transform.kpiMonthly(spark.read.schema(fact.schema).parquet(factPath), dimAccounts)
     Io.writeParquet(kpi, kpiPath)
 
     RunResult(dqExceptionsPath, dqSummaryPath, factPath, dimPath, kpiPath, overall)
@@ -123,7 +135,7 @@ object Pipeline {
   private[fin] def dqExceptions(
       spark: SparkSession, settings: Settings,
       raws: Map[String, DataFrame], coaCodes: DataFrame): DataFrame = {
-    val indexed = Quality.Datasets.map(n => n -> Quality.withRowIndex(raws(n))).toMap
+    val indexed = Quality.Datasets.zip(Quality.withRowIndex(Quality.Datasets.map(raws))).toMap
     val schemaIssues = Quality.Datasets.map { n =>
       Quality.validateDataset(spark, indexed(n), n, Schemas.rawContracts(n), settings)
     }

@@ -72,6 +72,11 @@ object Quality {
   /** Raw frame with the pandas-like 0-based row index attached — the
     * `index` pandera reports for each failing row
     * (reference: quality.py:106-108, pipeline.py:40 `bad.index`).
+    */
+  def withRowIndex(raw: DataFrame): DataFrame = withRowIndex(Seq(raw)).head
+
+  /** Each raw frame with its own row index attached (see the single-frame
+    * overload).
     *
     * A bare `zipWithIndex` does NOT honor file order in general: Spark
     * packs file splits into partitions sorted by split length
@@ -81,48 +86,54 @@ object Quality {
     * `_metadata.file_block_start` — exposed for all file sources):
     * rows keep file order WITHIN a split, so a first pass counts rows
     * per split (driver state O(#splits), never O(rows)), an exclusive
-    * prefix sum over splits ordered by (path, block offset) yields each
-    * split's starting index, and a second pass assigns offset + the
-    * row's position within its split. Multi-file reads index files in
-    * path order. Costs one extra job, same as zipWithIndex — paid only
-    * in the DQ layer; the working column is projected away before any
-    * curated output.
+    * prefix sum over each frame's splits ordered by (path, block offset)
+    * yields each split's starting index, and a second pass assigns
+    * offset + the row's position within its split. Multi-file reads
+    * index files in path order. The counting pass of all the frames is
+    * one job (their per-split counts, tagged with the frame, in one
+    * union), paid only in the DQ layer; the working column is projected
+    * away before any curated output.
     */
-  def withRowIndex(raw: DataFrame): DataFrame = {
-    val spark = raw.sparkSession
-    val n = raw.columns.length
-    val withMeta = raw
+  def withRowIndex(raws: Seq[DataFrame]): Seq[DataFrame] = {
+    val withMeta = raws.map(_
       .withColumn("__dq_file", col("_metadata.file_path"))
       .withColumn("__dq_blk", col("_metadata.file_block_start"))
-      .rdd
-    val splitCounts = withMeta.mapPartitions { it =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[(String, Long), Long]
-      it.foreach { r =>
-        val k = (r.getString(n), r.getLong(n + 1))
-        m.update(k, m.getOrElse(k, 0L) + 1L)
+      .rdd)
+    val splitCounts = raws.head.sparkSession.sparkContext.union(
+      withMeta.zip(raws).zipWithIndex.map { case ((rdd, raw), frame) =>
+        val n = raw.columns.length
+        rdd.mapPartitions { it =>
+          val m = scala.collection.mutable.LinkedHashMap.empty[(Int, String, Long), Long]
+          it.foreach { r =>
+            val k = (frame, r.getString(n), r.getLong(n + 1))
+            m.update(k, m.getOrElse(k, 0L) + 1L)
+          }
+          m.iterator
+        }
+      }).reduceByKey(_ + _).collect()
+    raws.zip(withMeta).zipWithIndex.map { case ((raw, rdd), frame) =>
+      val spark = raw.sparkSession
+      val n = raw.columns.length
+      val offsets = {
+        var acc = 0L
+        splitCounts.collect { case ((`frame`, f, b), c) => (f, b) -> c }
+          .sortBy(_._1).map { case (k, c) => val o = k -> acc; acc += c; o }.toMap
       }
-      m.iterator
-    }.reduceByKey(_ + _).collect()
-    val offsets = {
-      var acc = 0L
-      splitCounts.sortBy { case ((f, b), _) => (f, b) }.map { case (k, c) =>
-        val o = k -> acc; acc += c; o
-      }.toMap
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val schema = raw.schema.add(Io.RowIndexCol, LongType, nullable = false)
-    val rdd = withMeta.mapPartitions { it =>
-      // a partition may pack several splits; per-split counters keep
-      // each row's within-split position regardless of packing
-      val local = scala.collection.mutable.HashMap.empty[(String, Long), Long]
-      it.map { r =>
-        val k = (r.getString(n), r.getLong(n + 1))
-        val i = local.getOrElse(k, 0L)
-        local.update(k, i + 1L)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(2) :+ (bc.value(k) + i))
+      val bc = spark.sparkContext.broadcast(offsets)
+      val schema = raw.schema.add(Io.RowIndexCol, LongType, nullable = false)
+      val indexed = rdd.mapPartitions { it =>
+        // a partition may pack several splits; per-split counters keep
+        // each row's within-split position regardless of packing
+        val local = scala.collection.mutable.HashMap.empty[(String, Long), Long]
+        it.map { r =>
+          val k = (r.getString(n), r.getLong(n + 1))
+          val i = local.getOrElse(k, 0L)
+          local.update(k, i + 1L)
+          org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(2) :+ (bc.value(k) + i))
+        }
       }
+      spark.createDataFrame(indexed, schema)
     }
-    spark.createDataFrame(rdd, schema)
   }
 
   /** The output contract columns of one exception found in `df`. Per-row

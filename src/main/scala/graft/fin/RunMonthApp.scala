@@ -6,12 +6,15 @@ import org.apache.spark.sql.SparkSession
   * stub CLI (reference: src/finance_etl/cli.py:7-21, which never wires
   * `run_month`; here it does).
   *
-  * Usage: runMain graft.fin.RunMonthApp <workDir> <month> [failOn] [--generate]
+  * Usage: runMain graft.fin.RunMonthApp <workDir> <month> [failOn] [--generate] [--exports]
   *   workDir layout: <workDir>/raw, <workDir>/curated, <workDir>/reference
+  *   --generate writes a synthetic month and chart of accounts first;
+  *   --exports also writes <workDir>/bi, <workDir>/bi_star and
+  *   <workDir>/dashboard.html
   */
 object RunMonthApp {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: RunMonthApp <workDir> <month> [failOn] [--generate]")
+    require(args.length >= 2, "usage: RunMonthApp <workDir> <month> [failOn] [--generate] [--exports]")
     val workDir = args(0)
     val month = args(1)
     val failOn = args.drop(2).find(!_.startsWith("--")).getOrElse("ERROR")

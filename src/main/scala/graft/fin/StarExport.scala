@@ -11,7 +11,10 @@ import graft.sources.Io
   * Same dims + facts, Spark-first: surrogate keys come from `row_number()`
   * windows at dim cardinality only (never fact-side — SURVEY.md §7.4(9)), and
   * the reference's collect-to-driver key dicts (`:218-236`) become broadcast
-  * lookup joins, so fact_gl streams at any scale.
+  * lookup joins, so fact_gl streams at any scale. The dimensions
+  * (dim_entity, dim_account, dim_date) are collected once on the driver
+  * and served from there to their CSV sinks, the broadcast joins and
+  * dim_month, instead of being recomputed by each consumer.
   */
 object StarExport {
 
@@ -188,11 +191,11 @@ object StarExport {
       CuratedMonth.read(spark, curatedDir, monthArg)
     val outDir = s"$outDirBase/$month"
 
-    val dimEntity = buildDimEntity(factM, kpi)
-    val dimAccount = buildDimAccount(dimAccountsSrc)
+    val dimEntity = Io.onDriver(buildDimEntity(factM, kpi))
+    val dimAccount = Io.onDriver(buildDimAccount(dimAccountsSrc))
     val (dimDate, dimMonth) = dateCol match {
       case Some(c) =>
-        val dd = buildDimDate(factM, c)
+        val dd = Io.onDriver(buildDimDate(factM, c))
         (dd, buildDimMonth(dd))
       case None =>
         val dd = spark.emptyDataFrame

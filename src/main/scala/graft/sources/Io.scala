@@ -1,7 +1,16 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftbridge.SourceBridge
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Source/sink layer (SURVEY.md §2.1 S1-S6).
   *
@@ -11,11 +20,16 @@ import org.apache.spark.sql.types.StructType
   * export scripts' empty-DataFrame fallback
   * (reference: scripts/export_bi_datasets.py:11-16).
   *
-  * Scale notes: every read takes an explicit `StructType` so the vectorized
-  * Parquet/CSV readers never run schema inference (an extra full pass at
-  * 100 TB). CSV sinks coalesce to one file only because the reference emits
-  * single CSV artifacts for BI handoff — the parquet sinks, which carry the
-  * actual data volume, keep their natural partitioning.
+  * Scale notes: reads here run no schema-inference job (at 100 TB an extra
+  * pass; at close size a Spark job per read that does no data work). They
+  * take an explicit `StructType`, or resolve the schema on the driver the
+  * way inference would: the raw CSV header from the first non-empty line,
+  * parquet from one footer. Only file layouts those two leave to Spark
+  * (see [[readCsvRaw]], `readParquet`) and [[readParquetMerged]], whose
+  * contract is to merge every file's footer, still infer with a job.
+  * CSV sinks write one file only because the reference emits single CSV
+  * artifacts for BI handoff — the parquet sinks, which carry the actual
+  * data volume, keep their natural partitioning.
   */
 object Io {
 
@@ -37,11 +51,57 @@ object Io {
   }
 
   /** Raw all-string CSV scan used by the DQ layer to detect unparseable cells
-    * (dtype violations) before the typed read is trusted.
+    * (dtype violations) before the typed read is trusted. The columns are
+    * those `header` inference gives, resolved on the driver from the
+    * first non-empty line of the file a scan reads first (the largest;
+    * the listing order breaks ties). A file or a flat directory of files;
+    * any other layout, or no non-empty line, is left to Spark's inference.
     */
   def readCsvRaw(spark: SparkSession, path: String): DataFrame = {
     if (!exists(spark, path)) throw new java.io.FileNotFoundException(s"Missing file: $path")
-    spark.read.option("header", "true").csv(path)
+    val reader = spark.read.option("header", "true")
+    val header = leafFiles(spark, path, partitioned = false).flatMap { case (files, _) =>
+      files.sortBy(-_.getLen).iterator.flatMap(firstNonEmptyLine(spark, _)).nextOption()
+    }.map(SourceBridge.csvHeader(spark, Map("header" -> "true"), _))
+    header.fold(reader)(names => reader.schema(StructType(names.map(StructField(_, StringType)))))
+      .csv(path)
+  }
+
+  /** The first line of `file` that a CSV scan counts as non-empty (one
+    * with a character other than a space), split and decoded as the text
+    * reader does: UTF-8, `\n`/`\r\n`/`\r` line ends, compressed files
+    * decompressed.
+    */
+  private def firstNonEmptyLine(spark: SparkSession, file: FileStatus): Option[String] = {
+    val conf = SourceBridge.hadoopConf(spark)
+    val raw = file.getPath.getFileSystem(conf).open(file.getPath)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(file.getPath))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    val lines = new BufferedReader(new InputStreamReader(in, UTF_8))
+    try Iterator.continually(lines.readLine()).takeWhile(_ != null).find(_.exists(_ != ' '))
+    finally lines.close()
+  }
+
+  /** The files a scan of `path` lists (hidden names skipped) and the
+    * partition keys of its `key=value` directories; None for a layout only
+    * Spark's listing should interpret: any subdirectory when not
+    * `partitioned`, else one that is not a `key=value` directory.
+    */
+  private def leafFiles(spark: SparkSession, path: String,
+                        partitioned: Boolean): Option[(Seq[FileStatus], Set[String])] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(SourceBridge.hadoopConf(spark))
+    def walk(dir: Path): Option[(Seq[FileStatus], Set[String])] = {
+      val (dirs, files) = fs.listStatus(dir).toSeq
+        .filterNot(s => SourceBridge.isHiddenName(s.getPath.getName)).partition(_.isDirectory)
+      val names = dirs.map(_.getPath.getName)
+      if (names.exists(n => !partitioned || !n.contains("="))) None
+      else dirs.foldLeft(Option((files, names.map(_.takeWhile(_ != '=')).toSet))) { (acc, d) =>
+        for ((f, k) <- acc; (f2, k2) <- walk(d.getPath)) yield (f ++ f2, k ++ k2)
+      }
+    }
+    val status = fs.getFileStatus(root)
+    if (status.isFile) Some((Seq(status), Set.empty)) else walk(root)
   }
 
   /** Internal working column carrying the pandas-like 0-based file row
@@ -79,8 +139,29 @@ object Io {
     * path is absent (reference: scripts/export_bi_datasets.py:11-12).
     */
   def readParquetOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    if (exists(spark, path)) spark.read.parquet(path)
+    if (exists(spark, path)) readParquet(spark, path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** Parquet scan of `path` with the data schema inference would take,
+    * read from one footer on the driver: `_common_metadata`, else
+    * `_metadata`, else the first data file in path order. Partition
+    * columns are discovered as by any read. Schema merging, a data column
+    * named like a partition key, an unreadable footer or a directory
+    * without data files is left to Spark's own read (which fails loudly on
+    * the last).
+    */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val schema = if (SourceBridge.parquetMergesSchemas(spark)) None
+      else leafFiles(spark, path, partitioned = true).flatMap { case (files, keys) =>
+        val byPath = files.sortBy(_.getPath.toString)
+        val summaries = Seq("_common_metadata", "_metadata")
+        summaries.iterator.flatMap(n => byPath.find(_.getPath.getName == n)).nextOption()
+          .orElse(byPath.find(f => !summaries.contains(f.getPath.getName)))
+          .flatMap(f => Try(SourceBridge.parquetSchema(spark, f)).toOption)
+          .filterNot(_.fieldNames.exists(n => keys.exists(_.equalsIgnoreCase(n))))
+      }
+    schema.fold(spark.read)(spark.read.schema).parquet(path)
+  }
 
   /** S3: tolerant CSV scan (reference: scripts/export_bi_datasets.py:15-16). */
   def readCsvOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
@@ -106,9 +187,20 @@ object Io {
 
   /** S5: single-file CSV sink with header — the reference writes one CSV per
     * artifact for BI tools (io_utils.py:19-21). Only for dim/KPI-scale outputs.
+    * A frame ending in a global sort is sorted inside the one partition it
+    * is shuffled to, which plans no range partitioning and so no sampling
+    * job; any other frame is coalesced.
     */
   def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
+    SourceBridge.sortInOnePartition(df).getOrElse(df.coalesce(1))
+      .write.mode("overwrite").option("header", "true").csv(path)
+
+  /** `df` collected once and served from the driver as a local relation,
+    * for a dimension-sized frame that several consumers (a CSV sink,
+    * broadcast joins, display tables) would otherwise each recompute.
+    */
+  def onDriver(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   /** S6: driver-side text artifact (data dictionaries, model notes, HTML). */
   def writeText(spark: SparkSession, path: String, content: String): Unit = {
@@ -205,7 +297,7 @@ object Io {
       if (!fs.rename(bak0, src))
         sys.error(s"compactParquet: cannot restore stranded backup $bak0 to $src")
     }
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     val arranged =
       if (sortCols.isEmpty) df.repartition(nFiles)
       else df.repartitionByRange(nFiles, sortCols.map(col): _*)

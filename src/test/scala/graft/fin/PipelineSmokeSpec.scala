@@ -163,6 +163,18 @@ class PipelineSmokeSpec extends SparkSpec {
     assert(plan.collectLeaves().size <= 12, plan.treeString)
   }
 
+  test("a first close of a month without rows passes with an empty KPI") {
+    val work = Files.createTempDirectory("graft-empty-month").toString
+    SampleData.writeChartOfAccounts(s"$work/reference")
+    SampleData.generateSyntheticRaw(s"$work/raw", "2025-12", seed = 42L)
+    val res = Pipeline.runMonth(spark, Settings.default, "2026-05",
+      s"$work/raw", s"$work/curated", s"$work/reference", "ERROR")
+    assert(res.status === "PASS")
+    val kpi = spark.read.parquet(res.kpi)
+    assert(kpi.columns.contains("operating_profit"))
+    assert(kpi.count() === 0)
+  }
+
   test("invalid fail_on is rejected early") {
     val e = intercept[IllegalArgumentException] {
       Pipeline.runMonth(spark, Settings.default, "2025-12", "x", "y", "z", "BOGUS")

@@ -103,4 +103,66 @@ class IoSpec extends SparkSpec {
     assert(scan.contains("PushedFilters: [") && scan.contains("EqualTo(k,42)"),
       s"ORC scan must push the predicate:\n$scan")
   }
+
+  /** `files` (name -> content) written into a new temporary directory. */
+  private def csvDir(files: (String, String)*): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-header").toString
+    files.foreach { case (name, body) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, name), body.getBytes("UTF-8"))
+    }
+    dir
+  }
+
+  test("readCsvRaw resolves the header as inference does") {
+    val bigB = "b1,b2,b3\n" + (0 until 50).map(i => s"$i,$i,$i").mkString("\n") + "\n"
+    val cases = Seq(
+      "a quoted name containing a comma" ->
+        (csvDir("a.csv" -> "id,\"name, full\",amt\n1,\"x, y\",2\n") + "/a.csv"),
+      "leading blank lines" ->
+        (csvDir("a.csv" -> "\n   \n\r\nid,name\n1,x\n") + "/a.csv"),
+      "duplicate names" -> (csvDir("a.csv" -> "id,amt,ID,amt\n1,2,3,4\n") + "/a.csv"),
+      "an empty header cell" -> (csvDir("a.csv" -> "id,,amt,\"\"\n1,2,3,4\n") + "/a.csv"),
+      "a byte-order mark" -> (csvDir("a.csv" -> "\uFEFFid,amt\n1,2\n") + "/a.csv"),
+      // the scan reads the largest file first, so its header names the columns
+      "a multi-file directory" -> csvDir("a.csv" -> "a1,a2\n1,2\n", "b.csv" -> bigB))
+    cases.foreach { case (what, path) =>
+      val inferred = spark.read.option("header", "true").csv(path)
+      val raw = Io.readCsvRaw(spark, path)
+      assert(raw.columns.toSeq === inferred.columns.toSeq, what)
+      assert(raw.schema === inferred.schema, what)
+      assert(raw.collect().toSeq === inferred.collect().toSeq, what)
+    }
+    intercept[java.io.FileNotFoundException] {
+      Io.readCsvRaw(spark, csvDir() + "/nope.csv")
+    }
+  }
+
+  test("readParquetOrEmpty takes inference's schema, month partition column included") {
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-footer").toString + "/fact"
+    val fact = Seq(("2025-11-03", "E1", 10.5), ("2025-12-01", "E2", -3.0))
+      .toDF("d", "entity", "amount")
+      .select(to_date($"d").as("date"), $"entity", $"amount",
+        concat_ws("|", $"entity", $"d").as("txn_id"))
+    assert(!fact.schema("txn_id").nullable, "fixture carries a non-nullable column")
+    Io.writeParquetPartitioned(fact.withColumn("month", date_format($"date", "yyyy-MM")),
+      root, Seq("month"))
+    val inferred = spark.read.parquet(root)
+    val read = Io.readParquetOrEmpty(spark, root, StructType(Nil))
+    assert(read.schema === inferred.schema)
+    assert(read.columns.last === "month")
+    assert(read.orderBy("date").collect().toSeq === inferred.orderBy("date").collect().toSeq)
+  }
+
+  test("readParquetOrEmpty: absent path is empty, a directory without data fails loudly") {
+    import org.apache.spark.sql.types._
+    val base = java.nio.file.Files.createTempDirectory("graft-nodata").toString
+    val schema = StructType(Seq(StructField("k", LongType)))
+    assert(Io.readParquetOrEmpty(spark, s"$base/absent", schema).schema === schema)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base, "empty", "month=2025-12"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Io.readParquetOrEmpty(spark, s"$base/empty", schema)
+    }
+  }
 }
