@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: dump `explain("formatted")` for registered queries so the
   * physical plans can be audited (pushed filters, ReadSchema pruning,
   * broadcast vs sort-merge joins, WholeStageCodegen spans).
@@ -13,17 +11,9 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same extensions as Verify/Bench, so audited plans are the plans
-      // that actually run (vector_dot rewrite included)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the session Verify and Bench run, so audited plans are the plans
+    // that actually run (vector_dot rewrite included)
+    val spark = LocalRun.session(logLevel = "ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

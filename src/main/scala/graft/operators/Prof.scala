@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Steady-state profile of registered queries, one noop-sink action per
@@ -17,47 +13,15 @@ import scala.jdk.CollectionConverters._
   *
   * Usage: tools/run_prof.sh run:<query>[,<query>...]
   * Environment: SPARK_GRAFT_SF_DIR (the table directory),
+  * SPARK_GRAFT_CPUS (session width, default 4),
   * SPARK_GRAFT_PROF_Q (the `run:` list), SPARK_GRAFT_PROF_ITERS
   * (iterations per query, default 4).
   */
 object Prof {
   private val TopStages = 5
 
-  /** Counters fed by the listener; `reset` between iterations. */
-  private object Counters extends SparkListener {
-    val jobs = new AtomicLong
-    val stages = new AtomicLong
-    val runMs = new AtomicLong
-    val cpuNs = new AtomicLong
-    val stageRunMs = new ConcurrentHashMap[Int, java.lang.Long]()
-    val stageNames = new ConcurrentHashMap[Int, String]()
-
-    def reset(): Unit = {
-      Seq(jobs, stages, runMs, cpuNs).foreach(_.set(0L))
-      stageRunMs.clear(); stageNames.clear()
-    }
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet()
-      stageNames.put(st.stageInfo.stageId, st.stageInfo.name.take(70))
-    }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null) {
-        runMs.addAndGet(t.taskMetrics.executorRunTime)
-        cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
-        stageRunMs.merge(t.stageId, t.taskMetrics.executorRunTime, _ + _)
-      }
-  }
-
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.LocalRun.session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val q = sys.env.getOrElse("SPARK_GRAFT_PROF_Q", "")
     require(q.startsWith("run:"),
@@ -66,24 +30,24 @@ object Prof {
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROF_ITERS", "4").toInt
-    s.sparkContext.addSparkListener(Counters)
+    val counters = graft.Counters.attach(s)
     // warm-up: file indexes + codegen
     Seq("lineitem", "documents").foreach(t =>
       s.read.parquet(s"$dir/$t.parquet").count())
     for (name <- names; it <- 1 to iters) {
-      Counters.reset()
+      counters.reset()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(s, dir)
         .write.mode("overwrite").format("noop").save()
-      val wallS = (System.nanoTime() - t0) / 1e9 // before the drain sleep
-      Thread.sleep(200) // listener drain (counter deltas only)
+      val wallS = (System.nanoTime() - t0) / 1e9
+      graft.Counters.drain(s)
       println(f"PROF $name%-22s [$it] $wallS%7.3f s" +
-        f"  run=${Counters.runMs.get / 1e3}%7.2f s" +
-        f"  cpu=${Counters.cpuNs.get / 1e9}%7.2f s" +
-        f"  jobs=${Counters.jobs.get}  stages=${Counters.stages.get}")
-      Counters.stageRunMs.asScala.toSeq.sortBy(-_._2).take(TopStages).foreach {
+        f"  run=${counters.runMs.get / 1e3}%7.2f s" +
+        f"  cpu=${counters.cpuNs.get / 1e9}%7.2f s" +
+        f"  jobs=${counters.jobs.get}  stages=${counters.stages.get}")
+      counters.stageRunMs.asScala.toSeq.sortBy(-_._2).take(TopStages).foreach {
         case (id, ms) =>
-          val nm = Option(Counters.stageNames.get(id)).getOrElse("?")
+          val nm = Option(counters.stageNames.get(id)).getOrElse("?")
           println(f"PROF $name%-22s [$it]   stage $id%4d run=${ms / 1e3}%7.2f s  $nm")
       }
       s.sharedState.cacheManager.clearCache()

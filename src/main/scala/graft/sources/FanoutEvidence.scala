@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Plan-evidence dump for the ScanFanout thresholds (r12 verdict #1/#2):
@@ -10,22 +9,15 @@ import org.apache.spark.sql.functions.col
   * `PushedFilters` / `ReadSchema` survive the exchange.
   *
   * Usage: runMain graft.sources.FanoutEvidence <path> <filterExpr> [col ...]
-  * Session width comes from SPARK_GRAFT_CPUS (the bench convention).
+  * Session width comes from SPARK_GRAFT_CPUS (default 4, as for Bench).
   */
 object FanoutEvidence {
   def main(args: Array[String]): Unit = {
     val path = args(0)
     val filterExpr = args(1)
     val cols = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.LocalRun.cpus
+    val spark = graft.LocalRun.session(logLevel = "ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val base = ScanFanout.parquet(spark, path).where(filterExpr)
     val df = if (cols.isEmpty) base else base.select(cols.map(col): _*)

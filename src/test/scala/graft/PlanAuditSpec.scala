@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.GraftTestBridge
+import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -285,11 +285,11 @@ class PlanAuditSpec extends SparkSpec {
     }
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      GraftTestBridge.waitUntilListenerBusEmpty(sc)
+      ListenerBusBridge.drain(sc)
       sites.clear()
       val df = fn(spark, SfDir)
       val plan = df.queryExecution.sparkPlan // pre-AQE physical plan
-      GraftTestBridge.waitUntilListenerBusEmpty(sc)
+      ListenerBusBridge.drain(sc)
       val constructionJobs = collectJobs()
 
       val cartesians = plan.collectWithSubqueries {

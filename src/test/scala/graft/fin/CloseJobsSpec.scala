@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.GraftTestBridge
+import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.StructType
 
@@ -43,11 +43,11 @@ class CloseJobsSpec extends SparkSpec {
   private def jobsOf(layer: String)(body: => Unit): Seq[String] = {
     listening
     val sc = spark.sparkContext
-    GraftTestBridge.waitUntilListenerBusEmpty(sc)
+    ListenerBusBridge.drain(sc)
     jobs.clear()
     sc.setLocalProperty(LayerKey, layer)
     try body finally sc.setLocalProperty(LayerKey, null)
-    GraftTestBridge.waitUntilListenerBusEmpty(sc)
+    ListenerBusBridge.drain(sc)
     jobs.asScala.toSeq.collect { case (`layer`, name) => name }
   }
 

@@ -10,12 +10,17 @@ Usage:
 
 Reads the {"queries": {name: secs}} map from each file (first JSON line
 holding one). Queries present in only one file are listed separately.
-With --streaming, reads {"metric":"streaming_throughput", gate:
-{"rows_per_s":...}} lines (reports/streaming_throughput.json) and diffs
-the per-gate rates instead.
+When both records carry Bench's per-query "counters" ({jobs, cpu_s,
+draws} of the best draw), each moved query is labelled "host" (same jobs,
+executor CPU within --min-ratio: the host ran slower or faster) or
+"query" (jobs or CPU moved: the query changed). Records taken at different
+"cpus" are not comparable, and a warning says so.
+With --streaming, diffs the per-gate rates of the "streaming" field of a
+bench record, or of an older {"metric":"streaming_throughput", gate:
+{"rows_per_s":...}} file (reports/streaming_throughput*.json).
 A uniform inflation across families reads as machine load; isolated
-spikes read as plan regressions - the per-family summary at the bottom
-makes that call quickly.
+spikes read as plan regressions - the median ratio at the bottom makes
+that call quickly.
 """
 import json, sys
 
@@ -45,10 +50,12 @@ def load_streaming(path):
                 d = json.loads(line)
             except json.JSONDecodeError:
                 continue
+            if isinstance(d, dict) and isinstance(d.get("streaming"), dict):
+                d = d["streaming"]
             if isinstance(d, dict) and d.get("metric") == "streaming_throughput":
                 return {k: v for k, v in d.items()
                         if isinstance(v, dict) and "rows_per_s" in v}
-    raise SystemExit(f"{path}: no streaming_throughput JSON line")
+    raise SystemExit(f"{path}: no streaming_throughput JSON line or field")
 
 
 def diff_streaming(old_path, new_path):
@@ -78,8 +85,12 @@ def main():
     old, new = load(args[0]), load(args[1])
     oq = {k: v for k, v in old["queries"].items() if v >= 0}
     nq = {k: v for k, v in new["queries"].items() if v >= 0}
-    print(f"old: total={sum(oq.values()):8.1f}s n={len(oq)} sf={old.get('sf')} iters={old.get('iters')}")
-    print(f"new: total={sum(nq.values()):8.1f}s n={len(nq)} sf={new.get('sf')} iters={new.get('iters')}")
+    for tag, d, q in (("old", old, oq), ("new", new, nq)):
+        print(f"{tag}: total={sum(q.values()):8.1f}s n={len(q)} sf={d.get('sf')} "
+              f"iters={d.get('iters')} cpus={d.get('cpus')}")
+    if old.get("cpus") != new.get("cpus"):
+        print(f"WARNING: cpus differ ({old.get('cpus')} vs {new.get('cpus')}); "
+              "per-query times may not be comparable")
     shared = sorted(set(oq) & set(nq))
     moved = []
     for k in shared:
@@ -88,31 +99,30 @@ def main():
         r = b / a if a > 0 else float("inf")
         if abs(d) >= min_delta and (r >= min_ratio or r <= 1 / min_ratio):
             moved.append((d, r, k, a, b))
-    # fresh-JVM guard verdicts (r9 verdict #6): a move whose NEW number
-    # came out of the fresh-JVM adjudication pass (Bench's "fresh_guard"
-    # audit map) already survived an isolated re-measurement -- report it
-    # as real, not load noise. Moves the guard never flagged were within
-    # 1.5x of the committed references at record time.
-    guard = new.get("fresh_guard") or {}
+    oc, nc = old.get("counters") or {}, new.get("counters") or {}
+
+    def cause(k):
+        a, b = oc.get(k), nc.get(k)
+        if not (a and b):
+            return ""
+        ca, cb = a["cpu_s"], b["cpu_s"]
+        cpu_moved = ca > 0 and not (1 / min_ratio < cb / ca < min_ratio)
+        label = "query" if a["jobs"] != b["jobs"] or cpu_moved else "host"
+        return (f"  [{label}: jobs {a['jobs']}->{b['jobs']}, "
+                f"cpu {ca:.2f}->{cb:.2f}s]")
+
     if moved:
         print(f"\nmoved (|delta| >= {min_delta}s and ratio >= {min_ratio}x):")
         for d, r, k, a, b in sorted(moved, key=lambda t: -abs(t[0])):
-            g = guard.get(k)
-            if g and g.get("final", -1) >= 0:
-                note = (f"  [guard: fresh-JVM {g['first']:.2f}->{g['final']:.2f}"
-                        f" -- survived isolation, real]")
-            elif g and g.get("capped"):
-                note = ("  [guard: flagged, outside the top-deviator child"
-                        " cap -- in-run min kept]")
-            elif g:
-                note = "  [guard: flagged but fresh pass failed -- unadjudicated]"
-            else:
-                note = ""
-            print(f"  {k:32s} {a:7.2f} -> {b:7.2f}  ({d:+6.2f}s, {r:5.2f}x){note}")
+            print(f"  {k:32s} {a:7.2f} -> {b:7.2f}  ({d:+6.2f}s, {r:5.2f}x){cause(k)}")
     else:
         print("\nno per-query moves past thresholds")
-    only_new = sorted(set(nq) - set(oq))
-    only_old = sorted(set(oq) - set(nq))
+    unmeasured = set(old.get("unmeasured") or []) | set(new.get("unmeasured") or [])
+    only_new = sorted(set(nq) - set(oq) - unmeasured)
+    only_old = sorted(set(oq) - set(nq) - unmeasured)
+    for tag, d in (("old", old), ("new", new)):
+        if d.get("unmeasured"):
+            print(f"\n{tag}: {len(d['unmeasured'])} queries left unmeasured at the deadline")
     if only_new:
         add = sum(nq[k] for k in only_new)
         print(f"\nnew-only queries (+{add:.1f}s): " +

@@ -17,54 +17,25 @@ import json, os, subprocess, sys
 
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
 OUT = sys.argv[1] if len(sys.argv) > 1 else "reports/scaling.json"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run(sf):
-    # best-observed across invocations: this host is a noisy-neighbor VM
-    # (one run measured cosine_topk 6.4s vs 0.37s idle), so each fresh
-    # run min-merges into the cached per-SF file — repeat invocations
-    # converge on the least-perturbed timing per query
+    # each SF's numbers are what this invocation measured: one bench run,
+    # never merged with an earlier run's file
     path = f"/tmp/scaling_{sf}.json"
-    prev = json.load(open(path)) if os.path.exists(path) else None
-    # staleness guard: a cache file older than the newest compiled class
-    # is from a previous build — its timings (and possibly its query
-    # set) describe code that no longer exists. Drop it rather than
-    # min-merge or reuse it.
-    if prev is not None:
-        classes = "/root/repo/target/scala-2.13/classes"
-        newest_cls = max((os.path.getmtime(os.path.join(r, f))
-                          for r, _, fs in os.walk(classes) for f in fs),
-                         default=0)
-        if os.path.getmtime(path) < newest_cls:
-            print(f"== cached {sf} predates current build; ignoring", flush=True)
-            prev = None
-    # SPARK_GRAFT_SCALING_REUSE=1: when a cached per-SF file already
-    # exists (e.g. seeded from the round's committed full-sweep report
-    # at the SAME config — 32 cpus, min-of-3), skip re-benching that SF
-    # and use it as-is. The build-mtime guard above keeps a stale file
-    # from satisfying this.
-    if prev is not None and os.environ.get("SPARK_GRAFT_SCALING_REUSE") == "1":
-        print(f"== reuse cached {sf}", flush=True)
-        return prev
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=f"/root/testdata/{sf}",
-               SPARK_GRAFT_CPUS="32",
                SPARK_GRAFT_BENCH_ITERS="3",
                SPARK_GRAFT_BENCH_REPORT=path)
     print(f"== bench {sf}", flush=True)
-    # plain-java fork (tools/run_bench.sh), not sbt: no build-server
-    # contention and no per-leg sbt startup in the timing environment
-    subprocess.run(["tools/run_bench.sh", "", path], env=env,
-                   cwd="/root/repo", check=True, stdout=subprocess.DEVNULL,
+    # plain-java fork (tools/run_bench.sh, which also defaults the session
+    # width to every core), not sbt: no build-server contention and no
+    # per-leg sbt startup in the timing environment
+    subprocess.run(["tools/run_bench.sh", "", path], env=env, cwd=ROOT,
+                   check=True, stdout=subprocess.DEVNULL,
                    stderr=subprocess.DEVNULL)
-    fresh = json.load(open(path))
-    if prev:
-        for q, t in prev.get("queries", {}).items():
-            if q in fresh["queries"] and 0 <= t < fresh["queries"][q]:
-                fresh["queries"][q] = t
-        fresh["value"] = sum(v for v in fresh["queries"].values() if v >= 0)
-        json.dump(fresh, open(path, "w"))
-    return fresh
+    return json.load(open(path))
 
 
 def main():
@@ -88,6 +59,7 @@ def main():
         "sfs": SFS,
         "totals": {sf: round(runs[sf]["value"], 2) for sf in SFS},
         "iters": runs[SFS[0]].get("iters"),
+        "cpus": runs[SFS[0]].get("cpus"),
         "n_queries": len(per_query),
         "worst_ratio_10x": [{"query": k, "ratio": r} for r, k in ratios[-10:][::-1]],
         "median_ratio_10x": ratios[len(ratios) // 2][0] if ratios else None,
