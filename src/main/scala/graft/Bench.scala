@@ -214,6 +214,30 @@ object Bench {
     System.exit(0)
   }
 
+  /** A query's first trigger pays plan compilation, codegen and state-store
+    * initialization that a long-running gate amortizes to nothing: feed the
+    * head of `all` outside the clock (its state is the realistic context the
+    * measured rows look up against) and clock the rest in `chunk`-row
+    * triggers. The head is `warmN` rows but at most half of `all`, so a
+    * small corpus still clocks rows. Returns the rows clocked and seconds.
+    */
+  private[graft] def warmThenClock[T](all: Seq[T], warmN: Int, chunk: Int,
+                                      add: Seq[T] => Unit, sync: () => Unit): (Long, Double) = {
+    val (warm, measured) = all.splitAt(math.min(warmN, all.size / 2))
+    add(warm); sync()
+    val t0 = System.nanoTime()
+    measured.grouped(chunk).foreach { c => add(c); sync() }
+    (measured.size.toLong, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** One gate's field of the streaming record; `rows_per_s` is -1 when no
+    * row was clocked, never 0.
+    */
+  private[graft] def probeField(name: String, rows: Long, secs: Double): String = {
+    val rate = if (rows > 0 && secs > 0) (rows / secs).toLong else -1L
+    s""""$name":{"rows":$rows,"secs":$secs,"rows_per_s":$rate}"""
+  }
+
   /** Rows per second through the stateful streaming gates, fed from a
     * MemoryStream over the sf corpus; a probe failure becomes an `error`
     * field, never a failed bench.
@@ -230,20 +254,7 @@ object Bench {
     streamSess.conf.set("spark.sql.shuffle.partitions", "8")
     def probe(name: String)(run: () => (Long, Double)): String = {
       val (rows, secs) = run()
-      val rate = if (secs > 0) rows / secs else -1.0
-      s""""$name":{"rows":$rows,"secs":$secs,"rows_per_s":${rate.toLong}}"""
-    }
-    // a query's first trigger pays plan compilation, codegen and state-store
-    // initialization that a long-running gate amortizes to nothing: feed the
-    // corpus head outside the clock (its state is the realistic context the
-    // measured rows look up against) and clock the rest
-    def warmThenClock[T](all: Seq[T], warmN: Int, chunk: Int,
-                         add: Seq[T] => Unit, sync: () => Unit): (Long, Double) = {
-      val (warm, measured) = all.splitAt(warmN)
-      add(warm); sync()
-      val t0 = System.nanoTime()
-      measured.grouped(chunk).foreach { c => add(c); sync() }
-      (measured.size.toLong, (System.nanoTime() - t0) / 1e9)
+      probeField(name, rows, secs)
     }
     def checkpointDir() = Files.createTempDirectory("graft-bench-ck").toString
     def dedupProbeOn(sess: SparkSession): (Long, Double) = {

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** What the query-side mains (Bench, Verify, PlanAudit, Prof,
-  * FanoutEvidence) share: one local session shape, so the plans each of
-  * them reports are the plans the others run, and one JSON string escape.
+/** What the mains (Bench, Verify, PlanAudit, Prof, FanoutEvidence and the
+  * close CLI `fin.RunMonthApp`) share: one local session shape, so the
+  * plans each of them reports are the plans the others run, and one JSON
+  * string escape.
   */
 private[graft] object LocalRun {
   /** Session width: `SPARK_GRAFT_CPUS`, default 4. */

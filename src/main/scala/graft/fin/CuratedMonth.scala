@@ -26,6 +26,11 @@ final case class CuratedMonth(
 
 object CuratedMonth {
 
+  /** The curated files the exporters read, all months of them. */
+  def files(curatedDir: String): Seq[String] =
+    Seq("fact_transactions.parquet", "dim_accounts.parquet", "kpi_monthly.parquet",
+      "dq_exceptions.csv", "dq_summary.csv").map(f => s"$curatedDir/$f")
+
   /** Tolerant reads with fallback schemas (S2; export_bi_datasets.py:11-16),
     * the KPI month normalized to YYYY-MM, the month given or inferred, and
     * the fact filtered to it.

@@ -77,72 +77,74 @@ object Dashboard {
       outHtml: String,
       monthArg: Option[String] = None): DashResult = {
 
-    val cur = CuratedMonth.read(spark, curatedDir, monthArg)
-    val month = cur.month
-    val kpi = Transform.addMarginCols(cur.kpi)
+    SmallClose.run(spark, CuratedMonth.files(curatedDir)) { spark =>
+      val cur = CuratedMonth.read(spark, curatedDir, monthArg)
+      val month = cur.month
+      val kpi = Transform.addMarginCols(cur.kpi)
 
-    // each series feeds the charts, the HTML tables AND the CSVs — collect
-    // the (display-sized) results once and serve every consumer from the
-    // driver, so each aggregation runs once
-    val trend = Io.onDriver(kpiTrend(kpi))
-    val topExpense = Io.onDriver(topExpenseAccounts(cur.factM, cur.dimAccounts))
+      // each series feeds the charts, the HTML tables AND the CSVs — collect
+      // the (display-sized) results once and serve every consumer from the
+      // driver, so each aggregation runs once
+      val trend = Io.onDriver(kpiTrend(kpi))
+      val topExpense = Io.onDriver(topExpenseAccounts(cur.factM, cur.dimAccounts))
 
-    // chart rendering (reference: build_dashboard.py:96-122 px.line ×2,
-    // :162-166 px.bar) — same figures, inline SVG instead of plotly JS
-    def trendChart(valueCol: String, title: String): String =
-      if (!kpi.columns.contains(valueCol)) s"<p class='muted'>No $title chart available.</p>"
-      else {
-        val pts = trend.select(col("entity"), col("month"),
-            col(valueCol).cast("double")).collect()
-          .filter(r => !r.isNullAt(2))
-          .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-        val months = pts.map(_._2).distinct.sorted.toSeq
-        val series = pts.groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (e, rs) => e -> rs.map(r => r._2 -> r._3).toMap }
-        Charts.lineChart(title, months, series)
-      }
-    val revChart = trendChart("Revenue", "Revenue Trend (Top Entities)")
-    val opChart = trendChart("operating_profit", "Operating Profit Trend (Top Entities)")
-    val expChart = Charts.barChartH("Top Expense Accounts (Abs Value)",
-      topExpense.collect().toSeq.map(r =>
-        r.getAs[String]("label") -> r.getAs[Double]("total_abs_amount")))
+      // chart rendering (reference: build_dashboard.py:96-122 px.line ×2,
+      // :162-166 px.bar) — same figures, inline SVG instead of plotly JS
+      def trendChart(valueCol: String, title: String): String =
+        if (!kpi.columns.contains(valueCol)) s"<p class='muted'>No $title chart available.</p>"
+        else {
+          val pts = trend.select(col("entity"), col("month"),
+              col(valueCol).cast("double")).collect()
+            .filter(r => !r.isNullAt(2))
+            .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+          val months = pts.map(_._2).distinct.sorted.toSeq
+          val series = pts.groupBy(_._1).toSeq.sortBy(_._1)
+            .map { case (e, rs) => e -> rs.map(r => r._2 -> r._3).toMap }
+          Charts.lineChart(title, months, series)
+        }
+      val revChart = trendChart("Revenue", "Revenue Trend (Top Entities)")
+      val opChart = trendChart("operating_profit", "Operating Profit Trend (Top Entities)")
+      val expChart = Charts.barChartH("Top Expense Accounts (Abs Value)",
+        topExpense.collect().toSeq.map(r =>
+          r.getAs[String]("label") -> r.getAs[Double]("total_abs_amount")))
 
-    val html =
-      s"""<!DOCTYPE html><html><head><meta charset="utf-8">
-         |<title>Monthly Close — $month</title>
-         |<style>body{font-family:sans-serif;margin:2em}table{border-collapse:collapse}
-         |td,th{border:1px solid #ccc;padding:4px 8px;text-align:right}
-         |th{background:#eee}td:first-child,th:first-child{text-align:left}</style>
-         |</head><body>
-         |<h1>Monthly Close Dashboard — $month</h1>
-         |<h2>Revenue trend (top entities)</h2>
-         |$revChart
-         |<h2>Operating profit trend (top entities)</h2>
-         |$opChart
-         |${htmlTable(trend)}
-         |<h2>KPI table — $month</h2>
-         |${htmlTable(kpiTable(kpi, month))}
-         |<h2>Top expense accounts — $month</h2>
-         |$expChart
-         |${htmlTable(topExpense)}
-         |<h2>DQ summary</h2>
-         |${htmlTable(cur.dqSummary)}
-         |<h2>DQ exceptions (first 200)</h2>
-         |${htmlTable(cur.dqExceptions.orderBy("dataset", "column", "check", "failure_case"))}
-         |</body></html>""".stripMargin
+      val html =
+        s"""<!DOCTYPE html><html><head><meta charset="utf-8">
+           |<title>Monthly Close — $month</title>
+           |<style>body{font-family:sans-serif;margin:2em}table{border-collapse:collapse}
+           |td,th{border:1px solid #ccc;padding:4px 8px;text-align:right}
+           |th{background:#eee}td:first-child,th:first-child{text-align:left}</style>
+           |</head><body>
+           |<h1>Monthly Close Dashboard — $month</h1>
+           |<h2>Revenue trend (top entities)</h2>
+           |$revChart
+           |<h2>Operating profit trend (top entities)</h2>
+           |$opChart
+           |${htmlTable(trend)}
+           |<h2>KPI table — $month</h2>
+           |${htmlTable(kpiTable(kpi, month))}
+           |<h2>Top expense accounts — $month</h2>
+           |$expChart
+           |${htmlTable(topExpense)}
+           |<h2>DQ summary</h2>
+           |${htmlTable(cur.dqSummary)}
+           |<h2>DQ exceptions (first 200)</h2>
+           |${htmlTable(cur.dqExceptions.orderBy("dataset", "column", "check", "failure_case"))}
+           |</body></html>""".stripMargin
 
-    Io.writeText(spark, outHtml, html)
+      Io.writeText(spark, outHtml, html)
 
-    // chart data contract: the series feeding each chart also ship as
-    // standalone CSVs next to the HTML, so the artifact carries the same
-    // information as the reference's plotly line/bar charts
-    // (reference: scripts/build_dashboard.py:96-122, 162-166)
-    val seriesDir = outHtml.stripSuffix(".html") + "_series"
-    val trendCols = Seq("entity", "month") ++
-      Seq("Revenue", "gross_profit", "operating_profit").filter(kpi.columns.contains)
-    Io.writeCsv(trend.select(trendCols.map(col): _*), s"$seriesDir/revenue_trend.csv")
-    Io.writeCsv(topExpense, s"$seriesDir/top_expense.csv")
+      // chart data contract: the series feeding each chart also ship as
+      // standalone CSVs next to the HTML, so the artifact carries the same
+      // information as the reference's plotly line/bar charts
+      // (reference: scripts/build_dashboard.py:96-122, 162-166)
+      val seriesDir = outHtml.stripSuffix(".html") + "_series"
+      val trendCols = Seq("entity", "month") ++
+        Seq("Revenue", "gross_profit", "operating_profit").filter(kpi.columns.contains)
+      Io.writeCsv(trend.select(trendCols.map(col): _*), s"$seriesDir/revenue_trend.csv")
+      Io.writeCsv(topExpense, s"$seriesDir/top_expense.csv")
 
-    DashResult(outHtml, seriesDir, month)
+      DashResult(outHtml, seriesDir, month)
+    }
   }
 }

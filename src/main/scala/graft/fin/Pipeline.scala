@@ -18,6 +18,12 @@ import graft.sources.Io
   * per-split row counts (one job for the five raw datasets), and
   * `Transform.addFxAmountBase` collects its missing-rate sample. No read
   * runs a schema-inference job (see `Io`).
+  *
+  * A month whose input files are small closes interpreted, on a clone of
+  * the caller's session without code generation ([[SmallClose]]): at a
+  * few hundred rows, compiling the close's generated classes costs more
+  * than running them. Larger inputs run the same compiled plans as
+  * before. Either way the jobs, exchanges and outputs are the same.
   */
 object Pipeline {
 
@@ -46,82 +52,88 @@ object Pipeline {
     val mode = Option(failOn).getOrElse("ERROR").toUpperCase.trim
     require(FailOnModes.contains(mode), "fail_on must be one of: ERROR, WARN, NEVER")
 
-    // the chart of accounts is dimension-sized and feeds the two COA
-    // anti-joins, its parquet sink and the KPI join: collect it once and
-    // serve every consumer from the driver
-    val coa = Io.readCsv(spark, s"$referenceDir/chart_of_accounts.csv", Schemas.chartOfAccounts)
-    val dimAccounts = Io.onDriver(Transform.buildDimAccounts(coa))
-    val codes = dimAccounts.select("account_code")
-    val coaCodes = spark.createDataFrame(codes.collect().distinct.toSeq.asJava, codes.schema)
-
-    // one all-string read per dataset; each typed frame is DERIVED from it
-    // via try_cast (S1; pipeline.py:78-101) so the DQ dtype check and the
-    // pipeline see the exact same coercion — see Io.typedFromRaw
-    val raws = Quality.Datasets.map(n => n -> Io.readCsvRaw(spark, s"$rawDir/$n.csv")).toMap
-    def typed(name: String) = Io.typedFromRaw(raws(name), Schemas.rawContracts(name))
-    val exceptions = dqExceptions(spark, settings, raws, coaCodes)
-
-    // ---- DQ gate: the deliberate mid-pipeline barrier (pipeline.py:129-162) ----
-    // every exception is in exactly one of the five summary rows, so their
-    // sums are the gate's error and total counts
-    exceptions.persist()
-    val summaryPlan = Quality.summaryTable(spark, exceptions, mode)
-    val summaryRows = summaryPlan.collect().toSeq
-    val errorCount = summaryRows.map(_.getAs[Long]("error_count")).sum
-    val totalCount = summaryRows.map(_.getAs[Long]("issue_count")).sum
-    val overall = Quality.overallStatus(errorCount, totalCount, mode)
-
-    val summary = spark.createDataFrame(summaryRows.asJava, summaryPlan.schema)
-    val dqExceptionsPath = s"$curatedDir/dq_exceptions.csv"
-    val dqSummaryPath = s"$curatedDir/dq_summary.csv"
-    Io.writeCsv(exceptions.orderBy("dataset", "column", "check", "failure_case", "index"),
-      dqExceptionsPath)
-    Io.writeCsv(summary, dqSummaryPath)
-
-    if (overall == "FAIL" && mode != "NEVER") {
-      exceptions.unpersist()
-      throw new DataQualityException(
-        s"Data quality checks failed. See $dqExceptionsPath and $dqSummaryPath")
-    }
-    exceptions.unpersist()
-
-    // month window (P2/P3; pipeline.py:164-170)
-    val salesM = typed("sales").filter(Transform.monthWindow(col("date"), month))
-    val expensesM = typed("expenses").filter(Transform.monthWindow(col("date"), month))
-    val inventoryM = typed("inventory_movements").filter(Transform.monthWindow(col("date"), month))
-    val payrollM = typed("payroll").filter(col("month") === lit(month))
-
-    val fx = Transform.fxToBase(typed("fx_rates"), settings.baseCurrency)
-    val fact = Transform.toFactTransactions(
-      salesM, expensesM, payrollM, inventoryM, fx, settings.baseCurrency)
-
+    // a small month closes interpreted (see SmallClose); `spark` below is
+    // the session the close runs on
     val factPath = s"$curatedDir/fact_transactions.parquet"
-    val dimPath = s"$curatedDir/dim_accounts.parquet"
-    val kpiPath = s"$curatedDir/kpi_monthly.parquet"
-    // month-partitioned curated layout (SURVEY §1.1): this run lands in
-    // month=YYYY-MM/ only, other months stay intact, and downstream
-    // month filters prune to that one directory. The partition is
-    // replaced via temp-and-swap (write to a hidden sibling, then move
-    // into place) — a pre-delete-then-write would destroy the only good
-    // copy of the partition if the write failed, and plain dynamic
-    // overwrite would silently KEEP a stale partition when corrected
-    // inputs yield zero in-month rows.
-    replaceMonthPartition(spark, factPath, month) { tmpRoot =>
-      Io.writeParquetPartitioned(
-        fact.withColumn("month", date_format(col("date"), "yyyy-MM")),
-        tmpRoot, Seq("month"))
-    }
-    // one partition, as the single-file COA read wrote it
-    Io.writeParquet(dimAccounts.coalesce(1), dimPath)
-    // build the KPI from the just-written fact (column-pruned parquet
-    // scan) rather than the lazy raw→union→FX plan — otherwise the whole
-    // fact pipeline would execute a second time for the KPI write. The
-    // scan takes the schema of the frame just written; the month
-    // partition column is discovered as by any read.
-    val kpi = Transform.kpiMonthly(spark.read.schema(fact.schema).parquet(factPath), dimAccounts)
-    Io.writeParquet(kpi, kpiPath)
+    val inputs = Quality.Datasets.map(n => s"$rawDir/$n.csv") ++
+      Seq(s"$referenceDir/chart_of_accounts.csv", factPath)
+    SmallClose.run(spark, inputs) { spark =>
+      // the chart of accounts is dimension-sized and feeds the two COA
+      // anti-joins, its parquet sink and the KPI join: collect it once and
+      // serve every consumer from the driver
+      val coa = Io.readCsv(spark, s"$referenceDir/chart_of_accounts.csv", Schemas.chartOfAccounts)
+      val dimAccounts = Io.onDriver(Transform.buildDimAccounts(coa))
+      val codes = dimAccounts.select("account_code")
+      val coaCodes = spark.createDataFrame(codes.collect().distinct.toSeq.asJava, codes.schema)
 
-    RunResult(dqExceptionsPath, dqSummaryPath, factPath, dimPath, kpiPath, overall)
+      // one all-string read per dataset; each typed frame is DERIVED from it
+      // via try_cast (S1; pipeline.py:78-101) so the DQ dtype check and the
+      // pipeline see the exact same coercion — see Io.typedFromRaw
+      val raws = Quality.Datasets.map(n => n -> Io.readCsvRaw(spark, s"$rawDir/$n.csv")).toMap
+      def typed(name: String) = Io.typedFromRaw(raws(name), Schemas.rawContracts(name))
+      val exceptions = dqExceptions(spark, settings, raws, coaCodes)
+
+      // ---- DQ gate: the deliberate mid-pipeline barrier (pipeline.py:129-162) ----
+      // every exception is in exactly one of the five summary rows, so their
+      // sums are the gate's error and total counts
+      exceptions.persist()
+      val summaryPlan = Quality.summaryTable(spark, exceptions, mode)
+      val summaryRows = summaryPlan.collect().toSeq
+      val errorCount = summaryRows.map(_.getAs[Long]("error_count")).sum
+      val totalCount = summaryRows.map(_.getAs[Long]("issue_count")).sum
+      val overall = Quality.overallStatus(errorCount, totalCount, mode)
+
+      val summary = spark.createDataFrame(summaryRows.asJava, summaryPlan.schema)
+      val dqExceptionsPath = s"$curatedDir/dq_exceptions.csv"
+      val dqSummaryPath = s"$curatedDir/dq_summary.csv"
+      Io.writeCsv(exceptions.orderBy("dataset", "column", "check", "failure_case", "index"),
+        dqExceptionsPath)
+      Io.writeCsv(summary, dqSummaryPath)
+
+      if (overall == "FAIL" && mode != "NEVER") {
+        exceptions.unpersist()
+        throw new DataQualityException(
+          s"Data quality checks failed. See $dqExceptionsPath and $dqSummaryPath")
+      }
+      exceptions.unpersist()
+
+      // month window (P2/P3; pipeline.py:164-170)
+      val salesM = typed("sales").filter(Transform.monthWindow(col("date"), month))
+      val expensesM = typed("expenses").filter(Transform.monthWindow(col("date"), month))
+      val inventoryM = typed("inventory_movements").filter(Transform.monthWindow(col("date"), month))
+      val payrollM = typed("payroll").filter(col("month") === lit(month))
+
+      val fx = Transform.fxToBase(typed("fx_rates"), settings.baseCurrency)
+      val fact = Transform.toFactTransactions(
+        salesM, expensesM, payrollM, inventoryM, fx, settings.baseCurrency)
+
+      val dimPath = s"$curatedDir/dim_accounts.parquet"
+      val kpiPath = s"$curatedDir/kpi_monthly.parquet"
+      // month-partitioned curated layout (SURVEY §1.1): this run lands in
+      // month=YYYY-MM/ only, other months stay intact, and downstream
+      // month filters prune to that one directory. The partition is
+      // replaced via temp-and-swap (write to a hidden sibling, then move
+      // into place) — a pre-delete-then-write would destroy the only good
+      // copy of the partition if the write failed, and plain dynamic
+      // overwrite would silently KEEP a stale partition when corrected
+      // inputs yield zero in-month rows.
+      replaceMonthPartition(spark, factPath, month) { tmpRoot =>
+        Io.writeParquetPartitioned(
+          fact.withColumn("month", date_format(col("date"), "yyyy-MM")),
+          tmpRoot, Seq("month"))
+      }
+      // one partition, as the single-file COA read wrote it
+      Io.writeParquet(dimAccounts.coalesce(1), dimPath)
+      // build the KPI from the just-written fact (column-pruned parquet
+      // scan) rather than the lazy raw→union→FX plan — otherwise the whole
+      // fact pipeline would execute a second time for the KPI write. The
+      // scan takes the schema of the frame just written; the month
+      // partition column is discovered as by any read.
+      val kpi = Transform.kpiMonthly(spark.read.schema(fact.schema).parquet(factPath), dimAccounts)
+      Io.writeParquet(kpi, kpiPath)
+
+      RunResult(dqExceptionsPath, dqSummaryPath, factPath, dimPath, kpiPath, overall)
+    }
   }
 
   /** The month's DQ exceptions with severity (pipeline.py:104-127): every

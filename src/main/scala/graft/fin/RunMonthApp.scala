@@ -1,7 +1,5 @@
 package graft.fin
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI for the monthly close — the working equivalent of the reference's
   * stub CLI (reference: src/finance_etl/cli.py:7-21, which never wires
   * `run_month`; here it does).
@@ -29,16 +27,7 @@ object RunMonthApp {
       SampleData.generateSyntheticRaw(rawDir, month)
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-close")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalRun.session()
 
     try {
       val result = Pipeline.runMonth(

@@ -187,46 +187,48 @@ object StarExport {
       outDirBase: String,
       monthArg: Option[String] = None): StarResult = {
 
-    val CuratedMonth(_, month, dateCol, factM, dimAccountsSrc, kpi) =
-      CuratedMonth.read(spark, curatedDir, monthArg)
-    val outDir = s"$outDirBase/$month"
+    SmallClose.run(spark, CuratedMonth.files(curatedDir)) { spark =>
+      val CuratedMonth(_, month, dateCol, factM, dimAccountsSrc, kpi) =
+        CuratedMonth.read(spark, curatedDir, monthArg)
+      val outDir = s"$outDirBase/$month"
 
-    val dimEntity = Io.onDriver(buildDimEntity(factM, kpi))
-    val dimAccount = Io.onDriver(buildDimAccount(dimAccountsSrc))
-    val (dimDate, dimMonth) = dateCol match {
-      case Some(c) =>
-        val dd = Io.onDriver(buildDimDate(factM, c))
-        (dd, buildDimMonth(dd))
-      case None =>
-        val dd = spark.emptyDataFrame
-        (dd, dd)
+      val dimEntity = Io.onDriver(buildDimEntity(factM, kpi))
+      val dimAccount = Io.onDriver(buildDimAccount(dimAccountsSrc))
+      val (dimDate, dimMonth) = dateCol match {
+        case Some(c) =>
+          val dd = Io.onDriver(buildDimDate(factM, c))
+          (dd, buildDimMonth(dd))
+        case None =>
+          val dd = spark.emptyDataFrame
+          (dd, dd)
+      }
+      val factGl = buildFactGl(factM, dimEntity, dimAccount, dateCol)
+      val factKpi = buildFactKpiMonthly(kpi, dimEntity, month)
+
+      Io.writeCsv(dimDate, s"$outDir/dim_date.csv")
+      Io.writeCsv(dimMonth, s"$outDir/dim_month.csv")
+      Io.writeCsv(dimEntity, s"$outDir/dim_entity.csv")
+      Io.writeCsv(dimAccount, s"$outDir/dim_account.csv")
+      Io.writeCsv(factGl, s"$outDir/fact_gl.csv")
+      Io.writeCsv(factKpi, s"$outDir/fact_kpi_monthly.csv")
+
+      val files = Seq("dim_date.csv", "dim_month.csv", "dim_entity.csv",
+        "dim_account.csv", "fact_gl.csv", "fact_kpi_monthly.csv")
+      // byte-parity with the reference's committed artifact, including its
+      // column alignment (reference: export_powerbi_star_schema.py:390-413;
+      // golden-compared in ExportSpec against data/bi_star/2025-12/)
+      val notes =
+        (Seq(s"month=$month", "", "Suggested Power BI Relationships:",
+          "  fact_gl[date_key]      -> dim_date[date_key] (Many-to-1, single)",
+          "  fact_gl[entity_key]    -> dim_entity[entity_key] (Many-to-1, single)",
+          "  fact_gl[account_key]   -> dim_account[account_key] (Many-to-1, single)",
+          "  fact_gl[month_key]     -> dim_month[month_key] (Many-to-1, single)  (optional)",
+          "  fact_kpi_monthly[entity_key] -> dim_entity[entity_key] (Many-to-1, single)",
+          "  fact_kpi_monthly[month_key]  -> dim_month[month_key] (Many-to-1, single)",
+          "", "Files:") ++ files.map(f => s"  - $f")).mkString("\n")
+      Io.writeText(spark, s"$outDir/POWERBI_MODEL_NOTES.txt", notes)
+
+      StarResult(outDir, month)
     }
-    val factGl = buildFactGl(factM, dimEntity, dimAccount, dateCol)
-    val factKpi = buildFactKpiMonthly(kpi, dimEntity, month)
-
-    Io.writeCsv(dimDate, s"$outDir/dim_date.csv")
-    Io.writeCsv(dimMonth, s"$outDir/dim_month.csv")
-    Io.writeCsv(dimEntity, s"$outDir/dim_entity.csv")
-    Io.writeCsv(dimAccount, s"$outDir/dim_account.csv")
-    Io.writeCsv(factGl, s"$outDir/fact_gl.csv")
-    Io.writeCsv(factKpi, s"$outDir/fact_kpi_monthly.csv")
-
-    val files = Seq("dim_date.csv", "dim_month.csv", "dim_entity.csv",
-      "dim_account.csv", "fact_gl.csv", "fact_kpi_monthly.csv")
-    // byte-parity with the reference's committed artifact, including its
-    // column alignment (reference: export_powerbi_star_schema.py:390-413;
-    // golden-compared in ExportSpec against data/bi_star/2025-12/)
-    val notes =
-      (Seq(s"month=$month", "", "Suggested Power BI Relationships:",
-        "  fact_gl[date_key]      -> dim_date[date_key] (Many-to-1, single)",
-        "  fact_gl[entity_key]    -> dim_entity[entity_key] (Many-to-1, single)",
-        "  fact_gl[account_key]   -> dim_account[account_key] (Many-to-1, single)",
-        "  fact_gl[month_key]     -> dim_month[month_key] (Many-to-1, single)  (optional)",
-        "  fact_kpi_monthly[entity_key] -> dim_entity[entity_key] (Many-to-1, single)",
-        "  fact_kpi_monthly[month_key]  -> dim_month[month_key] (Many-to-1, single)",
-        "", "Files:") ++ files.map(f => s"  - $f")).mkString("\n")
-    Io.writeText(spark, s"$outDir/POWERBI_MODEL_NOTES.txt", notes)
-
-    StarResult(outDir, month)
   }
 }

@@ -10,6 +10,9 @@ import org.apache.spark.sql.functions._
   * per output. Every dimension-side join is broadcast (FX and COA are tiny
   * relative to the fact at any scale); the fact side never collects to the
   * driver, so the same plan runs unchanged on a 1000-executor cluster.
+  * How a plan executes depends on the close's input size ([[SmallClose]]):
+  * a close of a few hundred rows runs these plans interpreted, without
+  * generated code; larger inputs run the same plans compiled, as before.
   *
   * Money semantics: the reference rounds with pandas `Series.round(2)`
   * (IEEE-754 half-even), so all 2dp money rounding here uses `bround`, not

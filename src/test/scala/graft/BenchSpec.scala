@@ -146,4 +146,21 @@ class BenchSpec extends AnyFunSuite {
     assert(full \ "unmeasured" == JArray(List(JString("c"))))
     assert(written == full)
   }
+
+  test("a streaming probe fed fewer rows than its warm-up still clocks rows; none clocked reports no rate") {
+    val fed = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+    var syncs = 0
+    val (rows, secs) = Bench.warmThenClock(1 to 10, warmN = 1000, chunk = 3,
+      (c: Seq[Int]) => fed += c, () => syncs += 1)
+    // half the feed warms, the other half is clocked in 3-row triggers
+    assert(fed.toSeq == Seq(1 to 5, 6 to 8, 9 to 10))
+    assert(syncs == 3)
+    assert(rows == 5 && secs >= 0)
+    def rate(field: String): JValue = parse(s"{$field}") \ "g" \ "rows_per_s"
+    assert(rate(Bench.probeField("g", rows, 0.5)) == JInt(10))
+    // one row is clocked, not spent on the warm-up
+    assert(Bench.warmThenClock(Seq(1), warmN = 1000, chunk = 3, (_: Seq[Int]) => (), () => ())._1 == 1)
+    assert(rate(Bench.probeField("g", 0, 0.25)) == JInt(-1))
+    assert(rate(Bench.probeField("g", 0, 0.0)) == JInt(-1))
+  }
 }

@@ -102,21 +102,7 @@ class PipelineSmokeSpec extends SparkSpec {
 
   test("DQ gate end to end: seeded defects are reported row by row; ERROR fails after both writes") {
     val work = Files.createTempDirectory("graft-dq-gate").toString
-    SampleData.writeChartOfAccounts(s"$work/reference")
-    SampleData.generateSyntheticRaw(s"$work/raw", "2025-12", seed = 42L)
-    // overwrite cell `col` of 0-based data row `row` (the row's DQ index)
-    def edit(file: String, row: Int, col: Int, f: String => String): Unit = {
-      val p = java.nio.file.Paths.get(work, "raw", file)
-      val lines = Files.readAllLines(p).asScala.toIndexedSeq
-      val cells = lines(row + 1).split(",", -1)
-      cells(col) = f(cells(col))
-      Files.write(p, lines.updated(row + 1, cells.mkString(",")).mkString("", "\n", "\n").getBytes)
-    }
-    edit("expenses.csv", 3, 5, "-" + _)              // negative amount
-    edit("expenses.csv", 7, 3, _ => "99999999")      // account not in the COA
-    edit("inventory_movements.csv", 4, 5, "-" + _)   // negative unit cost
-    edit("sales.csv", 2, 5, _ => "junk")             // unparseable amount
-    edit("sales.csv", 6, 0, _ => "")                 // blank date
+    PipelineSmokeSpec.writeDefectMonth(work)
 
     val expectedExceptions = Seq(
       "dataset,index,column,check,failure_case,schema_context,check_number,severity",
@@ -228,5 +214,30 @@ class PipelineSmokeSpec extends SparkSpec {
           Seq(("2025-10", 9.0)).toDF("month", "amount"), tmp, Seq("month"))
       }
     }
+  }
+}
+
+object PipelineSmokeSpec {
+
+  /** The chart of accounts under `work/reference` and the 2025-12
+    * `SampleData` month under `work/raw` with five seeded defects: three
+    * ERROR and two WARN exceptions.
+    */
+  def writeDefectMonth(work: String): Unit = {
+    SampleData.writeChartOfAccounts(s"$work/reference")
+    SampleData.generateSyntheticRaw(s"$work/raw", "2025-12", seed = 42L)
+    // overwrite cell `col` of 0-based data row `row` (the row's DQ index)
+    def edit(file: String, row: Int, col: Int, f: String => String): Unit = {
+      val p = java.nio.file.Paths.get(work, "raw", file)
+      val lines = Files.readAllLines(p).asScala.toIndexedSeq
+      val cells = lines(row + 1).split(",", -1)
+      cells(col) = f(cells(col))
+      Files.write(p, lines.updated(row + 1, cells.mkString(",")).mkString("", "\n", "\n").getBytes)
+    }
+    edit("expenses.csv", 3, 5, "-" + _)              // negative amount
+    edit("expenses.csv", 7, 3, _ => "99999999")      // account not in the COA
+    edit("inventory_movements.csv", 4, 5, "-" + _)   // negative unit cost
+    edit("sales.csv", 2, 5, _ => "junk")             // unparseable amount
+    edit("sales.csv", 6, 0, _ => "")                 // blank date
   }
 }

@@ -6,7 +6,9 @@
 # so the launch environments cannot drift (r10 ADVICE: run.sh and
 # run_bench.sh had already diverged on --add-opens and spark.* props).
 # Usage: tools/run.sh <mainClass> [args...]
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# Runs the classes of the checkout this script lives in.
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS="--add-exports java.base/sun.nio.ch=ALL-UNNAMED"
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
