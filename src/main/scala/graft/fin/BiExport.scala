@@ -2,10 +2,12 @@ package graft.fin
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import graft.sources.Io
 
 /** Flat BI export + data dictionary (SURVEY.md §3.3; reference:
-  * scripts/export_bi_datasets.py:58-122).
+  * scripts/export_bi_datasets.py:58-122). The five CSV sinks do not
+  * depend on each other and run at once ([[SessionBridge.concurrently]]).
   */
 object BiExport {
 
@@ -21,7 +23,7 @@ object BiExport {
       outDirBase: String,
       monthArg: Option[String] = None): BiResult = {
 
-    SmallClose.run(spark, CuratedMonth.files(curatedDir)) { spark =>
+    SmallClose.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
       val cur = CuratedMonth.read(spark, curatedDir, monthArg)
       val month = cur.month
       val outDir = s"$outDirBase/$month"
@@ -40,11 +42,12 @@ object BiExport {
         if (keep.nonEmpty) filtered.select(keep.map(col): _*) else filtered
       }
 
-      Io.writeCsv(factM, s"$outDir/fact_transactions.csv")
-      Io.writeCsv(cur.dimAccounts.orderBy("account_code"), s"$outDir/dim_accounts.csv")
-      Io.writeCsv(kpiM.orderBy("entity", "month"), s"$outDir/kpi_monthly.csv")
-      Io.writeCsv(cur.dqSummary, s"$outDir/dq_summary.csv")
-      Io.writeCsv(cur.dqExceptions, s"$outDir/dq_exceptions.csv")
+      SessionBridge.concurrently(spark)(
+        () => Io.writeCsv(factM, s"$outDir/fact_transactions.csv"),
+        () => Io.writeCsv(cur.dimAccounts.orderBy("account_code"), s"$outDir/dim_accounts.csv"),
+        () => Io.writeCsv(kpiM.orderBy("entity", "month"), s"$outDir/kpi_monthly.csv"),
+        () => Io.writeCsv(cur.dqSummary, s"$outDir/dq_summary.csv"),
+        () => Io.writeCsv(cur.dqExceptions, s"$outDir/dq_exceptions.csv"))
 
       // data dictionary (reference: :111-119)
       def cols(df: DataFrame) = df.columns.mkString("['", "', '", "']")

@@ -2,6 +2,7 @@ package graft.fin
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SourceBridge
 import org.apache.spark.sql.types._
 import graft.sources.Io
 
@@ -26,14 +27,20 @@ final case class CuratedMonth(
 
 object CuratedMonth {
 
-  /** The curated files the exporters read, all months of them. */
-  def files(curatedDir: String): Seq[String] =
-    Seq("fact_transactions.parquet", "dim_accounts.parquet", "kpi_monthly.parquet",
+  /** The curated files the exporters read: of the fact, the given month's
+    * partition only, or every month when the month is to be inferred.
+    */
+  def files(curatedDir: String, month: Option[String]): Seq[String] =
+    Seq(month.fold("fact_transactions.parquet")(m => s"fact_transactions.parquet/month=$m"),
+      "dim_accounts.parquet", "kpi_monthly.parquet",
       "dq_exceptions.csv", "dq_summary.csv").map(f => s"$curatedDir/$f")
 
   /** Tolerant reads with fallback schemas (S2; export_bi_datasets.py:11-16),
     * the KPI month normalized to YYYY-MM, the month given or inferred, and
-    * the fact filtered to it.
+    * the fact filtered to it. When the fact is partitioned by `month` (as
+    * `Pipeline.runMonth` writes it), the filter also names the partition,
+    * so the scan reads that month's directory only; the date filter stays
+    * and decides the rows.
     */
   def read(spark: SparkSession, curatedDir: String, monthArg: Option[String]): CuratedMonth = {
     val fact = Io.readParquetOrEmpty(spark, s"$curatedDir/fact_transactions.parquet",
@@ -61,7 +68,13 @@ object CuratedMonth {
     // first candidate date column (:348); P5 month filter by formatted date (:60-69)
     val dateCol = Io.pickCol(fact,
       Seq("tx_date", "date", "transaction_date", "posting_date", "invoice_date"))
-    val factM = dateCol.fold(fact)(c => fact.filter(date_format(col(c), "yyyy-MM") === lit(month)))
+    val factM = dateCol.fold(fact) { c =>
+      val inMonth = date_format(col(c), "yyyy-MM") === lit(month)
+      fact.filter(
+        if (SourceBridge.partitionColumns(fact).contains("month"))
+          col("month").cast(StringType) === lit(month) && inMonth
+        else inMonth)
+    }
     CuratedMonth(curatedDir, month, dateCol, factM, dimAccounts, kpi)
   }
 }

@@ -2,6 +2,7 @@ package graft.fin
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import graft.sources.Io
 
 /** Dashboard data aggregates + static HTML report (SURVEY.md §3.3;
@@ -13,6 +14,9 @@ import graft.sources.Io
   * chart's series as standalone CSVs. Aggregates run distributed; only
   * the final ≤ hundreds of display rows are collected into the HTML
   * template, mirroring the reference's collect-then-template shape.
+  * Independent actions run at once ([[SessionBridge.concurrently]]): the
+  * collects of the two series and of the three tables read from Spark
+  * plans, then the HTML and the two series CSV sinks.
   */
 object Dashboard {
 
@@ -58,9 +62,12 @@ object Dashboard {
       .limit(n)
   }
 
-  private def htmlTable(df: DataFrame, limit: Int = 200): String = {
+  /** Rows an HTML table shows at most. */
+  private val TableRows = 200
+
+  private def htmlTable(df: DataFrame): String = {
     val cols = df.columns
-    val rows = df.limit(limit).collect()
+    val rows = df.limit(TableRows).collect()
     def esc(s: String) = Charts.esc(s)
     def cell(r: Row, i: Int) = if (r.isNullAt(i)) "" else esc(r.get(i).toString)
     val head = cols.map(c => s"<th>${esc(c)}</th>").mkString
@@ -77,16 +84,23 @@ object Dashboard {
       outHtml: String,
       monthArg: Option[String] = None): DashResult = {
 
-    SmallClose.run(spark, CuratedMonth.files(curatedDir)) { spark =>
+    SmallClose.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
       val cur = CuratedMonth.read(spark, curatedDir, monthArg)
       val month = cur.month
       val kpi = Transform.addMarginCols(cur.kpi)
 
       // each series feeds the charts, the HTML tables AND the CSVs — collect
       // the (display-sized) results once and serve every consumer from the
-      // driver, so each aggregation runs once
-      val trend = Io.onDriver(kpiTrend(kpi))
-      val topExpense = Io.onDriver(topExpenseAccounts(cur.factM, cur.dimAccounts))
+      // driver, so each aggregation runs once; the tables' rows are
+      // collected with them, all at once
+      val Seq(trend, topExpense, kpiRows, dqSummaryRows, dqExceptionsRows) =
+        SessionBridge.concurrently(spark)(
+          () => Io.onDriver(kpiTrend(kpi)),
+          () => Io.onDriver(topExpenseAccounts(cur.factM, cur.dimAccounts)),
+          () => Io.onDriver(kpiTable(kpi, month).limit(TableRows)),
+          () => Io.onDriver(cur.dqSummary.limit(TableRows)),
+          () => Io.onDriver(cur.dqExceptions.orderBy("dataset", "column", "check", "failure_case")
+            .limit(TableRows)))
 
       // chart rendering (reference: build_dashboard.py:96-122 px.line ×2,
       // :162-166 px.bar) — same figures, inline SVG instead of plotly JS
@@ -122,17 +136,15 @@ object Dashboard {
            |$opChart
            |${htmlTable(trend)}
            |<h2>KPI table — $month</h2>
-           |${htmlTable(kpiTable(kpi, month))}
+           |${htmlTable(kpiRows)}
            |<h2>Top expense accounts — $month</h2>
            |$expChart
            |${htmlTable(topExpense)}
            |<h2>DQ summary</h2>
-           |${htmlTable(cur.dqSummary)}
+           |${htmlTable(dqSummaryRows)}
            |<h2>DQ exceptions (first 200)</h2>
-           |${htmlTable(cur.dqExceptions.orderBy("dataset", "column", "check", "failure_case"))}
+           |${htmlTable(dqExceptionsRows)}
            |</body></html>""".stripMargin
-
-      Io.writeText(spark, outHtml, html)
 
       // chart data contract: the series feeding each chart also ship as
       // standalone CSVs next to the HTML, so the artifact carries the same
@@ -141,8 +153,10 @@ object Dashboard {
       val seriesDir = outHtml.stripSuffix(".html") + "_series"
       val trendCols = Seq("entity", "month") ++
         Seq("Revenue", "gross_profit", "operating_profit").filter(kpi.columns.contains)
-      Io.writeCsv(trend.select(trendCols.map(col): _*), s"$seriesDir/revenue_trend.csv")
-      Io.writeCsv(topExpense, s"$seriesDir/top_expense.csv")
+      SessionBridge.concurrently(spark)(
+        () => Io.writeText(spark, outHtml, html),
+        () => Io.writeCsv(trend.select(trendCols.map(col): _*), s"$seriesDir/revenue_trend.csv"),
+        () => Io.writeCsv(topExpense, s"$seriesDir/top_expense.csv"))
 
       DashResult(outHtml, seriesDir, month)
     }

@@ -2,6 +2,7 @@ package graft.fin
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import scala.jdk.CollectionConverters._
 import graft.sources.Io
 
@@ -13,11 +14,16 @@ import graft.sources.Io
   * pipeline may proceed — pipeline.py:129-162) and the final writes. The gate
   * aggregates the per-dataset summary on the executors and collects its
   * five rows, which both decide the gate and are written as
-  * `dq_summary.csv`. Other jobs run before the writes too: the chart of
-  * accounts is collected once, the row index of the DQ copies collects
-  * per-split row counts (one job for the five raw datasets), and
-  * `Transform.addFxAmountBase` collects its missing-rate sample. No read
-  * runs a schema-inference job (see `Io`).
+  * `dq_summary.csv`. Independent actions run at once
+  * ([[SessionBridge.concurrently]]): the two DQ files are written
+  * together, and the gate decides only after both are written; a month
+  * that passes builds its fact (and runs the FX check's job) meanwhile.
+  * The fact partition swap and the `dim_accounts` sink also run at once;
+  * the KPI, which reads the written fact, follows them. Other jobs run
+  * before the writes too: the chart of accounts is collected once, the
+  * row index of the DQ copies collects per-split row counts (one job for
+  * the five raw datasets), and `Transform.addFxAmountBase` collects its
+  * missing-rate sample. No read runs a schema-inference job (see `Io`).
   *
   * A month whose input files are small closes interpreted, on a clone of
   * the caller's session without code generation ([[SmallClose]]): at a
@@ -86,26 +92,32 @@ object Pipeline {
       val summary = spark.createDataFrame(summaryRows.asJava, summaryPlan.schema)
       val dqExceptionsPath = s"$curatedDir/dq_exceptions.csv"
       val dqSummaryPath = s"$curatedDir/dq_summary.csv"
-      Io.writeCsv(exceptions.orderBy("dataset", "column", "check", "failure_case", "index"),
-        dqExceptionsPath)
-      Io.writeCsv(summary, dqSummaryPath)
+      val passes = overall != "FAIL" || mode == "NEVER"
 
-      if (overall == "FAIL" && mode != "NEVER") {
-        exceptions.unpersist()
-        throw new DataQualityException(
-          s"Data quality checks failed. See $dqExceptionsPath and $dqSummaryPath")
+      // month window (P2/P3; pipeline.py:164-170); building the fact runs
+      // the FX join's missing-rate check, a job of its own
+      lazy val fact = {
+        val salesM = typed("sales").filter(Transform.monthWindow(col("date"), month))
+        val expensesM = typed("expenses").filter(Transform.monthWindow(col("date"), month))
+        val inventoryM = typed("inventory_movements").filter(Transform.monthWindow(col("date"), month))
+        val payrollM = typed("payroll").filter(col("month") === lit(month))
+        val fx = Transform.fxToBase(typed("fx_rates"), settings.baseCurrency)
+        Transform.toFactTransactions(
+          salesM, expensesM, payrollM, inventoryM, fx, settings.baseCurrency)
       }
-      exceptions.unpersist()
 
-      // month window (P2/P3; pipeline.py:164-170)
-      val salesM = typed("sales").filter(Transform.monthWindow(col("date"), month))
-      val expensesM = typed("expenses").filter(Transform.monthWindow(col("date"), month))
-      val inventoryM = typed("inventory_movements").filter(Transform.monthWindow(col("date"), month))
-      val payrollM = typed("payroll").filter(col("month") === lit(month))
+      // both DQ files are written whatever the gate decides; a month that
+      // passes builds its fact while they are written, and a failure of
+      // either surfaces only once both files are written
+      try SessionBridge.concurrently(spark)(
+        () => Io.writeCsv(exceptions.orderBy("dataset", "column", "check", "failure_case", "index"),
+          dqExceptionsPath),
+        () => Io.writeCsv(summary, dqSummaryPath),
+        () => if (passes) fact)
+      finally exceptions.unpersist()
 
-      val fx = Transform.fxToBase(typed("fx_rates"), settings.baseCurrency)
-      val fact = Transform.toFactTransactions(
-        salesM, expensesM, payrollM, inventoryM, fx, settings.baseCurrency)
+      if (!passes) throw new DataQualityException(
+        s"Data quality checks failed. See $dqExceptionsPath and $dqSummaryPath")
 
       val dimPath = s"$curatedDir/dim_accounts.parquet"
       val kpiPath = s"$curatedDir/kpi_monthly.parquet"
@@ -117,13 +129,15 @@ object Pipeline {
       // copy of the partition if the write failed, and plain dynamic
       // overwrite would silently KEEP a stale partition when corrected
       // inputs yield zero in-month rows.
-      replaceMonthPartition(spark, factPath, month) { tmpRoot =>
-        Io.writeParquetPartitioned(
-          fact.withColumn("month", date_format(col("date"), "yyyy-MM")),
-          tmpRoot, Seq("month"))
-      }
-      // one partition, as the single-file COA read wrote it
-      Io.writeParquet(dimAccounts.coalesce(1), dimPath)
+      // the dimension does not depend on the fact: both sinks run at once
+      SessionBridge.concurrently(spark)(
+        () => replaceMonthPartition(spark, factPath, month) { tmpRoot =>
+          Io.writeParquetPartitioned(
+            fact.withColumn("month", date_format(col("date"), "yyyy-MM")),
+            tmpRoot, Seq("month"))
+        },
+        // one partition, as the single-file COA read wrote it
+        () => Io.writeParquet(dimAccounts.coalesce(1), dimPath))
       // build the KPI from the just-written fact (column-pruned parquet
       // scan) rather than the lazy raw→union→FX plan — otherwise the whole
       // fact pipeline would execute a second time for the KPI write. The

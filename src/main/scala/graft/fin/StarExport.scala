@@ -3,6 +3,7 @@ package graft.fin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import graft.sources.Io
 
 /** Star-schema export (SURVEY.md §3.2; reference:
@@ -14,7 +15,9 @@ import graft.sources.Io
   * lookup joins, so fact_gl streams at any scale. The dimensions
   * (dim_entity, dim_account, dim_date) are collected once on the driver
   * and served from there to their CSV sinks, the broadcast joins and
-  * dim_month, instead of being recomputed by each consumer.
+  * dim_month, instead of being recomputed by each consumer. The three
+  * collects run at once, then the six CSV sinks run at once
+  * ([[SessionBridge.concurrently]]).
   */
 object StarExport {
 
@@ -187,33 +190,26 @@ object StarExport {
       outDirBase: String,
       monthArg: Option[String] = None): StarResult = {
 
-    SmallClose.run(spark, CuratedMonth.files(curatedDir)) { spark =>
+    SmallClose.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
       val CuratedMonth(_, month, dateCol, factM, dimAccountsSrc, kpi) =
         CuratedMonth.read(spark, curatedDir, monthArg)
       val outDir = s"$outDirBase/$month"
 
-      val dimEntity = Io.onDriver(buildDimEntity(factM, kpi))
-      val dimAccount = Io.onDriver(buildDimAccount(dimAccountsSrc))
-      val (dimDate, dimMonth) = dateCol match {
-        case Some(c) =>
-          val dd = Io.onDriver(buildDimDate(factM, c))
-          (dd, buildDimMonth(dd))
-        case None =>
-          val dd = spark.emptyDataFrame
-          (dd, dd)
-      }
+      val Seq(dimEntity, dimAccount, dimDate) = SessionBridge.concurrently(spark)(
+        () => Io.onDriver(buildDimEntity(factM, kpi)),
+        () => Io.onDriver(buildDimAccount(dimAccountsSrc)),
+        () => dateCol.fold(spark.emptyDataFrame)(c => Io.onDriver(buildDimDate(factM, c))))
+      val dimMonth = if (dateCol.isEmpty) dimDate else buildDimMonth(dimDate)
       val factGl = buildFactGl(factM, dimEntity, dimAccount, dateCol)
       val factKpi = buildFactKpiMonthly(kpi, dimEntity, month)
 
-      Io.writeCsv(dimDate, s"$outDir/dim_date.csv")
-      Io.writeCsv(dimMonth, s"$outDir/dim_month.csv")
-      Io.writeCsv(dimEntity, s"$outDir/dim_entity.csv")
-      Io.writeCsv(dimAccount, s"$outDir/dim_account.csv")
-      Io.writeCsv(factGl, s"$outDir/fact_gl.csv")
-      Io.writeCsv(factKpi, s"$outDir/fact_kpi_monthly.csv")
-
       val files = Seq("dim_date.csv", "dim_month.csv", "dim_entity.csv",
         "dim_account.csv", "fact_gl.csv", "fact_kpi_monthly.csv")
+      SessionBridge.concurrently(spark)(
+        Seq(dimDate, dimMonth, dimEntity, dimAccount, factGl, factKpi).zip(files).map {
+          case (df, f) => () => Io.writeCsv(df, s"$outDir/$f")
+        }: _*)
+
       // byte-parity with the reference's committed artifact, including its
       // column alignment (reference: export_powerbi_star_schema.py:390-413;
       // golden-compared in ExportSpec against data/bi_star/2025-12/)

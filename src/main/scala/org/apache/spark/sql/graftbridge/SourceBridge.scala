@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -70,4 +71,15 @@ object SourceBridge {
       case _ => None
     }
   }
+
+  /** The partition columns of the file sources `df` reads, as their
+    * directories (`key=value`) name them.
+    */
+  def partitionColumns(df: DataFrame): Seq[String] =
+    df.asInstanceOf[CDataset[Row]].queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.partitionSchema.fieldNames.toSeq
+        case _ => Nil
+      }
+    }.flatten
 }

@@ -21,7 +21,8 @@ class CloseJobsSpec extends SparkSpec {
 
   /** Job budget per layer for one `SampleData` month at this suite's session
     * settings (`local[4]`, 4 shuffle partitions, AQE on). A ratchet: a
-    * change may lower a budget, never raise it.
+    * change may lower a budget, never raise it. Each layer must start
+    * exactly its budget, so a change that saves jobs lowers the budget.
     */
   val Budgets: ListMap[String, Int] = ListMap(
     "fin.run_month" -> 26,
@@ -74,6 +75,14 @@ class CloseJobsSpec extends SparkSpec {
         closeJobs(layer).mkString("\n  ")
     }
     assert(over.isEmpty, over.mkString("\n"))
+
+    // jobs are counted by the layer's local property, which the close's
+    // pool threads must carry: a job started without it counts for no
+    // layer, so a lost tag would read as a layer within budget
+    val counts = closeJobs.map { case (layer, names) => layer -> names.size }
+    val untagged = counts.collect { case (layer, 0) => layer }
+    assert(untagged.isEmpty, s"no tagged job from ${untagged.mkString(", ")}")
+    assert(counts == Budgets, s"tagged jobs per layer $counts, budgets $Budgets")
   }
 
   test("raw CSV and curated parquet reads resolve their schema without a job") {

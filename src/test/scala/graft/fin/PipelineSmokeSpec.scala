@@ -134,6 +134,27 @@ class PipelineSmokeSpec extends SparkSpec {
     assert(csvLines(s"$curated/dq_summary.csv") === expectedSummary("FAIL", "FAIL"))
   }
 
+  test("a missing FX rate under NEVER fails after both DQ files are written, before the fact") {
+    val work = Files.createTempDirectory("graft-fx-missing").toString
+    SampleData.writeChartOfAccounts(s"$work/reference")
+    SampleData.generateSyntheticRaw(s"$work/raw", "2025-12", seed = 42L)
+    val sales = java.nio.file.Paths.get(work, "raw", "sales.csv")
+    val lines = Files.readAllLines(sales).asScala.toIndexedSeq
+    val cells = lines(1).split(",", -1)
+    cells(4) = "XXX" // a currency without rates
+    Files.write(sales, lines.updated(1, cells.mkString(",")).mkString("", "\n", "\n").getBytes)
+
+    val curated = s"$work/curated"
+    val e = intercept[IllegalStateException] {
+      Pipeline.runMonth(spark, Settings.default, "2025-12",
+        s"$work/raw", curated, s"$work/reference", "NEVER")
+    }
+    assert(e.getMessage.contains("Missing FX rates"), e.getMessage)
+    assert(csvLines(s"$curated/dq_exceptions.csv").exists(_.startsWith("sales,0,currency,")))
+    assert(csvLines(s"$curated/dq_summary.csv").size === 6)
+    assert(!Files.exists(java.nio.file.Paths.get(curated, "fact_transactions.parquet")))
+  }
+
   test("the month's DQ exceptions take one row pass per raw dataset") {
     val work = Files.createTempDirectory("graft-dq-plan").toString
     SampleData.writeChartOfAccounts(s"$work/reference")
