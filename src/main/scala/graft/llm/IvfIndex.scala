@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.sources.Io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,7 +41,7 @@ object IvfIndex {
 
   /** The codebook read back from the sidecar (k·dim rows → k arrays). */
   def readCodebook(spark: SparkSession, path: String): Array[Array[Double]] = {
-    val rows = spark.read.parquet(s"$path/codebook")
+    val rows = Io.readTable(spark, s"$path/codebook")
       .collect().map(r => (r.getAs[Long]("cl"), r.getAs[Long]("pos"), r.getAs[Double]("w")))
     rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, ps) =>
       ps.sortBy(_._2).map(_._3)
@@ -54,7 +55,7 @@ object IvfIndex {
     */
   def probedCells(spark: SparkSession, path: String,
                   cells: Seq[Long]): DataFrame =
-    spark.read.parquet(s"$path/corpus")
+    Io.readTable(spark, s"$path/corpus")
       .filter(col("cluster").isin(cells: _*))
 
   /** Top-k against the persisted index: per query, its `nProbe` nearest

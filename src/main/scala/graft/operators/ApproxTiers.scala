@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import QueryHelpers.decSum
+import QueryHelpers.{decSum, t}
 
 /** The 100 TB tier of the four profiling/robust-stats queries whose exact
   * registered forms buffer values or Expand rows: callable code, not a
@@ -112,7 +112,7 @@ object ApproxTiers {
     * them every round, so a perf regression in the actual 100 TB path
     * shows in BENCH_r* rather than hiding behind the oracle-exact tier.
     *
-    * Partition-width caveat (r12 ADVICE): the ScanFanout exchange makes
+    * Partition-width caveat (r12 ADVICE): the scan fan-out exchange makes
     * the quantile-summary merges inside percentile_approx depend on the
     * partition layout, i.e. on `spark.sql.shuffle.partitions` / core
     * count — a c8 and a c32 run may disagree in the sketch's error band
@@ -127,14 +127,14 @@ object ApproxTiers {
   val benchQueries: Map[String, (SparkSession, String) => DataFrame] = {
     def events(s: SparkSession, dir: String): DataFrame = {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      graft.sources.ScanFanout.parquet(s, s"$dir/events.parquet")
+      t(s, dir, "events")
     }
     Map(
       "table_profile_approx" -> ((s, dir) =>
-        tableProfile(graft.sources.ScanFanout.parquet(s, s"$dir/orders.parquet"),
+        tableProfile(t(s, dir, "orders"),
           CoreQueries.ProfileCols, rsd = 0.05)),
       "median_mode_approx" -> ((s, dir) =>
-        medianMode(graft.sources.ScanFanout.parquet(s, s"$dir/lineitem.parquet"),
+        medianMode(t(s, dir, "lineitem"),
           "l_returnflag", "l_quantity")),
       "equidepth_histogram_approx" -> ((s, dir) =>
         equidepthHistogram(events(s, dir), "event_type", "value", bins = 8)),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
-import QueryHelpers.{decSum, docs, events, r6, roundHU}
+import QueryHelpers.{decSum, docs, events, r6, roundHU, t}
 
 /** Round-11 additions: the remaining published curation / evaluation /
   * privacy families not yet in the catalog — multiple-testing control
@@ -22,9 +22,6 @@ import QueryHelpers.{decSum, docs, events, r6, roundHU}
   * run over calendar-, source-, bucket- or CumBuckets-sized rollups).
   */
 object CurationQueries {
-
-  private def cust(s: SparkSession, dir: String): DataFrame =
-    graft.sources.ScanFanout.parquet(s, s"$dir/customer.parquet")
 
   /** Abramowitz & Stegun 26.2.17 upper-tail normal approximation
     * (|error| < 7.5e-8): Q(z) = φ(z)·(b₁t + … + b₅t⁵), t = 1/(1+pz) for
@@ -187,7 +184,7 @@ object CurationQueries {
     // class-cardinality frames (windows partitioned BY CLASS over ≤10
     // rows each), never fact-sized.
     "t_closeness" -> ((s, dir) => {
-      val c = cust(s, dir)
+      val c = t(s, dir, "customer")
       val mm = broadcast(c.agg(min("c_acctbal").as("lo"),
         max("c_acctbal").as("hi"), count(lit(1)).as("nn")))
       val bucketed = c.crossJoin(mm)

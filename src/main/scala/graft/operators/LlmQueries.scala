@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.llm.{AllPairs, Dedup, Similarity, TextOps}
 import graft.llm.TextOps._
-import QueryHelpers.{docs, r2, r6, r8, roundHU}
+import QueryHelpers.{docs, r2, r6, r8, roundHU, t}
 
 /** LLM-training-data-pipeline queries over the shared `documents` /
   * `embeddings` tables, each paired with DuckDB oracle SQL built from the
@@ -24,9 +24,6 @@ import QueryHelpers.{docs, r2, r6, r8, roundHU}
   * ScalaTest as equivalence baselines.
   */
 object LlmQueries {
-
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    graft.sources.ScanFanout.parquet(s, s"$dir/embeddings.parquet")
 
   /** Scored/labelled doc frame shared by the classifier-evaluation
     * family (`roc_auc` / `calibration_bins` / `lift_gains`): label
@@ -1156,7 +1153,7 @@ object LlmQueries {
     // grouped means (the label_centroids machinery), then a label-keyed
     // dim-join; drift = 1 − cos rounded 6dp.
     "embedding_drift" -> ((s, dir) => {
-      val halves = embs(s, dir)
+      val halves = t(s, dir, "embeddings")
         .select(col("label").cast("long").as("label"),
           (col("vec_id") % 2).as("half"),
           posexplode(Similarity.toDouble(col("embedding"))))
@@ -1214,7 +1211,7 @@ object LlmQueries {
     "modality_coverage" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id").as("id"))
         .withColumn("has_doc", lit(1L))
-      val v = embs(s, dir).select(col("vec_id").as("id"))
+      val v = t(s, dir, "embeddings").select(col("vec_id").as("id"))
         .withColumn("has_vec", lit(1L))
       d.join(v, Seq("id"), "full_outer")
         .agg(
@@ -1411,7 +1408,7 @@ object LlmQueries {
           "left")
         .groupBy(col("x.id").as("id"))
         .agg((count(col("y.id")) + 1).as("bm25_rank"))
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val cRank = Similarity.bruteForceTopK(e, e.filter(col("vec_id") === 0),
           "vec_id", "embedding", k = 50)
         .select(col("neighbor_id").as("id"), col("rank").as("cos_rank"))
@@ -1565,7 +1562,7 @@ object LlmQueries {
 
     // Exact cosine top-k: broadcast query set, one corpus scan
     "cosine_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 10)
         .orderBy("query_id", "rank")
     }),
@@ -1582,7 +1579,7 @@ object LlmQueries {
     // once, 64², checkpointed). Nothing data-sized is broadcast or
     // collected; at 100 TB only the pool scan grows.
     "mmr_select" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0)
         .select(Similarity.toDouble(col("embedding")).as("qv"))
       val pool = e.filter(col("vec_id") =!= 0)
@@ -1674,7 +1671,7 @@ object LlmQueries {
     // the label inequality pushed into the join condition so unusable
     // pairs never reach the per-query rank.
     "hard_negatives" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val c = e.select(col("vec_id").as("neighbor_id"),
         Similarity.toDouble(col("embedding")).as("cv"), col("label").as("n_label"))
       val q = e.filter(col("vec_id") < 10)
@@ -1697,7 +1694,7 @@ object LlmQueries {
     // Embedding near-dup pairs above a cosine threshold: exact semantics,
     // distributed block self-join (codegen'd dot kernel, no driver collect)
     "cosine_near_dup" -> ((s, dir) => {
-      Similarity.blockNearDupPairs(embs(s, dir), "vec_id", "embedding", threshold = 0.4)
+      Similarity.blockNearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding", threshold = 0.4)
         .orderBy("a_id", "b_id")
     }),
 
@@ -1707,7 +1704,7 @@ object LlmQueries {
     // batch-batch pairs never formed (even/odd vec_id split stands in
     // for corpus/new-batch)
     "cosine_cross_near_dup" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       Similarity.crossNearDupPairs(
         e.filter(col("vec_id") % 2 =!= 0), e.filter(col("vec_id") % 2 === 0),
         "vec_id", "embedding", threshold = 0.4)
@@ -1721,7 +1718,7 @@ object LlmQueries {
     // the approximate semantics still have one exact answer and a full
     // SQL oracle.
     "lsh_cosine_near_dup" -> ((s, dir) => {
-      Similarity.lshNearDupPairs(embs(s, dir), "vec_id", "embedding",
+      Similarity.lshNearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
           threshold = 0.4, nPlanes = 4, dim = 64, probeRadius = 1)
         .orderBy("a_id", "b_id")
     }),
@@ -1737,7 +1734,7 @@ object LlmQueries {
     // at scale 18 the scaled value passes 2^53 and the engines diverge
     // in the last ulp (same trap as zscore_outliers' s2).
     "label_centroids" -> ((s, dir) => {
-      embs(s, dir)
+      t(s, dir, "embeddings")
         .select(col("label"), posexplode(Similarity.toDouble(col("embedding"))))
         .groupBy("label", "pos")
         .agg((sum(col("col").cast("decimal(38,7)")).cast("double") / count(lit(1)))
@@ -1755,7 +1752,7 @@ object LlmQueries {
     // and the per-member cosine average is decimal-routed so shuffle
     // merge order cannot perturb it.
     "centroid_dispersion" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
         .select(col("label"), col("vec_id"),
           Similarity.toDouble(col("embedding")).as("e"))
       val cvec = e.select(col("label"), posexplode(col("e")))
@@ -1786,7 +1783,7 @@ object LlmQueries {
     // vector is scored in one pass. The per-label average routes through
     // a decimal sum so shuffle merge order cannot perturb it.
     "silhouette_proxy" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
         .select(col("label"), col("vec_id"),
           Similarity.toDouble(col("embedding")).as("e"))
       val cvec = e.select(col("label"), posexplode(col("e")))
@@ -1822,7 +1819,7 @@ object LlmQueries {
     // harness can sort/hash the column — the array form stays available
     // in-library via the same transform.
     "embedding_quantize" -> ((s, dir) => {
-      embs(s, dir)
+      t(s, dir, "embeddings")
         .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("e"))
         .withColumn("mx", array_max(transform(col("e"), x => abs(x))))
         .withColumn("scale",
@@ -2569,7 +2566,7 @@ object LlmQueries {
     // bruteForceTopK in ScalaTest) but DETERMINISTIC retrieval: fixed
     // hyperplanes, so the full result is DuckDB-oracled too.
     "ann_lsh_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       Similarity.annTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
         k = 10, nPlanes = 4, dim = 64, probeRadius = 1)
         .orderBy("query_id", "rank")
@@ -2583,7 +2580,7 @@ object LlmQueries {
     // table itself has one exact answer. left-semi intersect on
     // (query, neighbor), two key-sized aggregates.
     "ann_recall" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
         .select(col("query_id"), col("neighbor_id"))
@@ -2606,7 +2603,7 @@ object LlmQueries {
     // approximate recall (asserted in ScalaTest) but deterministic
     // retrieval: seeded decimal-exact k-means, so DuckDB-oracled too.
     "ann_ivf_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
         k = 10, nClusters = 16, nProbe = 4)
         .orderBy("query_id", "rank")
@@ -2618,7 +2615,7 @@ object LlmQueries {
     // had no measured recall. Deterministic retrieval (seeded
     // decimal-exact k-means) ⇒ the recall table has one exact answer.
     "ann_ivf_recall" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
         .select(col("query_id"), col("neighbor_id"))
@@ -2662,7 +2659,7 @@ object LlmQueries {
     // lemmas on annCandidatesTagged / ivfCandidatesTagged.
     "ann_tuning_curve" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
         .select(col("query_id"), col("neighbor_id"))
@@ -2730,7 +2727,7 @@ object LlmQueries {
     // broadcast codebook, per-position terms 8dp-floored into exact
     // decimal sums.
     "pq_codebooks" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding", PqM, PqK, PqIters)
       val cbDf = broadcast(Similarity.pqCodebookDf(s, cbs))
       val codes = Similarity.pqCodes(e, "vec_id", "embedding", cbs)
@@ -2764,7 +2761,7 @@ object LlmQueries {
     // identical rationals). The only fact-sized flow is codes →
     // per-(query, vec) partial aggregate → top-k.
     "ann_pq_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding", PqM, PqK, PqIters)
       Similarity.pqAdcTopK(e, e.filter(col("vec_id") < 10),
           "vec_id", "embedding", cbs, k = 10)
@@ -2779,7 +2776,7 @@ object LlmQueries {
     // engines fold identically); one broadcast-query corpus scan.
     "pq_recall" -> ((s, dir) => {
       import graft.functions.VectorExpressions.vectorDot
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val c = e.select(col("vec_id").as("neighbor_id"),
         Similarity.toDouble(col("embedding")).as("cv"))
@@ -2820,7 +2817,7 @@ object LlmQueries {
     // no per-depth explode.
     "rbo_rankings" -> ((s, dir) => {
       import graft.functions.VectorExpressions.vectorDot
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val c = e.select(col("vec_id").as("neighbor_id"),
         Similarity.toDouble(col("embedding")).as("cv"))
@@ -2861,7 +2858,7 @@ object LlmQueries {
     // scrolls before a relevant hit). One broadcast-query corpus scan;
     // misses surface as NULL rank / rr = 0, never dropped rows.
     "mrr_eval" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val top = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
       val labels = e.select(col("vec_id").as("neighbor_id"),
@@ -2888,7 +2885,7 @@ object LlmQueries {
     // query-PARTITIONED 10-row window; precision terms 8dp-round into
     // exact decimal sums.
     "map_eval" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val top = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
       val labels = e.select(col("vec_id").as("neighbor_id"),
@@ -2936,7 +2933,7 @@ object LlmQueries {
     // Every training step is the deterministic Lloyd chain; one exact
     // answer, oracled end to end.
     "ann_ivfpq_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       Similarity.ivfPqTopK(e, e.filter(col("vec_id") < 10),
           "vec_id", "embedding", k = 10, coarseK = IvfPqCoarseK,
           nProbe = IvfPqProbe, m = PqM, pqK = PqK, iters = PqIters)
@@ -2949,7 +2946,7 @@ object LlmQueries {
     // the full IVF×PQ stack, read next to pq_recall (quantization only)
     // and ann_ivf_recall (cell pruning only) to attribute the loss.
     "ivfpq_recall" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val exact = exactL2TopK(e, k = 10)
         .select(col("query_id"), col("neighbor_id"))
         .localCheckpoint(false) // reused: denominator + intersect
@@ -2980,7 +2977,7 @@ object LlmQueries {
     // fails the job naming the cell (the L129 guard), instead of
     // silently going quadratic in one straggler task.
     "semantic_dedup" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val cs = Similarity.ivfCentroids(e, "vec_id", "embedding",
         nClusters = 8, iters = 2)
       val assigned = CoreQueries.blockSizeGuard(
@@ -3051,7 +3048,7 @@ object LlmQueries {
     "vector_norm_profile" -> ((s, dir) => {
       val norm = sqrt(aggregate(Similarity.toDouble(col("embedding")),
         lit(0.0), (a, x) => a + x * x))
-      val n = embs(s, dir).select(col("label"), norm.as("nrm"))
+      val n = t(s, dir, "embeddings").select(col("label"), norm.as("nrm"))
         .localCheckpoint(false) // feeds the percentile pass AND the fence count
       val stats = n.groupBy("label").agg(
         percentile(col("nrm"), lit(0.25)).as("q1"),
@@ -3084,7 +3081,7 @@ object LlmQueries {
     "label_noise_knn" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val kNn = 5
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val cs = Similarity.ivfCentroids(e, "vec_id", "embedding",
         nClusters = 8, iters = 2)
       val assigned = CoreQueries.blockSizeGuard(
@@ -3124,7 +3121,7 @@ object LlmQueries {
     // ties to the LOWEST label, mirrored by the oracle's row_number
     // order. Same seeded decimal-exact codebook as the ann_ivf family.
     "cluster_purity" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val cs = Similarity.ivfCentroids(e, "vec_id", "embedding",
         nClusters = 8, iters = 2)
       val al = Similarity.clusterAssignments(e, "vec_id", "embedding", cs)
@@ -3151,7 +3148,7 @@ object LlmQueries {
     // One assignment scan + a k-row left join; the codebook is the same
     // bounded construction-time artifact as the ann_ivf_* family.
     "cluster_balance" -> ((s, dir) => {
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
       val cs = Similarity.ivfCentroids(e, "vec_id", "embedding",
         nClusters = 8, iters = 2)
       val counts = Similarity.clusterAssignments(e, "vec_id", "embedding", cs)
@@ -3822,7 +3819,7 @@ object LlmQueries {
     // (the label_centroids contract), variance via E[x²]−E[x]² on the
     // exact sums, 6dp-rounded.
     "dimension_variance" -> ((s, dir) => {
-      embs(s, dir)
+      t(s, dir, "embeddings")
         .select(posexplode(Similarity.toDouble(col("embedding"))))
         .groupBy("pos")
         .agg(count(lit(1)).as("n"),
@@ -3846,7 +3843,7 @@ object LlmQueries {
     // Nothing after the first aggregate scales with SF.
     "isotropy_score" -> ((s, dir) => {
       val mu = col("s1") / col("n")
-      embs(s, dir)
+      t(s, dir, "embeddings")
         .select(posexplode(Similarity.toDouble(col("embedding"))))
         .groupBy("pos")
         .agg(count(lit(1)).as("n"),
@@ -4125,7 +4122,7 @@ object LlmQueries {
     // type-7 interpolated percentiles (Spark `percentile` ≡ DuckDB
     // `quantile_cont`, the median_mode parity), dim-keyed shuffles only.
     "embedding_robust_stats" -> ((s, dir) => {
-      val ex = embs(s, dir)
+      val ex = t(s, dir, "embeddings")
         .select(posexplode(Similarity.toDouble(col("embedding"))))
         .localCheckpoint(false) // feeds the percentile pass AND the fence count
       val stats = ex.groupBy("pos").agg(
@@ -4206,7 +4203,7 @@ object LlmQueries {
     "jl_projection" -> ((s, dir) => {
       import s.implicits._
       val k = 16
-      embs(s, dir)
+      t(s, dir, "embeddings")
         .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("e"))
         .as[(Long, Seq[Double])]
         .mapPartitions(_.flatMap { case (id, e) =>
@@ -4245,11 +4242,11 @@ object LlmQueries {
     // the 6dp loading vector plus the Rayleigh-quotient eigenvalue
     // estimate λ = v·(X'Xv)/n on the final iterate.
     "pca_power" -> ((s, dir) => {
-      val ex = embs(s, dir)
+      val ex = t(s, dir, "embeddings")
         .select(col("vec_id"), posexplode(Similarity.toDouble(col("embedding"))))
         .withColumnRenamed("col", "x")
         .localCheckpoint(false)
-      val n = broadcast(embs(s, dir).agg(count(lit(1)).as("n_vecs")))
+      val n = broadcast(t(s, dir, "embeddings").agg(count(lit(1)).as("n_vecs")))
       def normalize(v: DataFrame): DataFrame = {
         val nrm = broadcast(v.agg(
           sum((col("v") * col("v")).cast("decimal(38,18)")).cast("double").as("s2")))
@@ -4499,7 +4496,7 @@ object LlmQueries {
             .otherwise(array().cast("array<string>")))
       // (A/B'd in r13: fanning the two explode branches traded a ~15%
       // wall win for 5x executor time — per-task overhead on a sub-MB
-      // scan, the ScanFanout floor rationale. Left single-task.)
+      // scan, the scan fan-out floor rationale. Left single-task.)
       val train = d.filter(col("doc_id") % 2 === 0)
         .select(col("lang"), explode(tgs).as("tg"))
         .groupBy("lang", "tg").agg(count(lit(1)).as("c"))
@@ -5100,7 +5097,7 @@ object LlmQueries {
     // one linear scan; the argmin is a vec-partitioned k-row window.
     "nearest_centroid_eval" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val e = embs(s, dir)
+      val e = t(s, dir, "embeddings")
         .select(col("label"), col("vec_id"),
           Similarity.toDouble(col("embedding")).as("e"))
       val cvec = e.select(col("label"), posexplode(col("e")))

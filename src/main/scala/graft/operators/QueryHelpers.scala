@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{EventTime, Io}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
@@ -44,18 +45,14 @@ private[graft] object QueryHelpers {
     s.conf.get("spark.sql.shuffle.partitions").toInt
 
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.sources.ScanFanout.parquet(s, s"$dir/$name.parquet")
+    Io.readTable(s, s"$dir/$name.parquet")
 
   def docs(s: SparkSession, dir: String): DataFrame = t(s, dir, "documents")
 
   /** The events table with the schema-adaptive `ts_us` column. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/events.parquet")
-    val wide = df.withColumn("ts_us", graft.sources.EventTime.tsUs(df))
-    // fan out AFTER the ts_us projection so the schema-dependent column
-    // derivation is not re-resolved against the repartitioned child
-    graft.sources.ScanFanout.fanOut(wide, s"$dir/events.parquet")
+    Io.readTable(s, s"$dir/events.parquet", df => df.withColumn("ts_us", EventTime.tsUs(df)))
   }
 
   /** Co-purchase pairs: parts ordered together, as ONE per-order

@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.functions.col
 
-/** Plan-evidence dump for the ScanFanout thresholds (r12 verdict #1/#2):
-  * explains a filtered projection over `ScanFanout.parquet(path)` so the
+/** Plan-evidence dump for the scan fan-out thresholds (r12 verdict #1/#2):
+  * explains a filtered projection over `Io.readTable(path)` so the
   * committed dumps show (a) exactly where the Repartition exchange fires
   * — and where the splittability gate suppresses it — and (b) that
   * `PushedFilters` / `ReadSchema` survive the exchange.
@@ -19,9 +19,9 @@ object FanoutEvidence {
     val cpus = graft.LocalRun.cpus
     val spark = graft.LocalRun.session(logLevel = "ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = ScanFanout.parquet(spark, path).where(filterExpr)
+    val base = Io.readTable(spark, path).where(filterExpr)
     val df = if (cols.isEmpty) base else base.select(cols.map(col): _*)
-    println(s"========== ScanFanout over $path ==========")
+    println(s"========== Io.readTable over $path ==========")
     println(s"-- session width: $cpus; filter: $filterExpr; " +
       s"projection: ${if (cols.isEmpty) "*" else cols.mkString(",")}")
     println(s"-- resulting partitions: ${df.rdd.getNumPartitions}")

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
@@ -21,11 +22,13 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (reference: scripts/export_bi_datasets.py:11-16).
   *
   * Scale notes: reads here run no schema-inference job (at 100 TB an extra
-  * pass; at close size a Spark job per read that does no data work). They
-  * take an explicit `StructType`, or resolve the schema on the driver the
-  * way inference would: the raw CSV header from the first non-empty line,
-  * parquet from one footer. Only file layouts those two leave to Spark
-  * (see [[readCsvRaw]], `readParquet`) and [[readParquetMerged]], whose
+  * pass; at close size, or while a query is being built, a Spark job per
+  * read that does no data work). They take an explicit `StructType`, or
+  * resolve the schema on the driver the way inference would: the raw CSV
+  * header from the first non-empty line, parquet from one footer. This
+  * covers the close's reads and every query-layer table read
+  * ([[readTable]]). Only file layouts those two leave to Spark (see
+  * [[readCsvRaw]], `readParquet`) and [[readParquetMerged]], whose
   * contract is to merge every file's footer, still infer with a job.
   * CSV sinks write one file only because the reference emits single CSV
   * artifacts for BI handoff — the parquet sinks, which carry the actual
@@ -82,10 +85,11 @@ object Io {
     finally lines.close()
   }
 
-  /** The files a scan of `path` lists (hidden names skipped) and the
-    * partition keys of its `key=value` directories; None for a layout only
-    * Spark's listing should interpret: any subdirectory when not
-    * `partitioned`, else one that is not a `key=value` directory.
+  /** The files a scan of `path` lists (hidden names skipped; the parquet
+    * summary files `_metadata` and `_common_metadata` are listed, not
+    * hidden) and the partition keys of its `key=value` directories; None
+    * for a layout only Spark's listing should interpret: any subdirectory
+    * when not `partitioned`, else one that is not a `key=value` directory.
     */
   private def leafFiles(spark: SparkSession, path: String,
                         partitioned: Boolean): Option[(Seq[FileStatus], Set[String])] = {
@@ -144,24 +148,96 @@ object Io {
 
   /** Parquet scan of `path` with the data schema inference would take,
     * read from one footer on the driver: `_common_metadata`, else
-    * `_metadata`, else the first data file in path order. Partition
-    * columns are discovered as by any read. Schema merging, a data column
-    * named like a partition key, an unreadable footer or a directory
-    * without data files is left to Spark's own read (which fails loudly on
-    * the last).
+    * `_metadata`, else the first data file in path order of `listed` (the
+    * `leafFiles` of `path`). Partition columns are discovered as by any
+    * read. Schema merging, a data column named like a partition key, an
+    * unreadable footer or a directory without data files is left to
+    * Spark's own read (which fails loudly on the last).
     */
-  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+  private def readParquet(spark: SparkSession, path: String,
+                          listed: Option[(Seq[FileStatus], Set[String])]): DataFrame = {
     val schema = if (SourceBridge.parquetMergesSchemas(spark)) None
-      else leafFiles(spark, path, partitioned = true).flatMap { case (files, keys) =>
+      else listed.flatMap { case (files, keys) =>
         val byPath = files.sortBy(_.getPath.toString)
-        val summaries = Seq("_common_metadata", "_metadata")
-        summaries.iterator.flatMap(n => byPath.find(_.getPath.getName == n)).nextOption()
-          .orElse(byPath.find(f => !summaries.contains(f.getPath.getName)))
-          .flatMap(f => Try(SourceBridge.parquetSchema(spark, f)).toOption)
+        Summaries.iterator.flatMap(n => byPath.find(_.getPath.getName == n)).nextOption()
+          .orElse(byPath.find(f => !Summaries.contains(f.getPath.getName)))
+          .flatMap(f => Try(SourceBridge.parquetFooter(spark, f)._1).toOption)
           .filterNot(_.fieldNames.exists(n => keys.exists(_.equalsIgnoreCase(n))))
       }
     schema.fold(spark.read)(spark.read.schema).parquet(path)
   }
+
+  private def readParquet(spark: SparkSession, path: String): DataFrame =
+    readParquet(spark, path, leafFiles(spark, path, partitioned = true))
+
+  /** Parquet summary files, in the order a schema is taken from them. */
+  private val Summaries = Seq("_common_metadata", "_metadata")
+
+  /** The query layer's parquet table read: `readParquet`'s scan, mapped by
+    * `derive`, then fanned out to the session shuffle width when the
+    * files cannot feed that width on their own. One listing of `path`
+    * serves both the schema and the fan-out decision. `derive` runs
+    * before the exchange, for columns that depend on the scanned schema
+    * (the events `ts_us`), so they are not re-resolved against the
+    * repartitioned child.
+    *
+    * Why: a single-row-group file is read by ONE task whatever its size
+    * (a row group belongs to the split holding its midpoint), so every
+    * operator between the scan and the first keyed exchange would run on
+    * one core. The exchange carries only the pruned, filtered rows:
+    * `PushDownPredicates` and `ColumnPruning` both traverse `Repartition`
+    * (plans/r13/scanfanout_pushdown_{fanned,not_fanned}.txt). Its
+    * explicit partition count pins it against AQE coalescing.
+    */
+  def readTable(spark: SparkSession, path: String,
+                derive: DataFrame => DataFrame = identity): DataFrame = {
+    val listed = Try(leafFiles(spark, path, partitioned = true)).toOption.flatten
+    val df = derive(readParquet(spark, path, listed))
+    listed.flatMap { case (files, _) => fanOutWidth(spark, files) }.fold(df)(df.repartition(_))
+  }
+
+  /** Data files below this many bytes in total never fan out. The query
+    * families over sub-MB tables are many-action chains (the ANN
+    * codebooks run ~25 driver-side training actions over a 2k-row
+    * frame), and fanning every action out costs more in per-task
+    * overhead than it returns: fanning the 0.78 MB embeddings table to
+    * 32 partitions took ann_ivfpq_topk from 0.9 to 114 executor-cpu-
+    * seconds (2.8 → 6.2 s wall, 32-core host).
+    */
+  private val FloorBytes: Long = 1L << 20
+
+  /** Row-group counts per file version (path, length, mtime), so a
+    * repeated read of one table reads each footer once.
+    */
+  private val rowGroups =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Integer]
+
+  /** The session shuffle width when a scan of `files` yields fewer
+    * row-bearing tasks than that width, else None. The natural task count
+    * sums, over the data files, min(row groups, ⌈bytes /
+    * `spark.sql.files.maxPartitionBytes`⌉); it stops, and stops reading
+    * footers, once it reaches the width. Only files over one split read a
+    * footer. A sizing step that fails plans no fan-out.
+    */
+  private def fanOutWidth(spark: SparkSession, files: Seq[FileStatus]): Option[Int] =
+    try {
+      val parts = graft.operators.QueryHelpers.shufflePartitions(spark)
+      val split = SourceBridge.maxPartitionBytes(spark)
+      val data = files.filterNot(f => Summaries.contains(f.getPath.getName))
+      def tasks(f: FileStatus): Long = {
+        val bySize = (f.getLen + split - 1) / split
+        if (bySize <= 1L) 1L
+        else {
+          val key = (f.getPath.toString, f.getLen, f.getModificationTime)
+          val rgs = rowGroups.computeIfAbsent(key, _ =>
+            Integer.valueOf(SourceBridge.parquetFooter(spark, f)._2))
+          math.min(bySize, rgs.toLong.max(1L))
+        }
+      }
+      if (data.map(_.getLen).sum < FloorBytes) None
+      else if (data.iterator.map(tasks).scanLeft(0L)(_ + _).exists(_ >= parts)) None
+      else Some(parts)
+    } catch { case NonFatal(_) => None }
 
   /** S3: tolerant CSV scan (reference: scripts/export_bi_datasets.py:15-16). */
   def readCsvOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =

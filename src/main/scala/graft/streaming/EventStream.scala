@@ -252,7 +252,7 @@ object EventStream {
     */
   def readEventStream(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batch = spark.read.parquet(path)
+    val batch = graft.sources.Io.readTable(spark, path)
     val f = new java.io.File(path)
     val reader = spark.readStream.schema(batch.schema)
     val src =

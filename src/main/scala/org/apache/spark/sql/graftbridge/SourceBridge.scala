@@ -42,16 +42,24 @@ object SourceBridge {
     CSVUtils.makeSafeHeader(cells, conf.caseSensitiveAnalysis, parsed)
   }
 
-  /** The data schema parquet inference takes from `file`'s footer: the
-    * Spark row-metadata key when present, else the parquet schema
-    * converted under the session's settings.
+  /** One read of `file`'s footer: the data schema parquet inference takes
+    * from it (the Spark row-metadata key when present, else the parquet
+    * schema converted under the session's settings) and its row-group
+    * count.
     */
-  def parquetSchema(spark: SparkSession, file: FileStatus): StructType = {
+  def parquetFooter(spark: SparkSession, file: FileStatus): (StructType, Int) = {
     val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromStatus(file, hadoopConf(spark)), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      HadoopInputFile.fromStatus(file, hadoopConf(spark)), ParquetMetadataConverter.NO_FILTER)
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
       new ParquetToSparkSchemaConverter(session(spark).sessionState.conf))
+    (schema, footer.getBlocks.size)
   }
+
+  /** The session's `spark.sql.files.maxPartitionBytes`: the most bytes one
+    * scan split reads.
+    */
+  def maxPartitionBytes(spark: SparkSession): Long =
+    session(spark).sessionState.conf.filesMaxPartitionBytes
 
   /** True when the session reads parquet with schema merging on. */
   def parquetMergesSchemas(spark: SparkSession): Boolean =

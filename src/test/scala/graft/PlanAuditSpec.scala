@@ -26,7 +26,8 @@ import org.apache.spark.sql.execution.window.WindowExec
   *   4. no unexpected driver-side jobs at plan-construction time — a
   *      .collect() while BUILDING the DataFrame means driver-sized state;
   *      the documented bounded collects are listed in
-  *      `ConstructionJobsAllowlist`.
+  *      `ConstructionJobsAllowlist`; and no parquet schema-inference job
+  *      ("parquet at ...") at all, for any query.
   */
 class PlanAuditSpec extends SparkSpec {
 
@@ -263,9 +264,11 @@ class PlanAuditSpec extends SparkSpec {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val sc = spark.sparkContext
     // record each job's callsite via its result-stage name (Spark 4 job
-    // properties no longer carry callSite.short); parquet footer/listing
-    // reads ("parquet at ...") and internal exchange stages (java
-    // callsites / anonfun) are not driver-collects, filtered out below
+    // properties no longer carry callSite.short); internal exchange
+    // stages (java callsites / anonfun) are not driver-collects and are
+    // filtered out below, and a "parquet at ..." job is a schema-inference
+    // read, which table reads never need (Io resolves the schema from a
+    // footer on the driver)
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     sc.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -275,7 +278,7 @@ class PlanAuditSpec extends SparkSpec {
     // localCheckpoint (distributed lineage cut) and zipWithIndex
     // (distributed partition-size pass) jobs are cluster-side work and
     // legitimate at construction (CC pointer-doubling rounds,
-    // surrogate-key offsets); parquet footer reads likewise excluded
+    // surrogate-key offsets)
     val DriverActions =
       Seq("collect at", "count at", "take at", "head at", "first at",
         "reduce at", "fold at", "aggregate at", "toLocalIterator at")
@@ -291,6 +294,7 @@ class PlanAuditSpec extends SparkSpec {
       val plan = df.queryExecution.sparkPlan // pre-AQE physical plan
       ListenerBusBridge.drain(sc)
       val constructionJobs = collectJobs()
+      val inferenceJobs = sites.stream.filter(_.startsWith("parquet at")).count
 
       val cartesians = plan.collectWithSubqueries {
         case c: CartesianProductExec => c
@@ -311,6 +315,10 @@ class PlanAuditSpec extends SparkSpec {
       if (unboundedHints.nonEmpty)
         failures += s"$name: broadcast hint over an unbounded fact-scaled " +
           s"side (${factLeafPaths(unboundedHints.head.child).mkString(",")})"
+
+      if (inferenceJobs > 0)
+        failures += s"$name: $inferenceJobs parquet schema-inference job(s) " +
+          "at plan-construction time"
 
       if (constructionJobs.nonEmpty && !ConstructionJobsAllowlist.contains(name))
         failures += s"$name: ${constructionJobs.size} Spark job(s) at plan-" +

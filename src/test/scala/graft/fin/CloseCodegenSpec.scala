@@ -84,7 +84,7 @@ class CloseCodegenSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         val fs = new HPath(d.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
         val schemas = Files.walk(d).iterator().asScala
           .filter(p => p.getFileName.toString.startsWith("part-"))
-          .map(p => SourceBridge.parquetSchema(spark, fs.getFileStatus(new HPath(p.toString))).json)
+          .map(p => SourceBridge.parquetFooter(spark, fs.getFileStatus(new HPath(p.toString)))._1.json)
           .toSeq.distinct.sorted
         val rows = spark.read.parquet(d.toString).collect().map(_.toString).sorted
         Seq(root.relativize(d).toString -> (schemas ++ rows).mkString("\n"))

@@ -1,13 +1,18 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The shared co-purchase edge builder on a hand-made `lineitem`: the
-  * pairs it yields in each mode, and the hash layout it declares.
+  * pairs it yields in each mode, and the hash layout it declares. And the
+  * table readers over the sf0.001 testdata: no Spark job, inference's
+  * schema.
   */
 class QueryHelpersSpec extends SparkSpec {
 
@@ -75,5 +80,40 @@ class QueryHelpersSpec extends SparkSpec {
     // (10, 20) is co-ordered twice (orders 1 and 2); every other pair once
     assert(can.sorted === (canonicalPairs :+ ((10L, 20L))).sorted)
     assert(sym.sorted === can.flatMap { case (a, b) => Seq((a, b), (b, a)) }.sorted)
+  }
+
+  /** Runs `read`, failing if it started a Spark job. */
+  private def withoutJobs[A](what: String)(read: => A): A = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = read
+      ListenerBusBridge.drain(sc)
+      assert(jobs.get === 0, s"$what started ${jobs.get} Spark job(s)")
+      a
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("table reads start no Spark job and take inference's schema") {
+    val sf = "/root/testdata/sf0.001"
+    val tables = new java.io.File(sf).list().toSeq.map(_.stripSuffix(".parquet")).sorted
+    assert(tables.contains("events") && tables.size === 10, s"tables under $sf: $tables")
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    try Seq("false", "true").foreach { on =>
+      spark.conf.set(nanos, on)
+      tables.foreach { name =>
+        val schema = withoutJobs(s"t($name), nanosAsLong=$on")(QueryHelpers.t(spark, sf, name).schema)
+        assert(schema === spark.read.parquet(s"$sf/$name.parquet").schema, name)
+      }
+      val ev = withoutJobs(s"events, nanosAsLong=$on")(QueryHelpers.events(spark, sf).schema)
+      assert(StructType(ev.filterNot(_.name == "ts_us")) ===
+        spark.read.parquet(s"$sf/events.parquet").schema)
+      assert(ev("ts_us").dataType === LongType)
+    } finally spark.conf.unset(nanos)
   }
 }

@@ -4,13 +4,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** The splittability-aware fan-out gate (r12 verdict #1): the exchange
-  * must fire exactly when the parquet input CANNOT feed the session
-  * width on its own — never for sub-floor inputs, never for inputs the
-  * scan already splits natively (multi-row-group files, many-file
-  * datasets), and sizing must see through partitioned directory
-  * layouts (r12 ADVICE: the old java.nio walk summed 0 bytes for
-  * nested data files and silently never fanned).
+/** The splittability-aware fan-out gate of `Io.readTable` (r12 verdict
+  * #1): the exchange must fire exactly when the parquet input CANNOT feed
+  * the session width on its own — never for sub-floor inputs, never for
+  * inputs the scan already splits natively (multi-row-group files,
+  * many-file datasets), and sizing must see through partitioned directory
+  * layouts (r12 ADVICE: the old java.nio walk summed 0 bytes for nested
+  * data files and silently never fanned).
   */
 class ScanFanoutSpec extends SparkSpec {
 
@@ -31,7 +31,7 @@ class ScanFanoutSpec extends SparkSpec {
     val f = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
     assert(f.length == 1 && f.head.length > (1L << 20),
       s"fixture must be one >1MB file, got ${f.map(_.length).toSeq}")
-    val fanned = ScanFanout.parquet(spark, dir)
+    val fanned = Io.readTable(spark, dir)
     assert(fanned.rdd.getNumPartitions == parts,
       "unsplittable above-floor input must repartition to session width")
   }
@@ -39,7 +39,7 @@ class ScanFanoutSpec extends SparkSpec {
   test("sub-floor file never fans out") {
     val dir = Files.createTempDirectory("sfan").toString
     bulkDf(500).coalesce(1).write.mode("overwrite").parquet(dir)
-    val df = ScanFanout.parquet(spark, dir)
+    val df = Io.readTable(spark, dir)
     assert(df.rdd.getNumPartitions < parts,
       "sub-MB scans must keep their natural (single-task) layout")
   }
@@ -68,7 +68,7 @@ class ScanFanoutSpec extends SparkSpec {
     val old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
-      val df = ScanFanout.parquet(spark, dir)
+      val df = Io.readTable(spark, dir)
       assert(!df.queryExecution.analyzed.toString.contains("Repartition"),
         "natively-splittable multi-row-group input must not fan out")
       assert(df.rdd.getNumPartitions >= parts,
@@ -77,7 +77,7 @@ class ScanFanoutSpec extends SparkSpec {
       // matter its row groups (a row group belongs to the split holding
       // its midpoint), so the fan-out must fire again
       spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-      val df2 = ScanFanout.parquet(spark, dir)
+      val df2 = Io.readTable(spark, dir)
       assert(df2.rdd.getNumPartitions == parts,
         "a small many-row-group file still cannot feed the width: fan out")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", old)
@@ -91,7 +91,7 @@ class ScanFanoutSpec extends SparkSpec {
     val n = new java.io.File(dir).listFiles
       .count(_.getName.endsWith(".parquet"))
     assert(n >= parts, s"fixture needs >= $parts data files, got $n")
-    val df = ScanFanout.parquet(spark, dir)
+    val df = Io.readTable(spark, dir)
     assert(df.rdd.getNumPartitions != parts ||
       df.queryExecution.executedPlan.toString.indexOf("RoundRobinPartitioning") < 0,
       "natively-parallel input must not pay a round-robin exchange")
@@ -104,8 +104,36 @@ class ScanFanoutSpec extends SparkSpec {
     // data lives in k=0/ and k=1/ subdirectories; the r12 non-recursive
     // walk summed ~0 bytes here and never fanned. Two ~1MB files =
     // 2 natural tasks < 4 session slots -> fan out.
-    val df = ScanFanout.parquet(spark, dir)
+    val df = Io.readTable(spark, dir)
     assert(df.rdd.getNumPartitions == parts,
       "nested data files must be sized (recursively), not read as 0 bytes")
+  }
+
+  test("sizing counts only the files the scan reads as data") {
+    val dir = Files.createTempDirectory("sfan").toString
+    bulkDf(500).coalesce(1).write.mode("overwrite").parquet(dir)
+    // a >1MB summary file and a >1MB hidden file beside a sub-floor data
+    // file: the scan reads no rows from either, so neither may lift the
+    // input over the floor
+    val bulk = Files.createTempDirectory("sfan").toString
+    bulkDf(14000).coalesce(1).write.mode("overwrite").parquet(bulk)
+    val big = new java.io.File(bulk).listFiles.filter(_.getName.endsWith(".parquet")).head.toPath
+    Files.copy(big, java.nio.file.Paths.get(dir, "_common_metadata"))
+    Files.copy(big, java.nio.file.Paths.get(dir, ".hidden.parquet"))
+    val df = Io.readTable(spark, dir)
+    assert(!df.queryExecution.analyzed.toString.contains("Repartition"),
+      "summary and hidden files must not be sized as scan input")
+    assert(df.count() == 500)
+  }
+
+  test("a path the listing leaves to Spark plans no fan-out") {
+    val dir = Files.createTempDirectory("sfan").toString
+    bulkDf(14000).coalesce(1).write.mode("overwrite").parquet(dir)
+    assert(Io.readTable(spark, dir).rdd.getNumPartitions == parts)
+    // a glob names no file or directory to walk; Spark expands it
+    val df = Io.readTable(spark, s"$dir/*.parquet")
+    assert(!df.queryExecution.analyzed.toString.contains("Repartition"),
+      "an input the listing cannot walk must not be sized")
+    assert(df.count() == 14000)
   }
 }
