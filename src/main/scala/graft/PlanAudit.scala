@@ -4,6 +4,12 @@ package graft
   * physical plans can be audited (pushed filters, ReadSchema pruning,
   * broadcast vs sort-merge joins, WholeStageCodegen spans).
   *
+  * Each query's header says which path its plan takes ([[SmallInput]]):
+  * `(interpreted)` over a dataset smaller than
+  * [[SmallInput.InterpretBelowBytes]], `(compiled)` otherwise. Codegen
+  * spans show only on the compiled path, so audit them above the bound
+  * (sf0.1).
+  *
   * Usage: runMain graft.PlanAudit <sfDir> [queryName ...]
   * (no names → all registered queries).
   */
@@ -15,9 +21,16 @@ object PlanAudit {
     // that actually run (vector_dot rewrite included)
     val spark = LocalRun.session(logLevel = "ERROR")
     names.foreach { n =>
-      println(s"\n========== $n ==========")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      try {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val path = if (df.sparkSession.conf.get("spark.sql.codegen.wholeStage") == "false")
+          "interpreted" else "compiled"
+        println(s"\n========== $n ($path) ==========")
+        df.explain("formatted")
+      } catch { case e: Throwable =>
+        println(s"\n========== $n ==========")
+        println(s"EXPLAIN FAILED: ${e.getMessage}")
+      }
     }
     spark.stop()
   }

@@ -10,10 +10,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("kpi_pivot")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. A query over a
+    * dataset directory smaller than [[SmallInput.InterpretBelowBytes]] is
+    * built on an interpreted clone of the caller's session, and its
+    * DataFrame keeps that session, so its action runs interpreted too
+    * ([[SmallInput]]); larger datasets build on the caller's session.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.queries ++ LlmQueries.queries ++ EventQueries.queries ++
-      CurationQueries.queries ++ AnalyticsQueries.queries
+    (CoreQueries.queries ++ LlmQueries.queries ++ EventQueries.queries ++
+      CurationQueries.queries ++ AnalyticsQueries.queries).map { case (name, build) =>
+      name -> ((s: SparkSession, dir: String) => SmallInput.run(s, Seq(dir))(build(_, dir)))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables — EVERY registered query has one, including

@@ -16,8 +16,11 @@ import java.nio.file.{Files, Paths}
   *   3. The loop runs with bounded concurrency (default 6 threads over
   *      the one shared session — queries are independent reads and the
   *      session is thread-safe; the only session conf any query touches
-  *      is the idempotent nanosAsLong flag). The r11 serial wall was
-  *      ~31 min at 8 cpus ≈ 5 s/query of mostly fixed per-action cost;
+  *      is the idempotent nanosAsLong flag, and below
+  *      `SmallInput.InterpretBelowBytes` each query builds and runs on a
+  *      clone of its own, so even that lands on the clone). The r11
+  *      serial wall was ~31 min at 8 cpus ≈ 5 s/query of mostly fixed
+  *      per-action cost;
   *      overlapping actions converts that fixed cost into throughput
   *      (measured 3-9 min at par=6 / 8g, all 370 DuckDB-green).
   *      No per-query cache clearing here, deliberately: unpersisting

@@ -3,6 +3,7 @@ package graft.fin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SessionBridge
+import graft.SmallInput
 import graft.sources.Io
 
 /** Flat BI export + data dictionary (SURVEY.md §3.3; reference:
@@ -23,7 +24,7 @@ object BiExport {
       outDirBase: String,
       monthArg: Option[String] = None): BiResult = {
 
-    SmallClose.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
+    SmallInput.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
       val cur = CuratedMonth.read(spark, curatedDir, monthArg)
       val month = cur.month
       val outDir = s"$outDirBase/$month"

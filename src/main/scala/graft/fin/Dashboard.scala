@@ -3,6 +3,7 @@ package graft.fin
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SessionBridge
+import graft.SmallInput
 import graft.sources.Io
 
 /** Dashboard data aggregates + static HTML report (SURVEY.md §3.3;
@@ -84,7 +85,7 @@ object Dashboard {
       outHtml: String,
       monthArg: Option[String] = None): DashResult = {
 
-    SmallClose.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
+    SmallInput.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
       val cur = CuratedMonth.read(spark, curatedDir, monthArg)
       val month = cur.month
       val kpi = Transform.addMarginCols(cur.kpi)

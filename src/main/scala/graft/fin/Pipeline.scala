@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SessionBridge
 import scala.jdk.CollectionConverters._
+import graft.SmallInput
 import graft.sources.Io
 
 /** The monthly-close pipeline — `runMonth`
@@ -26,10 +27,11 @@ import graft.sources.Io
   * missing-rate sample. No read runs a schema-inference job (see `Io`).
   *
   * A month whose input files are small closes interpreted, on a clone of
-  * the caller's session without code generation ([[SmallClose]]): at a
-  * few hundred rows, compiling the close's generated classes costs more
-  * than running them. Larger inputs run the same compiled plans as
-  * before. Either way the jobs, exchanges and outputs are the same.
+  * the caller's session without code generation ([[SmallInput]], the
+  * rule the registered queries share): at a few hundred rows, compiling
+  * the close's generated classes costs more than running them. Larger
+  * inputs run the same compiled plans as before. Either way the jobs,
+  * exchanges and outputs are the same.
   */
 object Pipeline {
 
@@ -58,12 +60,12 @@ object Pipeline {
     val mode = Option(failOn).getOrElse("ERROR").toUpperCase.trim
     require(FailOnModes.contains(mode), "fail_on must be one of: ERROR, WARN, NEVER")
 
-    // a small month closes interpreted (see SmallClose); `spark` below is
+    // a small month closes interpreted (see SmallInput); `spark` below is
     // the session the close runs on
     val factPath = s"$curatedDir/fact_transactions.parquet"
     val inputs = Quality.Datasets.map(n => s"$rawDir/$n.csv") ++
       Seq(s"$referenceDir/chart_of_accounts.csv", factPath)
-    SmallClose.run(spark, inputs) { spark =>
+    SmallInput.run(spark, inputs) { spark =>
       // the chart of accounts is dimension-sized and feeds the two COA
       // anti-joins, its parquet sink and the KPI join: collect it once and
       // serve every consumer from the driver

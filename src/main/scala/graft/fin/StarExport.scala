@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SessionBridge
+import graft.SmallInput
 import graft.sources.Io
 
 /** Star-schema export (SURVEY.md §3.2; reference:
@@ -190,7 +191,7 @@ object StarExport {
       outDirBase: String,
       monthArg: Option[String] = None): StarResult = {
 
-    SmallClose.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
+    SmallInput.run(spark, CuratedMonth.files(curatedDir, monthArg)) { spark =>
       val CuratedMonth(_, month, dateCol, factM, dimAccountsSrc, kpi) =
         CuratedMonth.read(spark, curatedDir, monthArg)
       val outDir = s"$outDirBase/$month"

@@ -11,7 +11,10 @@ import org.apache.spark.util.ThreadUtils
 
 /** Sessions that run queries without generating code, for inputs so small
   * that compiling a query's classes costs more than running it, and
-  * independent actions of one caller submitted together.
+  * independent actions of one caller submitted together. `graft.SmallInput`
+  * decides which inputs are small, for the close's entry points and the
+  * registered queries alike, and runs them through [[interpreted]] and
+  * [[withActive]].
   */
 object SessionBridge {
 
@@ -39,9 +42,17 @@ object SessionBridge {
 
   /** `body` with `spark` as the thread's active session, so code that reads
     * the active conf on the driver (encoders of `createDataFrame` and
-    * `collect`) reads `spark`'s.
+    * `collect`) reads `spark`'s, and with `spark`'s SQL conf in the
+    * thread's local properties, so the tasks of a job the body starts
+    * outside a SQL execution read it too. Such a job runs a plan's RDD
+    * directly: a checkpoint built on `qe.toRdd` runs its upstream shuffle
+    * stages that way under AQE. Without the conf, the tasks of those jobs
+    * on an [[interpreted]] clone compiled the projections and predicates
+    * the clone leaves uncompiled (an interpreted `queries_multistage` pass
+    * compiled 117 classes without the conf, 56 with it).
     */
-  def withActive[T](spark: SparkSession)(body: => T): T = spark.withActive(body)
+  def withActive[T](spark: SparkSession)(body: => T): T =
+    spark.withActive(SQLExecution.withSQLConfPropagated(spark.asInstanceOf[CSparkSession])(body))
 
   /** Threads [[concurrently]] runs bodies on; the widest caller submits six. */
   private val MaxThreads = 8

@@ -15,9 +15,9 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.graftbridge.SourceBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.SparkSpec
+import graft.{SmallInput, SparkSpec}
 
-/** A small month closes without compiling generated code ([[SmallClose]]):
+/** A small month closes without compiling generated code ([[SmallInput]]):
   * what it compiles, that it writes what the compiled close writes, and
   * that the caller's session is left as it was.
   */
@@ -96,7 +96,7 @@ class CloseCodegenSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def bothWays(in: String, failOn: String): Unit = {
     val (interpreted, compiled) = (tmp("graft-close-interpreted"), tmp("graft-close-compiled"))
     val interpretedPlans = close("2025-12", s"$in/raw", s"$in/reference", interpreted, failOn)
-    val compiledPlans = SmallClose.compiled(
+    val compiledPlans = SmallInput.compiled(
       close("2025-12", s"$in/raw", s"$in/reference", compiled, failOn))
 
     val (a, b) = (Paths.get(interpreted), Paths.get(compiled))
@@ -150,7 +150,7 @@ class CloseCodegenSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("the gate interprets below the bound and compiles from it up") {
-    import SmallClose.{InterpretBelowBytes, bytesOf, interprets}
+    import SmallInput.{InterpretBelowBytes, bytesOf, interprets}
     assert(interprets(0L))
     assert(interprets(InterpretBelowBytes - 1))
     assert(!interprets(InterpretBelowBytes))
